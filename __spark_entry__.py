@@ -104,9 +104,9 @@ _CONV_KEY_SQL = (
 )
 
 
-def _transcripts(spark: SparkSession, sf_dir: str, spread: "str | bool" = "rows") -> DataFrame:
+def _transcripts(spark: SparkSession, sf_dir: str, spread: str = "rows") -> DataFrame:
     """Input fan-out policy for the single-row-group events file, decided
-    PER QUERY by A/B measurement (all three modes are partitioning-only —
+    PER QUERY by A/B measurement (both modes are partitioning-only —
     results are identical by construction):
 
     - ``"rows"`` (default): hash-repartition on event_id right after the
@@ -121,15 +121,13 @@ def _transcripts(spark: SparkSession, sf_dir: str, spread: "str | bool" = "rows"
       this single pinned-width exchange and no coalescible
       ENSURE_REQUIREMENTS exchange is planned at all (inspect_limits A/B:
       2.5 s vs 3.1 s unspread vs 4.8 s with the extra rows exchange).
-      For window-bearing queries with light post-window work.
-    - ``False``: no fan-out (never measured best at sf1.0, kept for
-      completeness/experiments)."""
+      For window-bearing queries with light post-window work."""
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     if spread == "conv":
         df = df.repartition(
             spark.sparkContext.defaultParallelism, F.expr(_CONV_KEY_SQL)
         )
-    elif spread:
+    else:
         df = _spread(spark, df, "event_id")
     df.createOrReplaceTempView("events")
     return spark.sql(TRANSCRIPTS_FROM_EVENTS_SQL)
@@ -672,9 +670,9 @@ def q_dlp_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dlp_dataflow_deidentification_spark.streaming import stateful
 
     tdf = _transcripts(spark, sf_dir, spread="conv")
-    # n_buckets: super-key batching — pack_greedy still runs per key, but
-    # one pandas dispatch per bucket instead of per conversation; output
-    # identical to per-key mode (test_bucketed_batched_requests_equals_per_key)
+    # n_buckets: pack_greedy still runs per key, but one pandas dispatch per
+    # bucket instead of per conversation; output independent of n_buckets
+    # (test_bucketed_batched_requests_equals_per_key)
     out = stateful.batched_requests(
         tdf,
         key_col="conv_id",
@@ -728,9 +726,9 @@ def q_conv_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(HERE, "configs/deid_transcripts.json"), crypto_key=KEY
     )
     deid = dds.deidentify(tdf, template)
-    # n_buckets: super-key batching — one vectorized pandas fold per bucket
-    # instead of one dispatch per conversation; output identical to per-key
-    # mode (tests/test_stateful.py::test_bucketed_assembler_equals_per_key_*)
+    # n_buckets: one vectorized pandas fold per bucket instead of one per
+    # conversation; output independent of n_buckets
+    # (tests/test_stateful.py::test_bucketed_assembler_equals_per_key_*)
     out = stateful.conversation_assembler(deid, gap_ms=1_800_000, n_buckets=64)
     return out.select(
         "conv_id",
@@ -1436,10 +1434,10 @@ def oracle_sql() -> dict[str, str]:
         "conv_sessions": (
             f"{t},"
             f" d AS (SELECT conv_id, turn_idx, ts, {deid_text} AS text FROM transcripts),"
-            f" e AS (SELECT conv_id, text, ts, epoch_ms(ts) AS ms FROM d),"
-            f" l AS (SELECT *, lag(ms) OVER (PARTITION BY conv_id ORDER BY ts) AS pms FROM e),"
+            f" e AS (SELECT conv_id, turn_idx, text, ts, epoch_ms(ts) AS ms FROM d),"
+            f" l AS (SELECT *, lag(ms) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx) AS pms FROM e),"
             f" s AS (SELECT *, CASE WHEN pms IS NULL OR ms - pms < 1800000 THEN 0 ELSE 1 END AS new_s FROM l),"
-            f" r AS (SELECT *, SUM(new_s) OVER (PARTITION BY conv_id ORDER BY ts"
+            f" r AS (SELECT *, SUM(new_s) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx"
             f"   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM s)"
             f" SELECT conv_id, count(*) AS n_turns,"
             f" CAST(SUM(CASE WHEN regexp_matches(text, '\\[[A-Z_]+\\]') THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_turns,"

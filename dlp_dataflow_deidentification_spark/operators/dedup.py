@@ -135,27 +135,6 @@ def _perm(i: int):
     return 2 * i + 1, 7919 * (i + 1)  # odd multiplier, fixed offset
 
 
-def minhash_signature(shingle_col, num_hashes: int = 64):
-    """num_hashes-wide MinHash signature via affine permutations of xxhash64:
-    h_i(s) = (a_i * x + b_i) mod p, as a single Column expression.
-
-    NOTE: only for small num_hashes / ad-hoc use — each of the num_hashes
-    array_min terms re-evaluates the shingle+xxhash subtree (Catalyst does
-    not CSE across higher-order functions). The scale path is
-    ``minhash_signatures_df`` (explode + partial-aggregate mins: every
-    shingle is hashed exactly once)."""
-    hashes = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_PRIME)))
-    sig = []
-    for i in range(num_hashes):
-        a, b = _perm(i)
-        sig.append(
-            F.array_min(
-                F.transform(hashes, lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(_PRIME)))
-            )
-        )
-    return F.array(*sig)
-
-
 def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     """sh may carry hashed (long) or raw (string) shingles — either way each
     shingle contributes one base hash, permuted num_hashes times."""

@@ -7,6 +7,8 @@ the full corpus). Dot products via JVM higher-order functions
 """
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -446,6 +448,16 @@ def kmeans_centroids(
             cents = [by_cell.get(i + 1, cents[i]) for i in range(k)]
     finally:
         c.unpersist()
+    # callers render centroids as SQL double literals (_matrix_lit), where a
+    # NaN/inf/None component would fail as an obscure parse error
+    for cell, cent in enumerate(cents, start=1):
+        for d, x in enumerate(cent):
+            if x is None or not math.isfinite(x):
+                raise ValueError(
+                    f"kmeans_centroids: cell {cell} has non-finite component "
+                    f"{x!r} at dimension {d}; check the corpus for NaN/inf/null "
+                    "embedding values"
+                )
     return cents
 
 

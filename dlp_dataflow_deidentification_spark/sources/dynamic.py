@@ -371,11 +371,20 @@ class DynamicSchemaFileStream:
             # row count); the Arrow path lands a JVM LocalRelation and the
             # sink write below stays JVM-only (~0.2 s). Values and schema
             # verified identical; falls back row-wise (correct, slower) if
-            # Arrow conversion is disabled in the session.
+            # Arrow conversion is disabled in the session. Strings are made
+            # UTF-8-encodable first (lone surrogates → backslash escapes):
+            # Arrow rejects them, and with the row-wise fallback disabled a
+            # failed conversion would wedge the batch in the replay loop.
             import pandas as _pd
 
+            def _utf8(s: str) -> str:
+                return s.encode("utf-8", "backslashreplace").decode("utf-8")
+
             ddf = self.spark.createDataFrame(
-                _pd.DataFrame(dead_rows, columns=["path", "reason"]),
+                _pd.DataFrame(
+                    [(_utf8(p), _utf8(r)) for p, r in dead_rows],
+                    columns=["path", "reason"],
+                ),
                 "path string, reason string",
             )
             IdempotentBatchSink(

@@ -100,10 +100,10 @@ def deid_sessions_stream(
     Batch equivalent: ``conversation_assembler(deidentify(df, template))``
     (driver query ``conv_sessions``); stream≡batch equality is pinned by
     ``tests/test_stateful.py::test_deid_sessions_single_query_stream``.
-    ``n_buckets``: super-key batching — one state row / one vectorized
-    pandas fold per bucket instead of per conversation (see
-    ``conversation_assembler``); same output, ~|keys|/n_buckets fewer
-    per-micro-batch pandas dispatches.
+    ``n_buckets``: state groups — one state row / one vectorized pandas fold
+    per ``pmod(xxhash64(conv_id), n_buckets)`` bucket (see
+    ``conversation_assembler``); None = one group per conversation. Same
+    output, ~|keys|/n_buckets fewer per-micro-batch pandas dispatches.
     """
     from .stateful import conversation_assembler
 

@@ -8,7 +8,8 @@ DLPTextToBigQueryStreaming.java:604-668; unit-test contract
 BatchRequestForDLPTest.java:59-121 asserts the multiset of emitted batch
 sizes per key). In Spark the operator is ``applyInPandasWithState``:
 
-* state = (buffered byte size, buffered row count, next batch sequence)
+* per-key state = (buffered byte size, buffered row count, next batch
+  sequence, max event time)
 * new rows append to the buffer; every time the byte budget fills, a batch
   row (key, batch_seq, n_rows, n_bytes) is emitted — greedy packing
 * an event-time timeout (watermark-driven — the Beam timer analogue)
@@ -18,14 +19,25 @@ sizes per key). In Spark the operator is ``applyInPandasWithState``:
 payload: per-conv_id turn accumulation emitted when the conversation goes
 idle past the gap (the stateful upgrade of session_window when per-session
 custom logic is needed).
+
+Both operators have ONE state machine. Rows are grouped by a state group —
+``pmod(xxhash64(key), n_buckets)``, or the key itself when ``n_buckets`` is
+None — and each group's state row is a JSON map ``{key: entry}`` of the
+keys it holds, folded by one vectorized pandas pass per group. This is the
+reference's ShardRows→BatchRequestForDLP shape (beam/ShardRows.java:66-81:
+shard precisely so per-key dispatch amortizes); ``n_buckets=None`` keeps one
+state row per key. Batch input runs the same fold through a stateless
+``applyInPandas`` (``applyInPandasWithState`` is streaming-only) and
+flushes every open entry at the end.
 """
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
+import json
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -45,14 +57,90 @@ BATCH_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-_BATCH_STATE_SCHEMA = StructType(
+CONV_OUTPUT_SCHEMA = StructType(
     [
-        StructField("buf_bytes", LongType()),
-        StructField("buf_rows", IntegerType()),
-        StructField("next_seq", IntegerType()),
-        StructField("max_event_ms", LongType()),
+        StructField("conv_id", StringType()),
+        StructField("n_turns", IntegerType()),
+        StructField("n_pii_turns", IntegerType()),
+        StructField("first_ms", LongType()),
+        StructField("last_ms", LongType()),
     ]
 )
+
+# ONE state row per state group: the JSON map of its keys' open entries.
+# Every entry is a 4-list whose [3] is the key's last event time (ms), the
+# base of its flush deadline.
+_STATE_SCHEMA = StructType([StructField("packed", StringType())])
+
+_PII_RE = r"\[[A-Z_]+\]"
+_SESS_COLS = ["conv_id", "n_turns", "n_pii_turns", "first_ms", "last_ms"]
+_BATCH_COLS = ["key", "batch_seq", "n_rows", "n_bytes"]
+
+# The folds run in pandas, where groupby drops null keys and the packed-state
+# JSON map cannot hold a null key — but Spark's groupBy KEEPS a null-key
+# group. Null keys are therefore encoded as this reserved sentinel inside
+# the fold/state and decoded back to null at every emit point. Control
+# chars cannot appear in any realistically sourced key (file names, table
+# keys, conversation ids); NUL itself is avoided — numpy's fixed-width
+# unicode storage strips trailing NUL bytes, so a bare "\\x00" silently
+# becomes "" through pandas fillna/groupby.
+_NULL_KEY = "\x01__null_key__\x01"
+
+
+def _key_out(key):
+    return None if key == _NULL_KEY else key
+
+
+def _decode_null_key(df: pd.DataFrame, col: str) -> pd.DataFrame:
+    mask = df[col] == _NULL_KEY
+    if mask.any():
+        df = df.copy()
+        df.loc[mask, col] = None
+    return df
+
+
+def _by_group(df: DataFrame, key_col: str, n_buckets: "int | None") -> GroupedData:
+    """Group rows by their state group: the key itself when ``n_buckets`` is
+    None, else ``pmod(xxhash64(key), n_buckets)``."""
+    if n_buckets is None:
+        return df.groupBy(key_col)
+    return df.withColumn(
+        "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    ).groupBy("__bucket")
+
+
+def _load(state: GroupState) -> dict:
+    return json.loads(state.get[0]) if state.exists else {}
+
+
+def _save(state: GroupState, carried: dict, gap_ms: int) -> None:
+    """Store the group's open entries and arm its event-time timeout at the
+    EARLIEST entry deadline (``entry[3] + gap_ms``). The Beam analogue is an
+    event-time timer at the window max. Clamped to just past the CURRENT
+    watermark: during multi-batch catch-up the watermark can already be
+    beyond an old key's event times, and Spark rejects a timeout earlier
+    than the watermark (INVALID_TIMEOUT_TIMESTAMP) — a past-due entry
+    should simply flush at the next tick."""
+    if not carried:
+        state.remove()
+        return
+    state.update((json.dumps(carried),))
+    state.setTimeoutTimestamp(
+        max(
+            min(v[3] for v in carried.values()) + gap_ms,
+            state.getCurrentWatermarkMs() + 1,
+        )
+    )
+
+
+def _expire(state: GroupState, gap_ms: int) -> dict:
+    """Timeout branch: remove and return exactly the entries whose deadline
+    the watermark passed, re-arming the group for the rest."""
+    carried = _load(state)
+    wm = state.getCurrentWatermarkMs()
+    due = {k: v for k, v in carried.items() if v[3] + gap_ms <= wm}
+    _save(state, {k: v for k, v in carried.items() if k not in due}, gap_ms)
+    return due
 
 
 def pack_greedy(
@@ -94,10 +182,9 @@ def pack_greedy(
 def _payload_sizes(
     pdf: pd.DataFrame, payload_col: str, order_col: "str | None"
 ) -> "np.ndarray":
-    """Per-row payload size in packing order — the ONE sizing rule shared by
-    the per-key and bucketed packers. fillna BEFORE astype(str): astype
-    would turn None into the literal 4-char string "None", charging null
-    payloads 4 bytes. Size = UTF-8 BYTES, not codepoints: the reference
+    """Per-row payload size in packing order. fillna BEFORE astype(str):
+    astype would turn None into the literal 4-char string "None", charging
+    null payloads 4 bytes. Size = UTF-8 BYTES, not codepoints: the reference
     budgets Table.Row.getSerializedSize()
     (beam/BatchRequestForDLP.java:62-66), which is proto-serialized UTF-8 —
     a codepoint count would under-charge non-ASCII payloads up to 4x and
@@ -129,155 +216,98 @@ def batched_requests(
     """Greedy byte-budget batching per key with event-time flush.
 
     Streaming input: ``applyInPandasWithState`` (state store + watermark
-    timeout flushes the remainder). Batch input: ``applyInPandasWithState``
-    is streaming-only in Spark, so the operator degrades to a stateless
-    ``applyInPandas`` over the same ``pack_greedy`` core — one invocation
-    per key, remainder flushed as the final batch; this is the
-    oracle-testable form. ``order_col``: pack rows in this deterministic
-    order instead of arrival/partition order (required for the batch oracle;
-    in streaming it orders only within each delivered chunk — arrival order
-    across micro-batches is the semantic, as in the reference's BagState).
+    timeout flushes the remainder). Batch input: the same fold through a
+    stateless ``applyInPandas``, each key's remainder flushed as its final
+    batch; this is the oracle-testable form. ``order_col``: pack a key's
+    rows in this deterministic order instead of arrival/partition order
+    (required for the batch oracle; in streaming it orders a key's rows
+    within each delivered micro-batch — arrival order across micro-batches
+    is the semantic, as in the reference's BagState).
     Output: key, batch_seq, n_rows, n_bytes.
 
-    ``n_buckets``: super-key mode — ONE state row (JSON map of per-key
-    buffers) and ONE pandas dispatch per ``pmod(xxhash64(key), n_buckets)``
-    bucket, ``pack_greedy`` still applied per key inside it (ordering
-    nuance: with ``order_col``, per-key mode sorts each delivered Arrow
-    chunk; bucketed mode sorts the key's rows across the WHOLE delivered
-    micro-batch — a strict superset, and identical whenever a key's rows
-    fit one chunk or arrive ordered). Same amortization as
-    ``conversation_assembler(n_buckets=...)`` — this IS the
-    reference's ShardRows→BatchRequestForDLP shape (shard precisely so
-    per-key dispatch amortizes, beam/ShardRows.java:66-81); at millions of
-    live keys per-key Arrow dispatch dominates the stateless work. Output
-    identical to per-key mode (pinned by tests).
+    ``n_buckets``: ONE state row (JSON map ``{key: [buf_bytes, buf_rows,
+    next_seq, max_event_ms]}``) and ONE pandas dispatch per
+    ``pmod(xxhash64(key), n_buckets)`` bucket; ``pack_greedy`` still runs
+    per key inside it. None = one state row per key. At millions of live
+    keys per-key Arrow dispatch dominates the stateless work, which
+    bucketing amortizes; the output does not depend on ``n_buckets``
+    (pinned by tests). A bucket's timeout fires at the EARLIEST key
+    deadline (``max_event_ms + flush_gap_ms``) and flushes exactly the due
+    keys' remainders.
     """
-    if n_buckets is not None:
-        return _bucketed_batched_requests(
-            df,
-            key_col,
-            payload_col,
-            ts_col,
-            max_batch_bytes,
-            flush_gap_ms,
-            watermark,
-            order_col,
-            n_buckets,
-        )
 
-    def _sizes(pdf: pd.DataFrame) -> "np.ndarray":
-        return _payload_sizes(pdf, payload_col, order_col)
+    def _fold(pdf: pd.DataFrame, carried: dict):
+        """Per-key pack_greedy over one group's delivered rows, seeded with
+        the carried buffers. Returns (emitted rows, new carried).
+        ``dropna=False`` + sentinel: pandas groupby would silently drop
+        null-key rows, and the carried JSON map needs a string key."""
+        out: list[tuple] = []
+        ms_all = (
+            (pdf[ts_col].astype("int64") // 1_000_000)
+            if ts_col in pdf.columns and len(pdf)
+            else None
+        )
+        for key, kdf in pdf.groupby(key_col, sort=False, dropna=False):
+            k_enc = _NULL_KEY if pd.isna(key) else key
+            buf_bytes, buf_rows, next_seq, max_ms = carried.get(k_enc, [0, 0, 0, 0])
+            if ms_all is not None:
+                max_ms = max(max_ms, int(ms_all.loc[kdf.index].max()))
+            emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
+                _payload_sizes(kdf, payload_col, order_col),
+                buf_bytes,
+                buf_rows,
+                next_seq,
+                max_batch_bytes,
+            )
+            out.extend((_key_out(k_enc), seq, n, b) for seq, n, b in emitted)
+            carried[k_enc] = [int(buf_bytes), int(buf_rows), int(next_seq), int(max_ms)]
+        return out, carried
+
+    def _remainders(carried: dict) -> list:
+        return [(_key_out(k), seq, br, bb) for k, (bb, br, seq, _) in carried.items() if br]
 
     wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
 
     if not wdf.isStreaming:
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            key = pdf[key_col].iloc[0]
-            emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
-                _sizes(pdf), 0, 0, 0, max_batch_bytes
-            )
-            out = [(key, seq, n, b) for seq, n, b in emitted]
-            if buf_rows:  # full flush: the remainder is the final batch
-                out.append((key, next_seq, buf_rows, buf_bytes))
-            return pd.DataFrame(out, columns=["key", "batch_seq", "n_rows", "n_bytes"])
 
-        return wdf.groupBy(F.col(key_col)).applyInPandas(bfn, BATCH_OUTPUT_SCHEMA)
+        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
+            out, carried = _fold(pdf, {})
+            # full flush: each remainder is its key's final batch
+            return pd.DataFrame(out + _remainders(carried), columns=_BATCH_COLS)
+
+        return _by_group(wdf, key_col, n_buckets).applyInPandas(bfn, BATCH_OUTPUT_SCHEMA)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf_bytes, buf_rows, next_seq, max_ms = state.get
-        else:
-            buf_bytes, buf_rows, next_seq, max_ms = 0, 0, 0, 0
-
-        out: list[tuple] = []
         if state.hasTimedOut:
-            if buf_rows:
-                out.append((key[0], next_seq, buf_rows, buf_bytes))
-            state.remove()
+            out = _remainders(_expire(state, flush_gap_ms))
         else:
-            for pdf in pdfs:
-                sizes = _sizes(pdf)
-                if ts_col in pdf.columns and len(pdf):
-                    ms = (pdf[ts_col].astype("int64") // 1_000_000).max()
-                    max_ms = max(max_ms, int(ms))
-                if not len(sizes):
-                    continue
-                emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
-                    sizes, buf_bytes, buf_rows, next_seq, max_batch_bytes
-                )
-                out.extend((key[0], seq, n, b) for seq, n, b in emitted)
-            state.update((buf_bytes, buf_rows, next_seq, max_ms))
-            # Beam: event-time timer at window max; here: watermark-driven
-            # timeout at last-event-time + flush gap. Clamped to just past
-            # the CURRENT watermark: during multi-batch catch-up the
-            # watermark can already be beyond an old key's event times, and
-            # Spark rejects a timeout earlier than the watermark
-            # (INVALID_TIMEOUT_TIMESTAMP) — a past-due buffer should simply
-            # flush at the next tick.
-            state.setTimeoutTimestamp(
-                max(max_ms + flush_gap_ms, state.getCurrentWatermarkMs() + 1)
-            )
+            out, carried = _fold(pd.concat(list(pdfs), ignore_index=True), _load(state))
+            _save(state, carried, flush_gap_ms)
         if out:
-            yield pd.DataFrame(out, columns=["key", "batch_seq", "n_rows", "n_bytes"])
+            yield pd.DataFrame(out, columns=_BATCH_COLS)
 
-    wdf = wdf.withWatermark(ts_col, watermark)
-    return wdf.groupBy(F.col(key_col)).applyInPandasWithState(
+    return _by_group(
+        wdf.withWatermark(ts_col, watermark), key_col, n_buckets
+    ).applyInPandasWithState(
         fn,
         BATCH_OUTPUT_SCHEMA,
-        _BATCH_STATE_SCHEMA,
+        _STATE_SCHEMA,
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
 
 
-CONV_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("n_turns", IntegerType()),
-        StructField("n_pii_turns", IntegerType()),
-        StructField("first_ms", LongType()),
-        StructField("last_ms", LongType()),
-    ]
-)
-
-# bucketed (super-key) mode: ONE state row per bucket holding the packed
-# per-conversation open sessions (JSON {conv_id: [n, npii, first, last]})
-_SUPER_STATE_SCHEMA = StructType([StructField("packed", StringType())])
-
-_PII_RE = r"\[[A-Z_]+\]"
-_SESS_COLS = ["conv_id", "n_turns", "n_pii_turns", "first_ms", "last_ms"]
-
-# Bucketed modes fold in pandas, where groupby drops null keys and the
-# packed-state JSON map cannot hold a null key — but per-key mode (Spark
-# groupBy) KEEPS a null-key group, and the bucketed modes promise identical
-# output. Null keys are therefore encoded as this reserved sentinel inside
-# the fold/state and decoded back to null at every emit point. Control
-# chars cannot appear in any realistically sourced key (file names, table
-# keys, conversation ids); NUL itself is avoided — numpy's fixed-width
-# unicode storage strips trailing NUL bytes, so a bare "\\x00" silently
-# becomes "" through pandas fillna/groupby.
-_NULL_KEY = "\x01__null_key__\x01"
-
-
-def _decode_null_key(df: pd.DataFrame, col: str) -> pd.DataFrame:
-    mask = df[col] == _NULL_KEY
-    if mask.any():
-        df = df.copy()
-        df.loc[mask, col] = None
-    return df
-
-
 def _fold_bucket(pdf: pd.DataFrame, carried: dict, gap_ms: int):
-    """Vectorized gap-session fold over ALL conversations in one bucket.
+    """Vectorized gap-session fold over ALL conversations in one state group.
 
-    Semantically identical to ``conversation_assembler``'s per-key scalar
-    fold (same split rule ``ts - running_max_last >= gap_ms``, same
-    min/max first/last merge against carried state), but one pandas pass
-    per BUCKET instead of one Python dispatch per conversation — the
-    ShardRows-style batching that amortizes per-key overhead
-    (beam/ShardRows.java:66-81).
+    Semantically identical to the scalar per-conversation fold (split rule
+    ``ts - running_max_last >= gap_ms``, min/max first/last merge against
+    carried state; the scalar reference lives in tests/test_properties.py),
+    but one pandas pass per group instead of one Python dispatch per
+    conversation — the ShardRows-style batching that amortizes per-key
+    overhead (beam/ShardRows.java:66-81).
 
     Two cumsum passes:
       1. rows sorted by (conv, ts): session breaks where the gap to the
@@ -315,11 +345,11 @@ def _fold_bucket(pdf: pd.DataFrame, carried: dict, gap_ms: int):
         last=("ms", "max"),
     )
     # the carried open session SEEDS the fold (rank 0, BEFORE every chunk
-    # session regardless of its own timestamps): the scalar per-key rule
-    # splits only on a FORWARD gap (ms - running_last >= gap), so a late
-    # chunk session entirely EARLIER than the carried one still merges into
-    # it — sorting carried into timestamp position would wrongly close it
-    # (found by test_fold_bucket_equals_scalar_fold_property)
+    # session regardless of its own timestamps): the scalar rule splits only
+    # on a FORWARD gap (ms - running_last >= gap), so a late chunk session
+    # entirely EARLIER than the carried one still merges into it — sorting
+    # carried into timestamp position would wrongly close it (found by
+    # test_fold_bucket_equals_scalar_fold_property)
     sess["_rank"] = 1
     if carried:
         cf = pd.DataFrame(
@@ -352,15 +382,6 @@ def _fold_bucket(pdf: pd.DataFrame, carried: dict, gap_ms: int):
     is_open = merged["conv_id"].ne(merged["conv_id"].shift(-1)).to_numpy()
     return merged, is_open
 
-_CONV_STATE_SCHEMA = StructType(
-    [
-        StructField("n_turns", IntegerType()),
-        StructField("n_pii_turns", IntegerType()),
-        StructField("first_ms", LongType()),
-        StructField("last_ms", LongType()),
-    ]
-)
-
 
 def conversation_assembler(
     df: DataFrame,
@@ -371,130 +392,24 @@ def conversation_assembler(
     """Per-conv_id stateful assembly: accumulate turn stats in state, emit one
     conversation record when the conversation idles past ``gap_ms`` (event-time
     timeout) — the custom-logic upgrade of ``session_window``. Batch input
-    degrades to a stateless ``applyInPandas`` (applyInPandasWithState is
-    streaming-only): all turns per key in one invocation, every gap-closed
-    session emitted including the final one.
+    runs the same fold through a stateless ``applyInPandas``: every
+    gap-closed session is emitted, including each conversation's final one.
 
-    ``n_buckets``: bucketed (super-key) mode — group by
-    ``pmod(xxhash64(conv_id), n_buckets)`` instead of per conv_id, with ONE
-    state row per bucket carrying every open conversation in it and ONE
-    vectorized pandas fold per bucket (``_fold_bucket``). This is the
-    ShardRows batching analogue (beam/ShardRows.java:66-81 — shard precisely
-    to amortize per-key dispatch): at millions of small conversations the
-    per-group Arrow/pandas dispatch dominates, and bucketing turns ~|keys|
-    dispatches per micro-batch into ~n_buckets. Output is identical to
-    per-key mode (pinned by tests). Sizing: open conversations per bucket ≈
-    live_keys / n_buckets; keep the packed state row well under the state
-    store's value-size comfort zone (a few MB) — e.g. 1e8 live conversations
-    → n_buckets ≈ 1e5–1e6 spread over executors."""
-    if n_buckets is not None:
-        return _bucketed_assembler(df, gap_ms, watermark, n_buckets)
-
-    cols = ["conv_id", "n_turns", "n_pii_turns", "first_ms", "last_ms"]
-
-    def _sessions(
-        pdf: pd.DataFrame,
-        key,
-        n: int = 0,
-        npii: int = 0,
-        first_ms: int = 0,
-        last_ms: int = 0,
-    ):
-        """ONE gap-split loop shared by the batch and streaming paths:
-        fold ts-sorted turns into the carried (n, npii, first_ms, last_ms)
-        open-session state, emitting a record at every gap. Returns
-        (closed_records, open_session_state). ``n == 1`` (not a falsy
-        first_ms) marks a session's first turn, so epoch-0 timestamps are
-        handled correctly."""
-        pdf = pdf.sort_values("ts", kind="mergesort")
-        ms = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
-        pii = pdf["text"].str.contains(r"\[[A-Z_]+\]", regex=True, na=False).to_numpy()
-        out = []
-        for i in range(len(pdf)):
-            if n and ms[i] - last_ms >= gap_ms:
-                out.append((key, n, npii, first_ms, last_ms))
-                n, npii = 0, 0
-            n += 1
-            npii += int(pii[i])
-            # min() (not just the n==1 row): a late within-watermark row in a
-            # LATER micro-batch can precede the carried session's start
-            first_ms = int(ms[i]) if n == 1 else min(first_ms, int(ms[i]))
-            # same n==1 seeding as first_ms: a bare max() against the 0
-            # initializer would pin pre-1970 (negative-ms) sessions to 0
-            last_ms = int(ms[i]) if n == 1 else max(last_ms, int(ms[i]))
-        return out, (n, npii, first_ms, last_ms)
-
-    if not df.isStreaming:
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.copy()
-            pdf["ts"] = pd.to_datetime(pdf["ts"])
-            out, (n, npii, first_ms, last_ms) = _sessions(pdf, pdf["conv_id"].iloc[0])
-            if n:  # full flush: the trailing open session is the last record
-                out.append((pdf["conv_id"].iloc[0], n, npii, first_ms, last_ms))
-            return pd.DataFrame(out, columns=cols)
-
-        return (
-            df.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.col("conv_id"))
-            .applyInPandas(bfn, CONV_OUTPUT_SCHEMA)
-        )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, npii, first_ms, last_ms = state.get
-        else:
-            n, npii, first_ms, last_ms = 0, 0, 0, 0
-        if state.hasTimedOut:
-            if n:
-                yield pd.DataFrame([(key[0], n, npii, first_ms, last_ms)], columns=cols)
-            state.remove()
-            return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        # same loop as the batch path (_sessions), seeded with carried state
-        out, (n, npii, first_ms, last_ms) = _sessions(
-            batch, key[0], n, npii, first_ms, last_ms
-        )
-        state.update((n, npii, first_ms, last_ms))
-        # clamp to just past the current watermark (see batched_requests):
-        # an already-idle conversation times out at the next tick instead of
-        # crashing the query with INVALID_TIMEOUT_TIMESTAMP
-        state.setTimeoutTimestamp(
-            max(last_ms + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-
+    ``n_buckets``: group by ``pmod(xxhash64(conv_id), n_buckets)``, with ONE
+    state row per bucket carrying every open conversation in it (JSON map
+    ``{conv_id: [n, npii, first_ms, last_ms]}``) and ONE vectorized pandas
+    fold per bucket (``_fold_bucket``). None = one state row per
+    conversation. At millions of small conversations the per-group
+    Arrow/pandas dispatch dominates, and bucketing turns ~|keys| dispatches
+    per micro-batch into ~n_buckets; the output does not depend on
+    ``n_buckets`` (pinned by tests). A bucket's timeout fires at the
+    EARLIEST open conversation's deadline (``last_ms + gap_ms``) and flushes
+    exactly the conversations whose deadline the watermark passed. Sizing:
+    open conversations per bucket ≈ live_keys / n_buckets; keep the packed
+    state row well under the state store's value-size comfort zone (a few
+    MB) — e.g. 1e8 live conversations → n_buckets ≈ 1e5–1e6 spread over
+    executors."""
     wdf = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if wdf.isStreaming:
-        wdf = wdf.withWatermark("ts", watermark)
-    return wdf.groupBy(F.col("conv_id")).applyInPandasWithState(
-        fn,
-        CONV_OUTPUT_SCHEMA,
-        _CONV_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _bucketed_assembler(
-    df: DataFrame, gap_ms: int, watermark: str, n_buckets: int
-) -> DataFrame:
-    """Super-key implementation of ``conversation_assembler`` (see its
-    docstring): one state row + one vectorized fold per bucket. Per-conv
-    open sessions ride in the bucket's state as a JSON map
-    ``{conv_id: [n, npii, first_ms, last_ms]}``; the bucket's event-time
-    timeout is armed at the EARLIEST open conversation's deadline
-    (min(last_ms) + gap_ms, watermark-clamped like the per-key path), and a
-    firing flushes exactly the conversations whose deadline the watermark
-    passed, re-arming for the rest."""
-    import json
-
-    wdf = df.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
-        "__bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets))
-    )
 
     if not wdf.isStreaming:
 
@@ -503,172 +418,39 @@ def _bucketed_assembler(
             sessions, _ = _fold_bucket(pdf, {}, gap_ms)
             return _decode_null_key(sessions, "conv_id")
 
-        return wdf.groupBy("__bucket").applyInPandas(bfn, CONV_OUTPUT_SCHEMA)
+        return _by_group(wdf, "conv_id", n_buckets).applyInPandas(bfn, CONV_OUTPUT_SCHEMA)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        carried: dict = json.loads(state.get[0]) if state.exists else {}
-
         if state.hasTimedOut:
-            wm = state.getCurrentWatermarkMs()
-            due = [
-                (None if c == _NULL_KEY else c, v[0], v[1], v[2], v[3])
-                for c, v in carried.items()
-                if v[3] + gap_ms <= wm
-            ]
-            keep = {c: v for c, v in carried.items() if v[3] + gap_ms > wm}
-            if keep:
-                state.update((json.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(min(v[3] + gap_ms for v in keep.values()), wm + 1)
-                )
-            else:
-                state.remove()
+            due = _expire(state, gap_ms)
             if due:
-                yield pd.DataFrame(due, columns=_SESS_COLS)
+                yield pd.DataFrame(
+                    [(_key_out(c), *v) for c, v in due.items()], columns=_SESS_COLS
+                )
             return
 
         batch = pd.concat(list(pdfs), ignore_index=True)
-        sessions, is_open = _fold_bucket(batch, carried, gap_ms)
-        closed = _decode_null_key(sessions[~is_open], "conv_id")
-        carried = {
-            r.conv_id: [int(r.n_turns), int(r.n_pii_turns), int(r.first_ms), int(r.last_ms)]
-            for r in sessions[is_open].itertuples()
-        }
-        state.update((json.dumps(carried),))
-        # same watermark clamp as the per-key path: a past-due bucket
-        # flushes at the next tick instead of crashing the query
-        state.setTimeoutTimestamp(
-            max(
-                min(v[3] + gap_ms for v in carried.values()),
-                state.getCurrentWatermarkMs() + 1,
-            )
+        sessions, is_open = _fold_bucket(batch, _load(state), gap_ms)
+        _save(
+            state,
+            {
+                r.conv_id: [int(r.n_turns), int(r.n_pii_turns), int(r.first_ms), int(r.last_ms)]
+                for r in sessions[is_open].itertuples()
+            },
+            gap_ms,
         )
+        closed = _decode_null_key(sessions[~is_open], "conv_id")
         if len(closed):
             yield closed
 
-    wdf = wdf.withWatermark("ts", watermark)
-    return wdf.groupBy("__bucket").applyInPandasWithState(
+    return _by_group(
+        wdf.withWatermark("ts", watermark), "conv_id", n_buckets
+    ).applyInPandasWithState(
         fn,
         CONV_OUTPUT_SCHEMA,
-        _SUPER_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _bucketed_batched_requests(
-    df: DataFrame,
-    key_col: str,
-    payload_col: str,
-    ts_col: str,
-    max_batch_bytes: int,
-    flush_gap_ms: int,
-    watermark: str,
-    order_col: "str | None",
-    n_buckets: int,
-) -> DataFrame:
-    """Super-key implementation of ``batched_requests`` (see its docstring):
-    per-key carry buffers ride in ONE bucket state row as a JSON map
-    ``{key: [buf_bytes, buf_rows, next_seq, max_event_ms]}``; the bucket's
-    event-time timeout fires at the EARLIEST key deadline (min(max_ms) +
-    flush_gap, watermark-clamped) and flushes exactly the due keys'
-    remainders, re-arming for the rest. ``pack_greedy`` (the numpy core)
-    still runs per key — bucketing amortizes only the per-group
-    Arrow/pandas dispatch, which is what dominates at many small keys."""
-    import json
-
-    def _sizes(pdf: pd.DataFrame) -> "np.ndarray":
-        return _payload_sizes(pdf, payload_col, order_col)
-
-    def _fold(pdf: pd.DataFrame, carried: dict):
-        """Per-key pack_greedy over one bucket's delivered rows, seeded with
-        the carried buffers. Returns (emitted rows, new carried).
-        ``dropna=False`` + sentinel: per-key mode keeps a null-key group
-        (Spark groupBy), so the bucketed fold must too — pandas groupby
-        would silently drop those rows, and the carried JSON map needs a
-        string key (_NULL_KEY), decoded back to null on emit."""
-        out: list[tuple] = []
-        ms_all = (
-            (pdf[ts_col].astype("int64") // 1_000_000)
-            if ts_col in pdf.columns and len(pdf)
-            else None
-        )
-        for key, kdf in pdf.groupby(key_col, sort=False, dropna=False):
-            k_enc = _NULL_KEY if pd.isna(key) else key
-            k_out = None if pd.isna(key) else key
-            st = carried.get(k_enc, [0, 0, 0, 0])
-            buf_bytes, buf_rows, next_seq, max_ms = st
-            if ms_all is not None:
-                max_ms = max(max_ms, int(ms_all.loc[kdf.index].max()))
-            emitted, (buf_bytes, buf_rows, next_seq) = pack_greedy(
-                _sizes(kdf), buf_bytes, buf_rows, next_seq, max_batch_bytes
-            )
-            out.extend((k_out, seq, n, b) for seq, n, b in emitted)
-            carried[k_enc] = [int(buf_bytes), int(buf_rows), int(next_seq), int(max_ms)]
-        return out, carried
-
-    wdf = df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withColumn(
-        "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-    out_cols = ["key", "batch_seq", "n_rows", "n_bytes"]
-
-    if not wdf.isStreaming:
-
-        def bfn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out, carried = _fold(pdf, {})
-            for key, (bb, br, seq, _ms) in carried.items():
-                if br:  # full flush: each remainder is its key's final batch
-                    out.append((None if key == _NULL_KEY else key, seq, br, bb))
-            return pd.DataFrame(out, columns=out_cols)
-
-        return wdf.groupBy("__bucket").applyInPandas(bfn, BATCH_OUTPUT_SCHEMA)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        carried: dict = json.loads(state.get[0]) if state.exists else {}
-
-        if state.hasTimedOut:
-            wm = state.getCurrentWatermarkMs()
-            due, keep = [], {}
-            for k, (bb, br, seq, max_ms) in carried.items():
-                if max_ms + flush_gap_ms <= wm:
-                    if br:
-                        due.append((None if k == _NULL_KEY else k, seq, br, bb))
-                else:
-                    keep[k] = [bb, br, seq, max_ms]
-            if keep:
-                state.update((json.dumps(keep),))
-                state.setTimeoutTimestamp(
-                    max(
-                        min(v[3] + flush_gap_ms for v in keep.values()), wm + 1
-                    )
-                )
-            else:
-                state.remove()
-            if due:
-                yield pd.DataFrame(due, columns=out_cols)
-            return
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        out, carried = _fold(batch, carried)
-        state.update((json.dumps(carried),))
-        state.setTimeoutTimestamp(
-            max(
-                min(v[3] + flush_gap_ms for v in carried.values()),
-                state.getCurrentWatermarkMs() + 1,
-            )
-        )
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    wdf = wdf.withWatermark(ts_col, watermark)
-    return wdf.groupBy("__bucket").applyInPandasWithState(
-        fn,
-        BATCH_OUTPUT_SCHEMA,
-        _SUPER_STATE_SCHEMA,
+        _STATE_SCHEMA,
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )

@@ -421,3 +421,40 @@ def test_many_small_files_group_validation_and_isolation(spark, dirs):
     assert trio == {(str(100 + i), f"t{i}") for i in range(3)}
     dead = job.read_table(DynamicSchemaFileStream.DEAD_LETTER_KEY).collect()
     assert len(dead) == 1 and "unreadable parquet" in dead[0].reason
+
+
+def test_dead_letter_reason_with_lone_surrogate_without_arrow_fallback(
+    spark, dirs, monkeypatch
+):
+    """An analysis failure whose text holds a lone surrogate must still land
+    in the dead-letter table when the row-wise fallback for a failed Arrow
+    conversion is disabled: Arrow cannot encode the surrogate, and a raise
+    in the dead-letter write would wedge the checkpointed batch."""
+    _write(os.path.join(dirs["in"], "bad.csv"), ["a,b", "1,2"])
+    _write(os.path.join(dirs["in"], "good.csv"), ["a,b", "3,4"])
+
+    from dlp_dataflow_deidentification_spark.sources.dynamic import (
+        DynamicSchemaFileStream,
+    )
+
+    job = DynamicSchemaFileStream(spark, dirs["in"], dirs["out"], dirs["ckpt"])
+    columns_for = job.columns_for
+
+    def boom(key, path, fmt):
+        if key == "bad":
+            raise ValueError("undecodable header \ud800")
+        return columns_for(key, path, fmt)
+
+    monkeypatch.setattr(job, "columns_for", boom)
+    conf = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        assert job.run_to_completion()
+    finally:
+        spark.conf.set(conf, before)
+    assert [(r.a, r.b) for r in job.read_table("good").collect()] == [("3", "4")]
+    dead = job.read_table(DynamicSchemaFileStream.DEAD_LETTER_KEY).collect()
+    assert len(dead) == 1 and dead[0].path.endswith("bad.csv")
+    assert "analysis failure" in dead[0].reason
+    assert "undecodable header \\ud800" in dead[0].reason

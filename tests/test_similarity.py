@@ -159,6 +159,17 @@ def test_kmeans_centroids_deterministic_and_complete(spark, sf_dir):
     assert len(a) == 4 and all(len(c) == 64 for c in a)
 
 
+def test_kmeans_centroids_rejects_non_finite_component(spark):
+    """A NaN embedding component survives the per-dimension mean; the
+    centroid would later render as a 'nanD' SQL literal and fail as an
+    obscure parse error. kmeans_centroids names the cell and dimension."""
+    rows = [(i, [float(i % 3 + 1), 1.0, float(i), 2.0]) for i in range(8)]
+    rows[5] = (5, [1.0, 1.0, float("nan"), 2.0])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=r"cell \d+ has non-finite component nan at dimension 2"):
+        similarity.kmeans_centroids(df, k=2, iters=1, dim=4)
+
+
 def test_ivf_topk_recall_and_native_plan(spark, sf_dir):
     """IVF must recover ≥90% of the exact top-10 on raw (unplanted random)
     embeddings with nprobe=3 of 8 cells, and plan without Python."""
