@@ -89,7 +89,8 @@ def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
     sort-before-repartition pass) makes everything downstream parallel. At
     100 TB inputs arrive as many splittable files and this exchange is
     dropped at the source layout level; partition count follows
-    defaultParallelism, not a constant."""
+    defaultParallelism, not a constant. The only input fan-out decision:
+    operators run at the partitioning they are handed."""
     return df.repartition(spark.sparkContext.defaultParallelism, F.col(key))
 
 
@@ -359,19 +360,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
 
 
-def q_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/BLAS form of the exact brute-force baseline: one numpy matmul
-    per Arrow batch + per-batch top-k inside mapInPandas (only k·|Q| rows
-    per batch reach the global window). Same oracle as cosine_topk — the
-    two implementations are driver-proven value-identical."""
-    from dlp_dataflow_deidentification_spark.operators import similarity
-
-    emb = _spread(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id")
-    qs = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = similarity.cosine_topk_arrow(emb, qs, k=10)
-    return out.select("query_id", "vec_id", "rank", F.round("sim", 6).alias("sim"))
+# cosine_topk is served by the Arrow/BLAS kernel too: both names, one body
+q_cosine_topk_arrow = q_cosine_topk
 
 
 def _ann_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,7 +631,7 @@ def q_inspect_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes the POSSIBLE dictionary detector at plan time, and
     maxFindingsPerItem=2 keeps only the first two findings per row in
     DOCUMENT POSITION order (start offset, detector order on ties — the DLP
-    truncation rule; engine default findings_order="position"). The DuckDB
+    truncation rule, the engine's only cap order). The DuckDB
     oracle reproduces the rule with the offsets machinery + one row_number
     window (inspect-template.json:8-32,
     beam/DLPInspectText.java:269-270,306-309)."""

@@ -128,5 +128,5 @@ def with_metric_struct(df, text_col: str = "text", name: str = "__m"):
 
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercased text —
-    the exact-dedup key. (Fuzzy fingerprinting = operators.dedup.simhash64.)"""
+    the exact-dedup key. (Fuzzy fingerprinting = operators.dedup.simhash_df.)"""
     return F.md5(F.trim(F.lower(F.regexp_replace(col, r"\s+", " "))))

@@ -27,6 +27,10 @@ Scale notes (100 TB):
                       surviving candidate pairs.
   * simhash         — one 64-bit fingerprint per doc, candidates via
                       pigeonhole chunk-match, verify with bit_count(xor).
+
+Callers hand in inputs already spread to about ``defaultParallelism``
+partitions (the driver entry's ``_spread``); the operators never repartition
+their input, so the fan-out decision is made once, by the caller.
 """
 from __future__ import annotations
 
@@ -66,40 +70,16 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ---------------------------------------------------------------------------
 
 
-def shingles(text_col, n: int = 5):
-    """Word n-gram shingle array (distinct), as a native Column expression.
-    Guarded for short texts: Spark's sequence(1, k) DESCENDS when k < 1, so
-    k is clamped and the whole gram array is empty for < n words.
-
-    AD-HOC USE ONLY: the lambda below captures the ``split`` EXPRESSION, so
-    Catalyst re-evaluates the full text split once per gram (no CSE inside
-    higher-order functions) — ~10x slower than the two-projection form
-    ``shingle_df`` uses, where the word array is a materialized column."""
-    # drop empty tokens like shingle_df does: split of leading/trailing
-    # whitespace yields "" words that would corrupt gram text (" hi") and
-    # defeat the short-doc gate
-    words = F.filter(F.split(F.lower(text_col), r"\s+"), lambda w: w != "")
-    k = F.size(words) - F.lit(n - 1)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        )
-    )
-    return F.when(k >= 1, grams).otherwise(F.array().cast("array<string>"))
-
-
 def shingle_df(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 5,
-    hashed: bool = True,
 ) -> DataFrame:
-    """(id, sh) distinct-shingle sets, empty-set rows dropped.
+    """(id, sh) distinct word-n-gram shingle sets, each gram stored as its
+    xxhash64 (array<long>); docs with fewer than ``shingle_n`` words drop out.
 
-    ``hashed=True`` (default) stores xxhash64 of each gram (array<long>):
-    set sizes and intersections are identical to the string form
+    Set sizes and intersections equal those of the gram strings
     (collisions: ~n²/2⁶⁵, none observed at any test SF, and the driver's
     value-hash gate would catch one), while candidate-verification joins
     ship 8-byte elements instead of ~30-byte gram strings — 4x less shuffle
@@ -126,9 +106,7 @@ def shingle_df(
             lambda i: F.concat_ws(" ", F.slice(F.col("__w"), i, shingle_n)),
         )
     )
-    if hashed:
-        sh = F.transform(sh, lambda g: F.xxhash64(g))
-    return tmp.select("id", sh.alias("sh"))
+    return tmp.select("id", F.transform(sh, lambda g: F.xxhash64(g)).alias("sh"))
 
 
 def _perm(i: int):
@@ -136,12 +114,10 @@ def _perm(i: int):
 
 
 def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """sh may carry hashed (long) or raw (string) shingles — either way each
-    shingle contributes one base hash, permuted num_hashes times."""
-    g = F.col("g")
-    base = g if dict(sh.dtypes)["sh"] == "array<bigint>" else F.xxhash64(g)
+    """Explode + num_hashes min-aggregates over ``shingle_df``'s hashed
+    shingles: each shingle's hash is permuted num_hashes times."""
     ex = sh.select("id", F.explode("sh").alias("g")).select(
-        "id", F.pmod(base, F.lit(_PRIME)).alias("h")
+        "id", F.pmod(F.col("g"), F.lit(_PRIME)).alias("h")
     )
     aggs = []
     for i in range(num_hashes):
@@ -199,9 +175,7 @@ def _signatures_from_hashed_arrays(sh: DataFrame, num_hashes: int) -> DataFrame:
     return sh.select("id", _sig("sh").alias("sig"))
 
 
-def _lsh_candidates(
-    sigs: DataFrame, num_hashes: int, bands: int, max_bucket: int = 1000
-) -> DataFrame:
+def _lsh_candidates(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """Distinct candidate id pairs (id < rid) sharing ≥1 LSH band.
 
     ONE pass over the signatures: explode band keys → groupBy(band_key)
@@ -210,12 +184,12 @@ def _lsh_candidates(
     the whole signature subtree for its second side (Catalyst only reuses
     byte-identical exchanges) and would carry both join sides through a
     shuffle; here each doc id crosses the wire once per band. Buckets larger
-    than ``max_bucket`` are dropped — a degenerate band key (e.g. the empty
+    than 1000 members are dropped — a degenerate band key (e.g. the empty
     signature of boilerplate) would otherwise create an O(k²) pair bucket;
     real near-dup buckets are tiny."""
     if bands < 1 or num_hashes % bands != 0:
         # bands > num_hashes would make rows == 0: every band key becomes
-        # the constant hash of an EMPTY slice, the max_bucket cap drops the
+        # the constant hash of an EMPTY slice, the bucket cap drops the
         # one giant bucket, and the function silently reports zero
         # duplicates; a non-divisor bands would silently ignore the tail
         # hashes of every signature
@@ -229,32 +203,7 @@ def _lsh_candidates(
         for b in range(bands)
     ]
     banded = sigs.select("id", F.explode(F.array(*band_cols)).alias("band_key"))
-    return _pairs_from_buckets(banded, "band_key", max_bucket)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Widen a too-narrow scan before the CPU-heavy shingle/signature
-    stages: shingling+hashing costs ~50 expression evaluations per input
-    row, decided AFTER the scan split, so a small input (few parquet row
-    groups) would pin the whole dedup pipeline to a handful of cores. No-op
-    when the input is big enough to split widely on its own (the 100 TB
-    case).
-
-    The gate is the PHYSICAL partition count (``.rdd.getNumPartitions()`` —
-    planning only, no job, no data touched): Catalyst's size estimate is
-    directionless here — a small estimate can still be pre-split wide
-    (repartitioning it again is a needless shuffle), and a large estimate
-    can sit in ONE partition (a non-splittable gzip/single-row-group file)
-    that must be widened or the whole pipeline pins to one core. Only the
-    partition count answers the actual question."""
-    spark = df.sparkSession
-    want = spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() >= want:
-            return df  # already well-split: don't shuffle the corpus text
-    except Exception:
-        pass  # planning unavailable: fall through to the safe widen
-    return df.repartition(want)
+    return _pairs_from_buckets(banded, "band_key", 1000)
 
 
 def _pairs_from_buckets(
@@ -301,6 +250,21 @@ def _pairs_from_buckets(
     )
 
 
+def _with_pair_values(
+    cands: DataFrame, values: DataFrame, value_col: str, left: str, right: str
+) -> DataFrame:
+    """(id, rid, left, right): ``values``' per-id ``value_col`` re-attached
+    to both sides of each (small, post-bucketing) candidate pair — the two
+    id-joins move only candidate rows plus their values."""
+    a = values.select(F.col("id").alias("__ia"), F.col(value_col).alias(left))
+    b = values.select(F.col("id").alias("__ib"), F.col(value_col).alias(right))
+    return (
+        cands.join(a, F.col("id") == F.col("__ia"))
+        .join(b, F.col("rid") == F.col("__ib"))
+        .select("id", "rid", left, right)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -318,13 +282,8 @@ def minhash_lsh_pairs(
     Output: id_a < id_b, est_jaccard.
     """
     sigs = minhash_signatures_df(df, text_col, id_col, num_hashes, shingle_n).persist()
-    cands = _lsh_candidates(sigs, num_hashes, bands)
-    a = sigs.select(F.col("id").alias("__ia"), F.col("sig").alias("sig"))
-    b = sigs.select(F.col("id").alias("__ib"), F.col("sig").alias("rsig"))
-    withsig = (
-        cands.join(a, F.col("id") == F.col("__ia"))
-        .join(b, F.col("rid") == F.col("__ib"))
-        .select("id", "rid", "sig", "rsig")
+    withsig = _with_pair_values(
+        _lsh_candidates(sigs, num_hashes, bands), sigs, "sig", "sig", "rsig"
     )
     agree = F.size(
         F.filter(F.zip_with("sig", "rsig", lambda x, y: x == y), lambda x: x)
@@ -338,14 +297,10 @@ def minhash_lsh_pairs(
 
 def _exact_jaccard_on_pairs(cands: DataFrame, sh: DataFrame) -> DataFrame:
     """Attach exact Jaccard (over full distinct-shingle sets) to candidate id
-    pairs. The candidate set is small (post-LSH / post-df-cap), so the two
-    id-joins move only candidate rows + their shingle arrays."""
-    a = sh.select(F.col("id").alias("__ia"), F.col("sh").alias("sa"))
-    b = sh.select(F.col("id").alias("__ib"), F.col("sh").alias("sb"))
+    pairs (post-LSH / post-df-cap)."""
     common = F.size(F.array_intersect("sa", "sb"))
     return (
-        cands.join(a, F.col("id") == F.col("__ia"))
-        .join(b, F.col("rid") == F.col("__ib"))
+        _with_pair_values(cands, sh, "sh", "sa", "sb")
         .withColumn("common", common)
         .select(
             F.col("id").alias("id_a"),
@@ -381,8 +336,10 @@ def minhash_dedup_pairs(
     verification join; it is cached once (persist — lineage kept, so an
     executor loss recomputes the lost blocks instead of failing the job)
     rather than recomputed per consumer — at 100 TB this is the standard
-    materialize-the-signature-table step of a dedup pipeline."""
-    sh = shingle_df(_spread(df), text_col, id_col, shingle_n).persist()
+    materialize-the-signature-table step of a dedup pipeline. Hand in ``df``
+    already spread to about ``defaultParallelism`` partitions: shingling and
+    signing run at the input's partitioning."""
+    sh = shingle_df(df, text_col, id_col, shingle_n).persist()
     sigs = _signatures_from_hashed_arrays(sh, num_hashes)
     cands = _lsh_candidates(sigs, num_hashes, bands)
     return _exact_jaccard_on_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
@@ -403,8 +360,10 @@ def ngram_jaccard_pairs(
     boilerplate shingles carry ~no Jaccard signal) — candidates are pairs
     sharing ≥1 *indexable* shingle; Jaccard is then computed EXACTLY on the
     full shingle sets of the candidates (materialized once, see
-    minhash_dedup_pairs). Output: id_a < id_b, jaccard."""
-    sh = shingle_df(_spread(df), text_col, id_col, shingle_n).persist()
+    minhash_dedup_pairs). Output: id_a < id_b, jaccard. Hand in ``df``
+    already spread to about ``defaultParallelism`` partitions: shingling
+    runs at the input's partitioning."""
+    sh = shingle_df(df, text_col, id_col, shingle_n).persist()
     inv = sh.select("id", F.explode("sh").alias("g"))
     # df cap ≡ bucket-size cap: a shingle's inverted-index bucket has one
     # entry per containing doc, so dropping buckets > max_df IS the
@@ -428,52 +387,21 @@ def _token_hash(w, portable: bool):
     return F.xxhash64(w)
 
 
-def simhash64(text_col, portable: bool = False):
-    """64-bit (60-bit when portable) SimHash of word tokens, fully JVM-side:
-    per-bit weighted majority computed with higher-order functions over token
-    hashes."""
-    n_bits = 60 if portable else 64
-    tokens = F.filter(F.split(F.lower(text_col), r"\s+"), lambda w: w != "")
-    hashes = F.transform(tokens, lambda w: _token_hash(w, portable))
-
-    # the python shiftright/shiftleft wrappers require literal bit counts;
-    # call the SQL functions directly so the bit index can be the HOF variable
-    def _sr(h, b):
-        return F.call_function("shiftright", h, b)
-
-    def _sl_one(b):
-        return F.call_function("shiftleft", F.lit(1).cast("long"), b)
-
-    # for each bit, sum(+1/-1) over tokens; set bit if sum > 0
-    bit_expr = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bits - 1)),
-        lambda b: F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0),
-                lambda acc, h: acc
-                + F.when(_sr(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1)).otherwise(F.lit(-1)),
-            )
-            > 0,
-            _sl_one(b),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bit_expr, F.lit(0).cast("long"), lambda acc, x: acc.bitwiseOR(x))
-
-
 def simhash_df(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     portable: bool = False,
 ) -> DataFrame:
-    """(id, sh) simhash fingerprints via explode + per-bit partial-aggregate
-    sums: each token is hashed exactly ONCE (the pure-Column ``simhash64``
-    re-evaluates the token-hash subtree once per bit — Catalyst does not CSE
-    across higher-order functions; measured 3.4x slower even with cheap
-    xxhash64, far worse with portable md5). One map-side-combined shuffle,
-    n_bits sum buffers per doc. Zero-token docs drop out (their simhash
-    would be the constant 0, pairing all empty docs together)."""
+    """(id, sh) 64-bit (60-bit when portable) SimHash fingerprints of word
+    tokens: per bit, the sign of the ±1 sum over token-hash bits. Computed
+    via explode + per-bit partial-aggregate sums, so each token is hashed
+    exactly ONCE (a per-row higher-order form re-evaluates the token-hash
+    subtree once per bit — Catalyst does not CSE across higher-order
+    functions; measured 3.4x slower even with cheap xxhash64, far worse with
+    portable md5). One map-side-combined shuffle, n_bits sum buffers per
+    doc. Zero-token docs drop out (their simhash would be the constant 0,
+    pairing all empty docs together)."""
     import functools
 
     n_bits = 60 if portable else 64
@@ -516,24 +444,21 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     portable: bool = False,
-    max_bucket: "int | None" = None,
-    n_blocks: "int | None" = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) ≤ max_hamming (exact output —
     the candidate stage is recall-lossless). Output: id_a < id_b, hamming.
 
     Candidate keys are BLOCK COMBINATIONS (the Manku/Jain/Sarma web-dedup
-    scheme): the fingerprint splits into ``n_blocks`` blocks (default
-    ``max_hamming + 3``) and each doc emits one key per
-    C(n_blocks, n_blocks - max_hamming) combination of (n_blocks - d)
-    blocks. Pigeonhole: d flipped bits hit ≤ d blocks, so ≥ n_blocks - d
-    blocks agree and at least one combination key matches — recall stays
-    exact. The point vs the minimal d+1-chunk split (n_blocks=d+1: 16-bit
-    keys at 64 bits, 15-bit in portable-60 mode): combination keys carry
-    ~(n_blocks-d)/n_blocks of the fingerprint (~32/30 bits here), so RANDOM
-    collisions — which grow as n²/2^key_bits and made the minimal split
-    super-linear beyond ~500k docs — shrink by ~2^16, at the price of 20
-    membership rows per doc instead of 4. That is the right trade at
+    scheme): the fingerprint splits into n_blocks = max_hamming + 3 blocks
+    and each doc emits one key per C(n_blocks, n_blocks - max_hamming)
+    combination of (n_blocks - d) blocks. Pigeonhole: d flipped bits hit
+    ≤ d blocks, so ≥ n_blocks - d blocks agree and at least one combination
+    key matches — recall stays exact. The point vs the minimal d+1-chunk
+    split (16-bit keys at 64 bits, 15-bit in portable-60 mode): combination
+    keys carry ~(n_blocks-d)/n_blocks of the fingerprint (~32/30 bits at
+    d=3), so RANDOM collisions — which grow as n²/2^key_bits and made the
+    minimal split super-linear beyond ~500k docs — shrink by ~2^16, at the
+    price of 20 membership rows per doc instead of 4. That is the right trade at
     100 TB: membership is linear, collisions are quadratic.
 
     Candidates use the same ids-only bucket machinery as the minhash/ngram
@@ -543,17 +468,14 @@ def simhash_pairs(
     self-join shipped both fingerprints through a duplicated join —
     measured 783 s on a 500k-doc stress corpus).
 
-    ``max_bucket`` is OFF by default: a pair with exactly n_blocks - d
-    agreeing blocks matches exactly ONE combination key, and dropping that
-    bucket would lose the pair — unlike the minhash df-cap, there is no
-    second chance. Set it only as an explicit precision/cost trade."""
+    Buckets are uncapped: a pair with exactly n_blocks - d agreeing blocks
+    matches exactly ONE combination key, and dropping that bucket would
+    lose the pair — unlike the minhash df-cap, there is no second chance."""
     from itertools import combinations
 
     n_bits = 60 if portable else 64
     d = max_hamming
-    blocks = n_blocks if n_blocks is not None else d + 3
-    if blocks < d + 1:
-        raise ValueError(f"n_blocks must be >= max_hamming + 1, got {blocks}")
+    blocks = d + 3
     layout = _block_layout(n_bits, blocks)
     combos = list(combinations(range(blocks), blocks - d))
     # cached once (lineage kept): feeds both candidate generation and the
@@ -569,10 +491,7 @@ def simhash_pairs(
         vals = [F.lit(ci)]
         for b in combo:
             shift, w = layout[b]
-            # w == 64 (n_blocks=1 with max_hamming=0): the all-ones mask
-            # is -1 as a signed long — (1 << 64) - 1 would not fit
-            mask = (1 << w) - 1 if w < 64 else -1
-            vals.append(F.shiftright("sh", shift).bitwiseAND(F.lit(mask)))
+            vals.append(F.shiftright("sh", shift).bitwiseAND(F.lit((1 << w) - 1)))
         return F.xxhash64(*vals)
 
     member = base.select(
@@ -581,13 +500,10 @@ def simhash_pairs(
             F.array(*[_combo_key(ci, c) for ci, c in enumerate(combos)])
         ).alias("bucket"),
     )
-    cands = _pairs_from_buckets(member, "bucket", max_bucket)
-    a = base.select(F.col("id").alias("__ia"), F.col("sh").alias("sa"))
-    b = base.select(F.col("id").alias("__ib"), F.col("sh").alias("sb"))
+    cands = _pairs_from_buckets(member, "bucket", None)
     hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
     return (
-        cands.join(a, F.col("id") == F.col("__ia"))
-        .join(b, F.col("rid") == F.col("__ib"))
+        _with_pair_values(cands, base, "sh", "sa", "sb")
         .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select(F.col("id").alias("id_a"), F.col("rid").alias("id_b"), "hamming")

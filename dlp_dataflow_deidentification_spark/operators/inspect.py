@@ -256,7 +256,6 @@ def inspect(
     min_likelihood: "str | None" = None,
     include_quote: bool = True,
     max_findings_per_item: "int | None" = None,
-    findings_order: str = "position",
     rule_sets=None,
 ) -> DataFrame:
     """Native findings table: one row per (input row, column, detector, match).
@@ -277,19 +276,12 @@ def inspect(
     match text is never shipped to the sink), ``max_findings_per_item``
     caps findings per input row (DLP limits.maxFindingsPerItem analogue).
 
-    ``findings_order`` picks which findings survive the cap:
-    ``"position"`` (default — DLP behavior) keeps the first N in document
-    order, total order (column_idx, start_offset, detector_idx); match
-    offsets are derived natively from cumulative segment/match lengths of
+    The cap keeps the first N findings in DLP's document-position order,
+    total order (column_idx, start_offset, detector_idx); match offsets are
+    derived natively from cumulative segment/match lengths of
     ``split``/``regexp_extract_all`` — still one source scan, zero Python,
-    no shuffle. ``"detector"`` keeps the first N in (column,
-    detector-config-order, match-position) order — cheaper (no offset
-    bookkeeping) and the engine's pre-round-4 rule.
+    no shuffle.
     """
-    if findings_order not in ("position", "detector"):
-        raise ValueError(
-            f"findings_order must be 'position' or 'detector', got {findings_order!r}"
-        )
     _validate_native_rules(rule_sets)
     compiled_rules = _compile_rule_sets(rule_sets)
     dets = _filter_min_likelihood([resolve(d) for d in detectors], min_likelihood)
@@ -319,7 +311,7 @@ def inspect(
             F.lit(None).cast("string").alias("quote"),
         ).where(F.lit(False))
 
-    if max_findings_per_item is not None and findings_order == "position":
+    if max_findings_per_item is not None:
         return _inspect_position_capped(
             df, dets, text_columns, id_columns, include_quote,
             max_findings_per_item, keeps
@@ -339,8 +331,6 @@ def inspect(
                 matches = F.filter(matches, keeps[it.name])
             per_pair.append(F.transform(matches, _tag(col, it)))
     findings = F.flatten(F.array(*per_pair))
-    if max_findings_per_item is not None:
-        findings = F.slice(findings, 1, max_findings_per_item)
     return df.select(
         *[F.col(c) for c in id_columns], F.explode(findings).alias("f")
     ).select(*id_columns, "f.*")
@@ -520,7 +510,6 @@ def inspect_offsets(
     min_likelihood: "str | None" = None,
     include_quote: bool = True,
     max_findings_per_item: "int | None" = None,
-    findings_order: str = "position",
     rule_sets=None,
 ) -> DataFrame:
     """Findings with codepoint offsets (dlpInspectionSchema parity,
@@ -528,9 +517,8 @@ def inspect_offsets(
     (`re`), one UDF call per Arrow batch, then a JVM-side explode. One array
     per input row covering ALL text columns (single source scan; the
     ``max_findings_per_item`` cap therefore applies per row, like DLP's
-    limits.maxFindingsPerItem). ``findings_order`` as in ``inspect``:
-    ``"position"`` (default, DLP rule) caps in (column_idx, start_offset,
-    detector_idx) order; ``"detector"`` in detector-config order.
+    limits.maxFindingsPerItem), in the same document-position order as
+    ``inspect``: (column_idx, start_offset, detector_idx).
 
     ``rule_sets`` is the FULL InspectionRuleSet surface (this is the path
     that has offsets and the whole cell in hand, so every rule kind works):
@@ -541,10 +529,6 @@ def inspect_offsets(
     ``min_likelihood`` filters AFTER adjustment (an adjustment can lift a
     finding over the floor), so detector pruning moves from plan time into
     the scan for exactly that case."""
-    if findings_order not in ("position", "detector"):
-        raise ValueError(
-            f"findings_order must be 'position' or 'detector', got {findings_order!r}"
-        )
     compiled = _compile_rule_sets(rule_sets)
     any_hotwords = any(hots for _, hots, _ in compiled)
     if any_hotwords:
@@ -560,7 +544,6 @@ def inspect_offsets(
         for it in resolved
     ]
     cap = max_findings_per_item
-    by_position = findings_order == "position"
 
     @F.pandas_udf(ArrayType(_FINDING))
     def _scan(*cols: pd.Series) -> pd.Series:
@@ -587,10 +570,10 @@ def inspect_offsets(
                     )
                     for f in cell
                 )
-            if by_position and cap is not None:
+            if cap is not None:
                 out.sort(key=lambda e: e[0])
-            vals = [e[1] for e in out]
-            return vals[:cap] if cap is not None else vals
+                out = out[:cap]
+            return [e[1] for e in out]
 
         return pd.Series([one(texts) for texts in zip(*cols)])
 

@@ -47,17 +47,28 @@ def _check_dim(df: DataFrame, vec_col: str, dim: int, what: str) -> None:
 
 
 def _check_same_width(
-    corpus: DataFrame, queries: DataFrame, vec_col: str, qvec_col: str, what: str
+    corpus: DataFrame, queries: DataFrame, vec_col: str, what: str
 ) -> None:
     """Corpus/query width consistency peek (same failure mode as
     ``_check_dim``: silent null sims instead of an error)."""
     c = corpus.select(F.size(F.col(vec_col)).alias("n")).first()
-    q = queries.select(F.size(F.col(qvec_col)).alias("n")).first()
+    q = queries.select(F.size(F.col(vec_col)).alias("n")).first()
     if c is not None and q is not None and c.n is not None and q.n is not None and c.n != q.n:
         raise ValueError(
             f"{what}: corpus vectors are {c.n}-wide but query vectors are "
             f"{q.n}-wide"
         )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, vec_id, sim) rows, sim desc then vec_id
+    asc. Output: query_id, vec_id, rank, sim."""
+    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "rank", "sim")
+    )
 
 
 def cosine_topk(
@@ -75,7 +86,7 @@ def cosine_topk(
     Scale: corpus-side scan is embarrassingly parallel; only the per-query
     top-k rows shuffle (k·|Q| rows, not the corpus).
     """
-    _check_same_width(corpus, queries, vec_col, vec_col, "cosine_topk")
+    _check_same_width(corpus, queries, vec_col, "cosine_topk")
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -85,12 +96,7 @@ def cosine_topk(
         "vec_id",
         cosine(F.col("qv"), F.col("cv")).alias("sim"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+    return _topk(scored, k)
 
 
 def cosine_topk_arrow(
@@ -125,7 +131,7 @@ def cosine_topk_arrow(
     import numpy as np
     import pandas as pd
 
-    _check_same_width(corpus, queries, vec_col, vec_col, "cosine_topk_arrow")
+    _check_same_width(corpus, queries, vec_col, "cosine_topk_arrow")
 
     # id columns keep their INPUT types (string media ids etc.), like the
     # native path — the mapInPandas schema is derived, not hardcoded long
@@ -194,13 +200,7 @@ def cosine_topk_arrow(
                 out_sim.extend(col[order])
             yield pd.DataFrame({"query_id": out_q, "vec_id": out_id, "sim": out_sim})
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+    return _topk(corpus.select(id_col, vec_col).mapInPandas(score, out_schema), k)
 
 
 def _plane_components(seed: int, plane: int, dim: int) -> list[float]:
@@ -228,22 +228,18 @@ def _matrix_lit(rows: "list[list[float]]"):
     return F.expr(f"array({body})")
 
 
-def hyperplane_bucket(
-    vec_col, n_planes: int = 12, dim: int = 64, seed: int = 11, cast: bool = True
-):
+def hyperplane_bucket(v, n_planes: int = 12, dim: int = 64, seed: int = 11):
     """Random-hyperplane LSH bucket id: sign pattern of <v, h_i> for n_planes
     deterministic hyperplanes (one array<array<double>> literal). Pure JVM
     expression; per row: n_planes · dim multiply-adds executed by a looped
     higher-order aggregate — NOT unrolled into n_planes·dim codegen nodes
     (the unrolled form produced multi-second janino compiles per table).
 
-    ``cast=False``: the caller passes an ALREADY-double array column. The
-    default in-expression cast is CAPTURED by the per-plane lambda and
-    re-evaluated once per plane (no CSE across higher-order functions —
-    measured ~1.3x on the bucketing stage at 16 planes x 4 tables); the DF
-    entry points pre-materialize the cast behind a Generate barrier
-    (``_pre_double``) and pass cast=False."""
-    v = _as_double(vec_col) if cast else vec_col
+    ``v`` must be an ALREADY-double array column: a cast inside the
+    expression would be CAPTURED by the per-plane lambda and re-evaluated
+    once per plane (no CSE across higher-order functions — measured ~1.3x on
+    the bucketing stage at 16 planes x 4 tables), so callers materialize the
+    cast behind a Generate barrier first (``_pre_double``)."""
     planes = _matrix_lit([_plane_components(seed, p, dim) for p in range(n_planes)])
     return F.aggregate(
         planes,
@@ -270,18 +266,22 @@ def _pre_double(df: DataFrame, vec_col: str, *keep) -> DataFrame:
     )
 
 
+def _table_buckets(n_planes: int, n_tables: int, dim: int) -> list:
+    """Per-table hyperplane buckets of the ``_pre_double`` column ``__v``."""
+    return [
+        hyperplane_bucket(F.col("__v"), n_planes, dim, seed=11 + 101 * t)
+        for t in range(n_tables)
+    ]
+
+
 def _probe_membership(
-    df: DataFrame,
-    id_col: str,
-    id_alias: str,
-    table_buckets: list,
-    n_planes: int,
+    df: DataFrame, id_col: str, table_buckets: list, n_planes: int
 ) -> DataFrame:
-    """(id_alias, bucket) membership rows with Hamming-1 probing — the ONE
+    """(id_col, bucket) membership rows with Hamming-1 probing — the ONE
     construction behind both ``lsh_topk`` (query side) and
     ``embedding_dedup_pairs`` (every vector). ``df`` is ``_pre_double``-
     prepared (id column already aliased, ``__v`` double vector) and
-    ``table_buckets`` reference ``__v`` with cast=False. Each row's base
+    ``table_buckets`` come from ``_table_buckets``. Each row's base
     bucket per table is computed ONCE (n_tables hyperplane aggregates
     materialized through the Generate, which projection collapse cannot
     cross); the
@@ -305,10 +305,10 @@ def _probe_membership(
         ),
     )
     return (
-        df.select(F.col(id_col).alias(id_alias), tb)
-        .select(id_alias, F.col("tb.t").alias("t"), F.explode(probe_arr).alias("pb"))
+        df.select(id_col, tb)
+        .select(id_col, F.col("tb.t").alias("t"), F.explode(probe_arr).alias("pb"))
         .select(
-            id_alias,
+            id_col,
             (F.col("pb").cast("long") + F.col("t").cast("long") * F.lit(1 << 32)).alias(
                 "bucket"
             ),
@@ -336,11 +336,8 @@ def lsh_topk(
     _check_dim(corpus, vec_col, dim, "lsh_topk(corpus)")
     _check_dim(queries, vec_col, dim, "lsh_topk(queries)")
     # double-cast materialized once per row behind a Generate (_pre_double);
-    # the per-plane lambdas then reference a cheap attribute (cast=False)
-    table_buckets = [
-        hyperplane_bucket(F.col("__v"), n_planes, dim, seed=11 + 101 * t, cast=False)
-        for t in range(n_tables)
-    ]
+    # the per-plane lambdas then reference a cheap attribute
+    table_buckets = _table_buckets(n_planes, n_tables, dim)
     # bucket ids offset per table so one join column serves all tables.
     # IDS-ONLY through the bucket join and the dedup: a corpus vector hit in
     # several tables/probes must not drag its double-array through the
@@ -354,7 +351,6 @@ def lsh_topk(
     )
     q = _probe_membership(
         _pre_double(queries, vec_col, F.col(query_id_col).alias("query_id")),
-        "query_id",
         "query_id",
         table_buckets,
         n_planes,
@@ -373,22 +369,24 @@ def lsh_topk(
         .join(F.broadcast(qvecs), "query_id")
         .select("query_id", "vec_id", cosine(F.col("qv"), F.col("cv")).alias("sim"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
-
-
-def _centroid_lit(cents: "list[list[float]]"):
-    return _matrix_lit(cents)
+    return _topk(scored, k)
 
 
 def _cell_of(vec_col, cents: "list[list[float]]"):
     """1-based index of the max-cosine centroid (first index on ties)."""
-    sims = F.transform(_centroid_lit(cents), lambda ct: cosine(vec_col, ct))
+    sims = F.transform(_matrix_lit(cents), lambda ct: cosine(vec_col, ct))
     return F.array_position(sims, F.array_max(sims)).cast("int")
+
+
+def _assign_cells(
+    corpus: DataFrame, cents: "list[list[float]]", id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_id, cv, cell): each corpus vector as doubles + its IVF cell."""
+    return corpus.select(
+        F.col(id_col).alias("vec_id"),
+        _as_double(F.col(vec_col)).alias("cv"),
+        _cell_of(_as_double(F.col(vec_col)), cents).alias("cell"),
+    )
 
 
 def kmeans_centroids(
@@ -485,21 +483,12 @@ def ivf_topk(
     cents = kmeans_centroids(
         corpus, n_cells, iters, id_col, vec_col, dim, train_fraction
     )
-    cells = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-        _cell_of(_as_double(F.col(vec_col)), cents).alias("cell"),
-    )
+    cells = _assign_cells(corpus, cents, id_col, vec_col)
     q = _probed_queries(queries, cents, nprobe, query_id_col, vec_col)
     scored = cells.join(F.broadcast(q), "cell").select(
         "query_id", "vec_id", cosine(F.col("qv"), F.col("cv")).alias("sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+    return _topk(scored, k)
 
 
 def _probed_queries(
@@ -509,7 +498,7 @@ def _probed_queries(
     """(query_id, qv, cell): one row per (query, probed cell) — the
     top-nprobe cells by centroid cosine (argsort desc, index asc ties)."""
     _check_dim(queries, vec_col, len(cents[0]), "ivf probe (queries vs quantizer)")
-    sims = F.transform(_centroid_lit(cents), lambda ct: cosine(F.col("qv"), ct))
+    sims = F.transform(_matrix_lit(cents), lambda ct: cosine(F.col("qv"), ct))
     ranked = F.array_sort(
         F.transform(
             sims, lambda s, i: F.struct((-s).alias("negs"), (i + 1).cast("int").alias("cell"))
@@ -544,11 +533,7 @@ def ivf_index_write(
     (asserted on the plan by
     ``tests/test_similarity.py::test_ivf_indexed_partition_pruning``)."""
     cents = kmeans_centroids(corpus, n_cells, iters, id_col, vec_col, dim, train_fraction)
-    cells = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-        _cell_of(_as_double(F.col(vec_col)), cents).alias("cell"),
-    )
+    cells = _assign_cells(corpus, cents, id_col, vec_col)
     # one writer task per cell: without this, every upstream partition
     # writes a sliver into every cell directory (partitions x n_cells tiny
     # files — 256 at the bench shape), slowing both the write and every
@@ -605,12 +590,7 @@ def ivf_topk_indexed(
     scored = cells.join(F.broadcast(q), "cell").select(
         "query_id", "vec_id", cosine(F.col("qv"), F.col("cv")).alias("sim")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
+    return _topk(scored, k)
 
 
 def embedding_dedup_pairs(
@@ -646,27 +626,19 @@ def embedding_dedup_pairs(
     bucket explosion. Buckets larger than ``max_bucket`` are dropped (a
     degenerate hub bucket would create an O(k²) pair set; raise the cap or
     add planes if the corpus is dense)."""
-    from .dedup import _pairs_from_buckets
+    from .dedup import _pairs_from_buckets, _with_pair_values
 
     _check_dim(df, vec_col, dim, "embedding_dedup_pairs")
-    table_buckets = [
-        hyperplane_bucket(F.col("__v"), n_planes, dim, seed=11 + 101 * t, cast=False)
-        for t in range(n_tables)
-    ]
     mem = _probe_membership(
         _pre_double(df, vec_col, F.col(id_col).alias("id")),
         "id",
-        "id",
-        table_buckets,
+        _table_buckets(n_planes, n_tables, dim),
         n_planes,
     )
     cands = _pairs_from_buckets(mem, "bucket", max_bucket)
     vecs = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-    a = vecs.select(F.col("id").alias("__ia"), F.col("v").alias("va"))
-    b = vecs.select(F.col("id").alias("__ib"), F.col("v").alias("vb"))
     return (
-        cands.join(a, F.col("id") == F.col("__ia"))
-        .join(b, F.col("rid") == F.col("__ib"))
+        _with_pair_values(cands, vecs, "v", "va", "vb")
         .select(
             F.col("id").alias("id_a"),
             F.col("rid").alias("id_b"),

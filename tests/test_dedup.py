@@ -92,8 +92,8 @@ def test_simhash_pairs_find_exact_dups(spark, docs):
 
 
 def test_simhash_is_deterministic(spark, docs):
-    a = docs.limit(50).select("doc_id", dedup.simhash64(F.col("text")).alias("h")).collect()
-    b = docs.limit(50).select("doc_id", dedup.simhash64(F.col("text")).alias("h")).collect()
+    a = dedup.simhash_df(docs.limit(50)).collect()
+    b = dedup.simhash_df(docs.limit(50)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -162,35 +162,6 @@ def test_simhash_block_combination_recall_edge():
             assert s2 == s1 + w1  # contiguous, no overlap
 
 
-def test_simhash_pairs_equal_under_block_schemes(spark):
-    """The minimal d+1-chunk split (n_blocks=4) and the default combination
-    scheme (n_blocks=6, 20 keys) are both recall-lossless, so the PAIR SET
-    must be identical — only the candidate volume differs."""
-    from dlp_dataflow_deidentification_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta token{i % 7} "
-             f"word{i % 3} extra{i % 11} tail") for i in range(120)]
-        + [(1000 + i, f"alpha beta gamma delta epsilon zeta token{i % 7} "
-                      f"word{i % 3} extra{i % 11} tails") for i in range(40)],
-        "doc_id long, text string",
-    )
-    a = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_pairs(docs, max_hamming=3, n_blocks=4).collect()
-    }
-    b = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in dedup.simhash_pairs(docs, max_hamming=3).collect()
-    }
-    assert a == b and len(a) > 0
-
-    import pytest
-
-    with pytest.raises(ValueError, match="n_blocks"):
-        dedup.simhash_pairs(docs, max_hamming=3, n_blocks=3)
-
-
 def test_simhash_pairs_match_brute_force_hamming_truth(spark):
     """Ground-truth recall: the candidate machinery (whatever the key
     scheme) must reproduce the BRUTE-FORCE all-pairs hamming<=d set computed
@@ -219,9 +190,9 @@ def test_simhash_pairs_match_brute_force_hamming_truth(spark):
 
 
 def test_simhash_pairs_full_fingerprint_block(spark):
-    """max_hamming=0 with n_blocks=1 buckets on the FULL 64-bit fingerprint
-    (the exact-dup-by-fingerprint config): the all-ones mask must not
-    overflow the long literal, and output = pairs with identical simhash."""
+    """max_hamming=0 keys each doc on ONE combination of all its blocks —
+    the FULL 64-bit fingerprint (the exact-dup-by-fingerprint config):
+    output = pairs with identical simhash."""
     from dlp_dataflow_deidentification_spark.operators import dedup
 
     docs = spark.createDataFrame(
@@ -229,7 +200,7 @@ def test_simhash_pairs_full_fingerprint_block(spark):
         "doc_id long, text string",
     )
     got = {(r.id_a, r.id_b) for r in dedup.simhash_pairs(
-        docs, max_hamming=0, n_blocks=1).collect()}
+        docs, max_hamming=0).collect()}
     assert got == {(1, 2)}
 
 
@@ -243,25 +214,38 @@ def test_lsh_bands_must_divide_num_hashes(spark, docs):
         dedup.minhash_dedup_pairs(docs, num_hashes=64, bands=48)
 
 
-def test_adhoc_shingles_match_shingle_df_on_padded_text(spark):
-    """shingles() (ad-hoc column form) must agree with shingle_df on texts
-    with leading/trailing whitespace: phantom empty split tokens previously
-    corrupted gram text and defeated the short-doc gate."""
-    df = spark.createDataFrame(
-        [(1, "  alpha beta gamma delta "), (2, " single "), (3, "a b")],
-        "doc_id long, text string",
-    )
-    adhoc = {
-        r.doc_id: sorted(r.sh)
-        for r in df.select("doc_id", dedup.shingles(F.col("text"), n=2).alias("sh")).collect()
-    }
-    viadf = {
-        r.id: sorted(r.sh)
-        for r in dedup.shingle_df(df, shingle_n=2, hashed=False).collect()
-    }
-    assert adhoc[1] == viadf[1] and adhoc[3] == viadf[3]
-    # 1-word doc: no 2-grams from either form
-    assert adhoc[2] == [] and 2 not in viadf
+def test_shingle_df_on_padded_text(spark):
+    """shingle_df on texts with leading/trailing whitespace equals the
+    xxhash64 of word n-grams built in Python from the non-empty tokens:
+    phantom empty split tokens previously corrupted gram text and defeated
+    the short-doc gate."""
+    texts = {1: "  alpha beta gamma delta ", 2: " single ", 3: "a b"}
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    grams = [
+        (i, " ".join(ws[j:j + 2]))
+        for i, t in texts.items()
+        for ws in [t.split()]
+        for j in range(len(ws) - 1)
+    ]
+    want = {}
+    for r in spark.createDataFrame(grams, "id long, g string").select(
+        "id", F.xxhash64("g").alias("h")
+    ).collect():
+        want.setdefault(r.id, set()).add(r.h)
+    got = {r.id: sorted(r.sh) for r in dedup.shingle_df(df, shingle_n=2).collect()}
+    assert got == {i: sorted(hs) for i, hs in want.items()}
+    assert len(got[1]) == 3 and len(got[3]) == 1
+    # 1-word doc: no 2-grams, so the row drops out
+    assert 2 not in got
+
+
+def test_dedup_operators_leave_input_partitioning_alone(spark, docs):
+    """Input fan-out is the caller's decision: on a 1-partition input the
+    shingle-based operators must not plan their own round-robin exchange."""
+    one = docs.limit(40).coalesce(1)
+    for df in [dedup.minhash_dedup_pairs(one), dedup.ngram_jaccard_pairs(one)]:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan, plan[:2000]
 
 
 def test_exact_dedup_ignores_edge_whitespace(spark):

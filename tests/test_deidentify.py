@@ -333,13 +333,12 @@ def test_envelope_wrapped_template_is_not_a_silent_noop(spark):
 def test_inspect_cap_truncates_in_position_order(spark):
     """DLP's maxFindingsPerItem keeps the first N findings in DOCUMENT
     position order — a later detector whose match appears earlier in the
-    text must win over an earlier detector's later match. findings_order=
-    'detector' keeps the legacy (column, detector-config, position) rule."""
+    text must win over an earlier detector's later match."""
     import dlp_dataflow_deidentification_spark as dds
 
     # EMAIL appears at offset 21, SSN at offset 0 and 40; detector order
-    # lists EMAIL first. Position cap=2 → SSN@0, EMAIL@21. Detector-order
-    # cap=2 → EMAIL@21, SSN@0 (by config order).
+    # lists EMAIL first. Position cap=2 → SSN@0, EMAIL@21; cap=1 → SSN@0,
+    # where a detector-config-order cap would keep EMAIL@21.
     df = spark.createDataFrame(
         [(1, "123-45-6789 and then a@b.com and later 987-65-4321")], "id int, t string"
     )
@@ -347,20 +346,8 @@ def test_inspect_cap_truncates_in_position_order(spark):
 
     pos = dds.inspect(df, dets, ["t"], id_columns=["id"], max_findings_per_item=2)
     assert sorted(r.quote for r in pos.collect()) == ["123-45-6789", "a@b.com"]
-
-    legacy = dds.inspect(
-        df, dets, ["t"], id_columns=["id"], max_findings_per_item=2,
-        findings_order="detector",
-    )
-    assert sorted(r.quote for r in legacy.collect()) == ["123-45-6789", "a@b.com"]
-    # with cap=1 the two rules actually diverge
     pos1 = dds.inspect(df, dets, ["t"], id_columns=["id"], max_findings_per_item=1)
     assert [r.quote for r in pos1.collect()] == ["123-45-6789"]
-    leg1 = dds.inspect(
-        df, dets, ["t"], id_columns=["id"], max_findings_per_item=1,
-        findings_order="detector",
-    )
-    assert [r.quote for r in leg1.collect()] == ["a@b.com"]
 
     # offsets path agrees with the native path under the position rule
     off1 = dds.inspect_offsets(
