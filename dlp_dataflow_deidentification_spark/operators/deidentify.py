@@ -104,24 +104,31 @@ def reidentify(
     re-identify-config.config:8-27; output table suffix `_re_id`,
     common/DLPTransform.java:196-197). ``strict=False`` nulls corrupt tokens
     instead of failing (pair with plans.pipeline.split_malformed for the
-    error-table side output) — honored on BOTH cipher paths. ``mode``
+    error-table side output) — honored on every cipher path. ``mode``
     defaults to "siv", matching the template compiler's
     cryptoDeterministicConfig default (plans.config deterministic_mode), so
     an omitted-mode deid→reid pair round-trips; pass ``mode="ecb"`` only for
     tokens minted by the explicit ECB opt-in path, ``mode="ffx"`` (with
     ``alphabet``/``context`` matching the deid template's
-    cryptoReplaceFfxFpeConfig) for format-preserving FF1 tokens."""
-    if mode not in ("siv", "ecb", "ffx"):
-        raise ValueError(f"mode must be 'siv', 'ecb', or 'ffx', got {mode!r}")
+    cryptoReplaceFfxFpeConfig) for format-preserving FF1 tokens, and
+    ``mode="inline"`` for free text whose per-finding SIV tokens sit in
+    ``surrogate_info_type(len):token`` envelopes (functions/findings.py;
+    ``strict=False`` leaves a corrupt envelope in the text)."""
+    if mode not in ("siv", "ecb", "ffx", "inline"):
+        raise ValueError(f"mode must be 'siv', 'ecb', 'ffx', or 'inline', got {mode!r}")
+    if mode == "inline" and not surrogate_info_type:
+        raise ValueError(
+            "mode='inline' needs a surrogate_info_type — inline envelopes "
+            "are unfindable without the name"
+        )
     out = df
     for name in columns:
-        if mode == "siv":
-            from ..functions import crypto
+        if mode in ("siv", "inline"):
+            from ..functions import crypto, findings
             from ..plans.config import derive_siv_key
 
-            col = crypto.siv_reidentify(
-                out[name], derive_siv_key(key), surrogate_info_type, strict
-            )
+            dec = findings.reidentify_text if mode == "inline" else crypto.siv_reidentify
+            col = dec(out[name], derive_siv_key(key), surrogate_info_type, strict)
         elif mode == "ffx":
             from ..functions import fpe
 

@@ -328,7 +328,7 @@ class DeidTemplate:
                         )
                     for f_ in fields_ or []:
                         # streaming/batch reid auto-discovers the envelope
-                        # name per column from here (jobs.py inline mode)
+                        # name per column from here (plans.pipeline.apply_method)
                         out.surrogates[f_] = sur
                     repl = findings.siv_repl(derive_siv_key(k), sur)
                     out.transformations.append(

@@ -12,25 +12,32 @@ One declarative spec replaces the reference's pipeline-options surface:
       "template": <path or dict>,            # deid/inspect template
       "reid_columns": [...],                 # reid mode
       "text_columns": [...],                 # inspect mode
+      "crypto_mode": "siv|ecb|ffx|inline",   # cipher (deid: siv|ecb)
+      "surrogate_info_type": ...,            # reid envelope override
+      "strict": true,                        # reid: false nulls bad tokens
+      "required_columns": [...],             # null cell → error_path
       "sink": {"path": ..., "format": "parquet|csv|text",
                 "partition_by_source": true},
       "error_path": ...,                     # malformed-record side output
       "num_shards": 0,                       # conv-id salt (hot keys)
     }
 
-Batch and streaming share the same transform graph; streaming adds the
-exactly-once ledger sink and a checkpoint (streaming/jobs.py).
+Batch and streaming share the same transform graph: ``run_batch`` and
+``streaming.jobs.StreamingDeidJob.transformed`` both call ``apply_method``,
+the one DLP method switch; streaming adds the exactly-once ledger sink, a
+dead-letter leg and a checkpoint (streaming/jobs.py).
 """
 from __future__ import annotations
 
+import re
 import time
-from typing import Any
+from typing import Any, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.deidentify import deidentify, reidentify
-from ..operators.inspect import inspect
+from ..operators.inspect import inspect, inspect_offsets
 from ..operators.skew import salted_repartition
 from ..sources import files
 from .config import DeidTemplate, InspectConfig
@@ -94,6 +101,98 @@ def split_malformed(df: DataFrame, required: list[str]) -> tuple[DataFrame, Data
     return good, errors
 
 
+def apply_method(
+    df: DataFrame,
+    mode: str,
+    template: "DeidTemplate | None",
+    *,
+    text_columns: Sequence[str] = (),
+    id_columns: Sequence[str] = (),
+    inspect_config: "InspectConfig | None" = None,
+    reid_columns: Sequence[str] = (),
+    crypto_key: "str | None" = None,
+    crypto_mode: str = "siv",
+    surrogate_info_type: "str | None" = None,
+    strict: bool = True,
+    dead_letter: bool = False,
+) -> DataFrame:
+    """THE DLP method switch (DLPTextToBigQueryStreamingV2.java:94-108),
+    shared by ``run_batch`` and ``StreamingDeidJob.transformed``.
+
+    - "deid": ``deidentify`` with ``template``. ``dead_letter`` adds a
+      ``__dead`` column flagging rows with a null ``text_columns`` cell,
+      like a malformed CSV record in the reference's reader.
+    - "inspect": findings over ``text_columns`` keyed by ``id_columns``,
+      with ``inspect_config`` (None = the template's detectors). A ruleSet
+      that needs finding offsets (hotwordRule, excludeInfoTypes,
+      excludeByHotword) runs on ``inspect_offsets``; quote-only configs stay
+      on the JVM-native ``inspect``.
+    - "reid": ``reidentify`` each of ``reid_columns`` in ``crypto_mode``,
+      stripping ``surrogate_info_type`` or, when None, the envelope the
+      template minted for that column (an enveloped token fed raw to the
+      cipher never decodes). ``dead_letter`` decodes tolerantly (``strict``
+      is then ignored) and flags ``__dead`` rows: a cell that decodes to
+      null, or in inline mode an envelope left in the text. Dead rows keep
+      their original tokens, so the error table carries the evidence.
+    """
+    if mode == "deid":
+        if dead_letter:
+            # isNull is never null, and the lit(False) seed keeps an empty
+            # text_columns well-defined: nothing is ever dead
+            dead = F.lit(False)
+            for c in text_columns:
+                dead = dead | F.col(c).isNull()
+            df = df.withColumn("__dead", dead)
+        return deidentify(df, template)
+    if mode == "inspect":
+        ic = inspect_config
+        if ic is None:
+            return inspect(df, template.detectors, list(text_columns), id_columns=list(id_columns))
+        needs_offsets = any(
+            rs.hotwords
+            or any(ex.exclude_info_types is not None or ex.hotword is not None for ex in rs.exclusions)
+            for rs in ic.rule_sets
+        )
+        return (inspect_offsets if needs_offsets else inspect)(
+            df,
+            ic.detectors,
+            list(text_columns),
+            id_columns=list(id_columns),
+            min_likelihood=ic.min_likelihood,
+            include_quote=ic.include_quote,
+            max_findings_per_item=ic.max_findings_per_item,
+            rule_sets=ic.rule_sets,
+        )
+    if mode != "reid":
+        raise ValueError(f"unknown mode {mode!r}")
+    if not crypto_key:
+        raise ValueError("mode='reid' requires an explicit crypto_key")
+    surrogates = {
+        c: surrogate_info_type or (template.surrogates.get(c) if template is not None else None)
+        for c in reid_columns
+    }
+    if not dead_letter:
+        for c, sur in surrogates.items():
+            df = reidentify(df, [c], crypto_key, sur, strict, crypto_mode)
+        return df
+    # decode into __dec_<c> copies: the predicate reads each materialized
+    # decode (a pandas UDF on the SIV paths) instead of re-running it
+    dead = F.lit(False)
+    for c, sur in surrogates.items():
+        dec = f"__dec_{c}"
+        df = reidentify(df.withColumn(dec, F.col(c)), [dec], crypto_key, sur, False, crypto_mode)
+        if crypto_mode == "inline":
+            residual = F.col(dec).rlike(re.escape(sur) + r"\([0-9]+\):")
+            dead = dead | F.coalesce(residual, F.lit(False))
+        else:
+            dead = dead | (F.col(c).isNotNull() & F.col(dec).isNull())
+    df = df.withColumn("__dead", dead)
+    for c in surrogates:
+        dec = f"__dec_{c}"
+        df = df.withColumn(c, F.when(F.col("__dead"), F.col(c)).otherwise(F.col(dec))).drop(dec)
+    return df
+
+
 def run_batch(spark: SparkSession, spec: dict[str, Any], crypto_key: "str | None" = None) -> dict:
     """Execute a batch pipeline spec; returns row-count metrics (the
     reference's numberOfRowsRead / numberOfRowsDeidentified counters).
@@ -132,46 +231,26 @@ def run_batch(spark: SparkSession, spec: dict[str, Any], crypto_key: "str | None
     # default is now "siv", and SIV-decrypting ECB tokens fails per token
     # (strict) or NULLs/dead-letters every row (tolerant).
     crypto_mode = spec.get("crypto_mode", "siv")
-    if mode == "deid":
-        out = deidentify(
-            df,
-            load_template(spec["template"], crypto_key, crypto_mode),
-        )
-    elif mode == "reid":
-        if not crypto_key:
-            raise ValueError("mode='reid' requires an explicit crypto_key")
-        # full reid surface: surrogate_info_type strips the template's
-        # "NAME(len):" envelope (without it, enveloped tokens are
-        # undecryptable); strict=False routes corrupt tokens to NULL
-        out = reidentify(
-            df,
-            spec["reid_columns"],
-            crypto_key,
-            surrogate_info_type=spec.get("surrogate_info_type"),
-            strict=spec.get("strict", True),
-            mode=crypto_mode,
-        )
-    elif mode == "inspect":
-        ids = [files.SOURCE_KEY_COL] if files.SOURCE_KEY_COL in df.columns else []
-        icfg = _maybe_inspect_config(spec["template"])
-        if icfg is not None:
-            out = inspect(
-                df,
-                icfg.detectors,
-                spec["text_columns"],
-                id_columns=ids,
-                min_likelihood=icfg.min_likelihood,
-                include_quote=icfg.include_quote,
-                max_findings_per_item=icfg.max_findings_per_item,
-            )
-        else:  # a deid template: inspect with its referenced detectors
-            # honor the spec's crypto_mode here too: inspection only needs
-            # the detector list, but compiling with the wrong cipher mode
-            # can raise (e.g. SIV default without the cryptography wheel)
-            template = load_template(spec["template"], crypto_key, crypto_mode)
-            out = inspect(df, template.detectors, spec["text_columns"], id_columns=ids)
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
+    icfg = _maybe_inspect_config(spec["template"]) if mode == "inspect" else None
+    template = None
+    if icfg is None and spec.get("template") is not None:
+        # a reid spec reads only the envelopes its template minted; ffx and
+        # inline are reid-only ciphers, so it compiles with the SIV default
+        det_mode = "siv" if mode == "reid" and crypto_mode in ("ffx", "inline") else crypto_mode
+        template = load_template(spec["template"], crypto_key, det_mode)
+    out = apply_method(
+        df,
+        mode,
+        template,
+        text_columns=spec["text_columns"] if mode == "inspect" else (),
+        id_columns=[files.SOURCE_KEY_COL] if files.SOURCE_KEY_COL in df.columns else [],
+        inspect_config=icfg,
+        reid_columns=spec["reid_columns"] if mode == "reid" else (),
+        crypto_key=crypto_key,
+        crypto_mode=crypto_mode,
+        surrogate_info_type=spec.get("surrogate_info_type"),
+        strict=spec.get("strict", True),
+    )
 
     if spec.get("num_shards"):
         out = salted_repartition(out, spec.get("shard_key", files.SOURCE_KEY_COL), spec["num_shards"])

@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 from ..operators.deidentify import deidentify
 from ..operators.skew import salted_repartition
 from ..plans.config import DeidTemplate
+from ..plans.pipeline import apply_method
 from .sink import IdempotentBatchSink
 
 ROCKSDB_STATE_PROVIDER = (
@@ -120,9 +121,9 @@ def deid_sessions_stream(
 class StreamingDeidJob:
     """Streaming pipeline: source → INSPECT/DEID/REID → exactly-once sink.
 
-    ``mode`` mirrors the reference's DLPMethod switch
-    (DLPTextToBigQueryStreamingV2.java:94-108): "deid" (default), "inspect"
-    (findings stream), or "reid" (detokenize ``reid_columns``)."""
+    ``mode`` is the reference's DLPMethod switch: "deid" (default),
+    "inspect" (findings stream) or "reid" (detokenize ``reid_columns``),
+    run by ``plans.pipeline.apply_method``, the step batch runs too."""
 
     spark: SparkSession
     template: DeidTemplate
@@ -134,17 +135,18 @@ class StreamingDeidJob:
     mode: str = "deid"
     text_columns: tuple = ("text",)
     # optional full InspectConfig for mode="inspect" (detectors +
-    # minLikelihood/includeQuote/limits + quote-scoped ruleSet exclusions —
-    # the native streaming path; offset-dependent rules raise, as in batch
-    # inspect). None = the deid template's detectors, the historical default
+    # minLikelihood/includeQuote/limits + ruleSet; quote-only rules run on
+    # the native path, offset-dependent ones on inspect_offsets, as in batch
+    # — plans.pipeline.apply_method). None = the deid template's detectors
     inspect_config: "object | None" = None
     reid_columns: tuple = ("text",)
     # no default key on purpose: reid mode raises without an explicit key
     # (a shared hardcoded key would make every deployment's tokens public)
     crypto_key: "str | None" = None
-    # cipher for reid mode — "siv" (the template compiler's
-    # cryptoDeterministicConfig default, so an omitted-mode deid→reid pair
-    # round-trips in streaming too) or "ecb" for the explicit opt-in path
+    # cipher for reid mode, any operators.deidentify.reidentify mode — "siv"
+    # (the template compiler's cryptoDeterministicConfig default, so an
+    # omitted-mode deid→reid pair round-trips in streaming too), "ecb" for
+    # the explicit opt-in path, "ffx" or "inline" (free-text envelopes)
     crypto_mode: str = "siv"
     # surrogate envelope override for reid mode; None = use the envelope the
     # TEMPLATE minted for each column (template.surrogates) — tokens written
@@ -169,129 +171,19 @@ class StreamingDeidJob:
         # numberOfRowsRead counter analogue (reference:
         # DLPTextToBigQueryStreaming.java:683-686) — per-batch observed metric
         df = df.observe("reader", F.count(F.lit(1)).alias("rows_read"))
-        route_errors = bool(self.error_output_dir)
-        if self.mode == "deid":
-            if route_errors:  # null payload cells → dead-letter, like a
-                # malformed CSV record in the reference's reader (isNull is
-                # never null, and the lit(False) seed keeps an empty
-                # text_columns tuple well-defined: nothing is ever dead)
-                dead = F.lit(False)
-                for c in self.text_columns:
-                    dead = dead | F.col(c).isNull()
-                df = df.withColumn("__dead", dead)
-            out = deidentify(df, self.template)
-        elif self.mode == "inspect":
-            from ..operators.inspect import inspect, inspect_offsets
-
-            ic = self.inspect_config
-            # offset-dependent rules (hotwordRule, excludeInfoTypes,
-            # excludeByHotword) route to the pandas offsets path — it works
-            # in foreachBatch/streaming the same as batch; quote-only
-            # configs stay on the JVM-native path
-            needs_offsets = ic is not None and any(
-                rs.hotwords
-                or any(
-                    ex.exclude_info_types is not None or ex.hotword is not None
-                    for ex in rs.exclusions
-                )
-                for rs in ic.rule_sets
-            )
-            op = inspect_offsets if needs_offsets else inspect
-            out = op(
-                df,
-                ic.detectors if ic is not None else self.template.detectors,
-                list(self.text_columns),
-                id_columns=["conv_id", "turn_idx", "ts"],
-                **(
-                    dict(
-                        min_likelihood=ic.min_likelihood,
-                        include_quote=ic.include_quote,
-                        max_findings_per_item=ic.max_findings_per_item,
-                        rule_sets=ic.rule_sets,
-                    )
-                    if ic is not None
-                    else {}
-                ),
-            )
-        elif self.mode == "reid":
-            import re as _re
-
-            from ..functions import transforms
-
-            if not self.crypto_key:
-                raise ValueError("mode='reid' requires an explicit crypto_key")
-            if self.crypto_mode not in ("siv", "ecb", "inline"):
-                raise ValueError(
-                    f"crypto_mode must be 'siv', 'ecb', or 'inline', got {self.crypto_mode!r}"
-                )
-            if self.crypto_mode in ("siv", "inline"):
-                from ..plans.config import derive_siv_key
-
-                siv_key = derive_siv_key(self.crypto_key)
-            out = df
-            inline_surs = {}
-            for c in self.reid_columns:
-                # strip the envelope the template minted for this column
-                # ("NAME(len):token") or an explicit job-level override —
-                # an enveloped token fed raw to the cipher can never decode
-                sur = self.surrogate_info_type or self.template.surrogates.get(c)
-                if self.crypto_mode == "inline":
-                    # free-text surrogate reid: decrypt NAME(len):token
-                    # envelopes IN PLACE (tokens minted by the per-finding
-                    # cryptoDeterministicConfig path, functions/findings.py)
-                    from ..functions import findings as fnd
-
-                    if not sur:
-                        raise ValueError(
-                            "crypto_mode='inline' needs a surrogate_info_type "
-                            "(job-level or minted by the template) — inline "
-                            "envelopes are unfindable without the name"
-                        )
-                    inline_surs[c] = sur
-                    dec = fnd.reidentify_text(
-                        out[c], siv_key, sur, strict=not route_errors
-                    )
-                elif self.crypto_mode == "siv":
-                    from ..functions import crypto
-
-                    dec = crypto.siv_reidentify(
-                        out[c], siv_key, sur, strict=not route_errors
-                    )
-                else:
-                    dec = transforms.crypto_reidentify(
-                        out[c], self.crypto_key, sur, strict=not route_errors
-                    )
-                out = out.withColumn(f"__dec_{c}", dec)
-            if route_errors:
-                # dead derived from the MATERIALIZED __dec_<c> columns: the
-                # decrypt (a pandas UDF on the SIV path) is evaluated once
-                # per column, not re-run inside the predicate. Cell modes
-                # null the cell on a corrupt token; inline mode LEAVES the
-                # corrupt envelope in the text, so dead = residual envelope
-                dead = F.lit(False)
-                for c in self.reid_columns:
-                    if self.crypto_mode == "inline":
-                        residual = _re.escape(inline_surs[c]) + r"\([0-9]+\):"
-                        dead = dead | F.coalesce(
-                            F.col(f"__dec_{c}").rlike(residual), F.lit(False)
-                        )
-                    else:
-                        dead = dead | (
-                            F.col(c).isNotNull() & F.col(f"__dec_{c}").isNull()
-                        )
-                out = out.withColumn("__dead", dead)
-            for c in self.reid_columns:
-                # dead rows keep their original (undecodable) token so the
-                # error table carries the evidence, like the reference's
-                # error_log payload
-                val = (
-                    F.when(F.col("__dead"), F.col(c)).otherwise(F.col(f"__dec_{c}"))
-                    if route_errors
-                    else F.col(f"__dec_{c}")
-                )
-                out = out.withColumn(c, val).drop(f"__dec_{c}")
-        else:
-            raise ValueError(f"unknown mode {self.mode!r}")
+        out = apply_method(
+            df,
+            self.mode,
+            self.template,
+            text_columns=self.text_columns,
+            id_columns=("conv_id", "turn_idx", "ts"),
+            inspect_config=self.inspect_config,
+            reid_columns=self.reid_columns,
+            crypto_key=self.crypto_key,
+            crypto_mode=self.crypto_mode,
+            surrogate_info_type=self.surrogate_info_type,
+            dead_letter=bool(self.error_output_dir),
+        )
         if self.num_shards:
             out = salted_repartition(out, "conv_id", self.num_shards, "turn_idx")
         return out

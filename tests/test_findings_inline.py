@@ -113,6 +113,11 @@ def test_inline_siv_tokenize_then_reidentify_text_roundtrip(spark):
     ).collect()
     for r in back:
         assert r.back == r.t
+    # the operator's inline mode is the same decode
+    op = dds.reidentify(tok, ["tok"], KEY, surrogate_info_type="EMAIL_TOKEN", mode="inline")
+    assert [(r.t, r.tok) for r in op.collect()] == [(r.t, r.back) for r in back]
+    with pytest.raises(ValueError, match="surrogate_info_type"):
+        dds.reidentify(tok, ["tok"], KEY, mode="inline")
 
 
 @pytest.mark.skipif(not crypto.HAVE_AESSIV, reason="needs cryptography")

@@ -146,3 +146,113 @@ def test_text_sink_lines(spark, csv_dir, tmp_path):
     )
     lines = [r.value for r in spark.read.text(f"{out}/source_key=accounts_a").collect()]
     assert any(l.startswith("1|***-**-6781|") for l in lines)
+
+
+def _inspect_template(rules):
+    return {
+        "inspectTemplate": {
+            "inspectConfig": {
+                "infoTypes": [{"name": "EMAIL_ADDRESS"}],
+                "ruleSet": [{"infoTypes": [{"name": "EMAIL_ADDRESS"}], "rules": rules}],
+            }
+        }
+    }
+
+
+def test_batch_inspect_honours_rule_set(spark, tmp_path):
+    """Batch inspect applies the template's ruleSet like streaming does:
+    a quote-only exclusion on the native path, a hotword rule (needs
+    finding offsets) on inspect_offsets."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "m.csv").write_text(
+        "id,notes\n"
+        "1,write user2@example.com\n"
+        "2,work email user3@example.com\n"
+        "3,write user5@example.com\n"
+    )
+    exclude = {
+        "exclusionRule": {
+            "regex": {"pattern": "user[0-9]*[02468]@example\\.com"},
+            "matchingType": "MATCHING_TYPE_FULL_MATCH",
+        }
+    }
+    hotword = {
+        "hotwordRule": {
+            "hotwordRegex": {"pattern": "(?i)work email"},
+            "proximity": {"windowBefore": 20},
+            "likelihoodAdjustment": {"fixedLikelihood": "VERY_LIKELY"},
+        }
+    }
+    got = {}
+    for name, rules in (("native", [exclude]), ("offsets", [exclude, hotword])):
+        out = str(tmp_path / name)
+        pipeline.run_batch(
+            spark,
+            {
+                "source": {"path": str(d), "format": "csv"},
+                "mode": "inspect",
+                "template": _inspect_template(rules),
+                "text_columns": ["notes"],
+                "sink": {"path": out, "format": "parquet"},
+            },
+        )
+        got[name] = {r.quote: r.likelihood for r in spark.read.parquet(out).collect()}
+    for findings in got.values():
+        assert set(findings) == {"user3@example.com", "user5@example.com"}
+    assert got["offsets"]["user3@example.com"] == "VERY_LIKELY"
+    assert got["offsets"]["user5@example.com"] == got["native"]["user5@example.com"]
+    assert got["native"]["user3@example.com"] != "VERY_LIKELY"
+
+
+def test_batch_reid_strips_template_surrogate_envelope(spark, csv_dir, tmp_path):
+    """A reid spec carrying the deid template strips the 'NAME(len):'
+    envelope the template minted (template.surrogates) without a
+    surrogate_info_type key — the batch mirror of
+    test_streaming_reid_strips_template_surrogate_envelope."""
+    from dlp_dataflow_deidentification_spark.functions import crypto
+
+    if not crypto.HAVE_AESSIV:
+        pytest.skip("cryptography wheel absent: AES-SIV path unavailable")
+    key = "0123456789abcdef"
+    template = {
+        "deidentifyConfig": {
+            "recordTransformations": {
+                "fieldTransformations": [
+                    {
+                        "fields": [{"name": "notes"}],
+                        "primitiveTransformation": {
+                            "cryptoDeterministicConfig": {
+                                "surrogateInfoType": {"name": "TOKEN"}
+                            }
+                        },
+                    }
+                ]
+            }
+        }
+    }
+    tok, back = str(tmp_path / "tok"), str(tmp_path / "back")
+    pipeline.run_batch(
+        spark,
+        {
+            "source": {"path": csv_dir, "format": "csv"},
+            "mode": "deid",
+            "template": template,
+            "sink": {"path": tok, "format": "parquet"},
+        },
+        crypto_key=key,
+    )
+    assert all(r.notes.startswith("TOKEN(") for r in spark.read.parquet(tok).collect())
+    pipeline.run_batch(
+        spark,
+        {
+            "source": {"path": tok, "format": "parquet"},
+            "mode": "reid",
+            "template": template,
+            "reid_columns": ["notes"],
+            "sink": {"path": back, "format": "parquet"},
+        },
+        crypto_key=key,
+    )
+    want = {(r.id, r.notes) for r in spark.read.csv(csv_dir, header=True).collect()}
+    assert {(r.id, r.notes) for r in spark.read.parquet(back).collect()} == want
