@@ -12,8 +12,10 @@ beam/BatchRequestForDLP.java, is subsumed by micro-batch execution) →
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -191,28 +193,36 @@ class StreamingDeidJob:
     def _foreach(self):
         """foreachBatch body: one exactly-once sink, or — when a dead-letter
         dir is configured — a success/error fan-out committed under the SAME
-        batch id (both legs replay-idempotent; the reference's TupleTag
-        success/failure side outputs, common/DLPTransform.java:129-154)."""
+        batch id (the reference's TupleTag success/failure side outputs,
+        common/DLPTransform.java:129-154). The legs run at the same time over
+        the one persisted batch: the dead-letter leg on a second Python
+        thread, wrapped in ``inheritable_thread_target`` so its jobs stay in
+        the query's job group (``query.stop()`` cancels them). Both end before
+        ``unpersist``; either one failing fails the micro-batch. Which ledger
+        commits first is unspecified; each leg is still replay-idempotent."""
         main, err = self.sink(), self.error_sink()
+        reason = (
+            "reid: undecodable token"
+            if self.mode == "reid"
+            else "malformed record: required field null"
+        )
 
         def fn(batch_df: DataFrame, batch_id: int) -> None:
             if err is not None and "__dead" in batch_df.columns:
                 batch_df.persist()
+
+                @inheritable_thread_target(batch_df.sparkSession)
+                def err_leg() -> None:
+                    errors = batch_df.filter("__dead").drop("__dead")
+                    err(errors.withColumn("error_message", F.lit(reason)), batch_id)
+
                 try:
-                    main(batch_df.filter(~F.col("__dead")).drop("__dead"), batch_id)
-                    errors = (
-                        batch_df.filter(F.col("__dead"))
-                        .drop("__dead")
-                        .withColumn(
-                            "error_message",
-                            F.lit(
-                                "reid: undecodable token"
-                                if self.mode == "reid"
-                                else "malformed record: required field null"
-                            ),
-                        )
-                    )
-                    err(errors, batch_id)
+                    with ThreadPoolExecutor(1) as pool:
+                        err_done = pool.submit(err_leg)
+                        try:
+                            main(batch_df.filter("NOT __dead").drop("__dead"), batch_id)
+                        finally:
+                            err_done.result()
                 finally:
                     batch_df.unpersist()
             else:

@@ -23,6 +23,10 @@ no object-store GET storm at thousands-of-files batch sizes. (An earlier
 revision re-listed the output directory and read every footer on the
 driver, serial work proportional to files-per-batch.)
 
+The aggregates are built from SQL text (``F.expr``: one py4j call, ~0.3 ms
+each), not from Column-API trees (~5 ms each): they are rebuilt for every
+micro-batch, on the critical path of the sink call.
+
 The commit interface has two implementations (commitlog.py):
 ``LocalFSCommitLog`` (atomic rename; used here) and ``IcebergCommitLog``
 (the object-store-safe cluster form — data + ledger entry in ONE atomic
@@ -52,6 +56,11 @@ def _partition_count(batch_df: DataFrame) -> int:
         return max(1, batch_df.rdd.getNumPartitions())
     except Exception:
         return 1
+
+
+def _quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 @dataclass
@@ -113,34 +122,24 @@ class IdempotentBatchSink:
         pid_col = "_lineage_pid"
         while pid_col in batch_df.columns:
             pid_col += "_"
-        batch_df = batch_df.withColumn(
-            pid_col, F.spark_partition_id() % F.lit(nparts)
-        )
-        pid = F.col(pid_col)
+        batch_df = batch_df.withColumn(pid_col, F.expr(f"spark_partition_id() % {nparts}"))
         obs = Observation(f"lineage_{batch_id}")
-        metrics_exprs = [
-            F.count(F.lit(1)).alias("n_rows"),
+        metrics_sql = [
+            "count(1) AS n_rows",
             # one named conditional-count aggregate per lineage bucket; the
             # modulo also absorbs planned-vs-executed drift (AQE coalesce,
             # runtime re-plan), so the total always reconciles with n_rows
-            *[
-                F.sum(F.when(pid == i, 1).otherwise(0))
-                .cast("long")
-                .alias(f"_p{i}")
-                for i in range(nparts)
-            ],
+            *[f"count_if({_quote(pid_col)} = {i}) AS _p{i}" for i in range(nparts)],
         ]
         if self.event_time_col in batch_df.columns:
-            et = F.col(self.event_time_col).cast("timestamp")
-            metrics_exprs += [
-                F.min(et).cast("string").alias("min_event_time"),
-                F.max(et).cast("string").alias("max_event_time"),
+            et = f"CAST({_quote(self.event_time_col)} AS TIMESTAMP)"
+            metrics_sql += [
+                f"CAST(min({et}) AS STRING) AS min_event_time",
+                f"CAST(max({et}) AS STRING) AS max_event_time",
             ]
         if self.key_cols and self.key_cols[0] in batch_df.columns:
-            metrics_exprs.append(
-                F.approx_count_distinct(self.key_cols[0]).alias("approx_keys")
-            )
-        observed = batch_df.observe(obs, *metrics_exprs).drop(pid_col)
+            metrics_sql.append(f"approx_count_distinct({_quote(self.key_cols[0])}) AS approx_keys")
+        observed = batch_df.observe(obs, *map(F.expr, metrics_sql)).drop(pid_col)
         writer = observed.write.mode("overwrite")
         if self.partition_col:
             writer = writer.partitionBy(self.partition_col)

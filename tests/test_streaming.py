@@ -221,6 +221,33 @@ def test_progress_capture_metrics(spark, tmp_path, input_dir, template):
     )
     assert read == N_TURNS
 
+    # with the dead-letter leg on, two jobs consume each batch, but the
+    # batch is read once: rows_read still totals the input turns
+    cap = metrics.ProgressCapture()
+    spark.streams.addListener(cap)
+    try:
+        jobs.StreamingDeidJob(
+            spark,
+            template,
+            input_dir,
+            str(tmp_path / "out_dl"),
+            str(tmp_path / "ckpt_dl"),
+            max_files_per_trigger=2,
+            error_output_dir=str(tmp_path / "errs_dl"),
+        ).run_to_completion()
+        for _ in range(40):
+            if cap.total_rows() >= N_TURNS:
+                break
+            time.sleep(0.25)
+    finally:
+        spark.streams.removeListener(cap)
+    read = sum(
+        b.observed["reader"]["rows_read"]
+        for b in cap.batches
+        if b.observed and "reader" in b.observed
+    )
+    assert read == N_TURNS
+
 
 def test_salted_repartition_spreads_hot_key(spark, input_dir):
     from dlp_dataflow_deidentification_spark.operators.skew import salted_repartition

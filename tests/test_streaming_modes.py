@@ -228,7 +228,8 @@ def test_streaming_reid_dead_letter_side_output(spark, tmp_path, input_dir, temp
         crypto_mode="ecb",  # tokens above were minted by the ECB opt-in path
         error_output_dir=str(tmp_path / "errs_dl"),
     )
-    job.run_to_completion()
+    q = job.start()
+    assert q.awaitTermination(600)
 
     good = {
         (r.conv_id, r.turn_idx): r.text
@@ -250,6 +251,64 @@ def test_streaming_reid_dead_letter_side_output(spark, tmp_path, input_dir, temp
     assert all(r.error_message == "reid: undecodable token" for r in err_rows)
     # both legs committed under the same exactly-once ledger batch ids
     assert set(job.error_sink().committed_ids()) <= set(job.sink().committed_ids())
+    # each leg's ledger reconciles with its committed rows, entry by entry
+    for sink in (job.sink(), job.error_sink()):
+        entries = sink.lineage()
+        assert sum(e["metrics"]["n_rows"] for e in entries) == sink.read_committed(spark).count()
+        for e in entries:
+            assert sum(p["rows"] for p in e["partitions"]) == e["metrics"]["n_rows"]
+    # the dead-letter leg's side thread inherits the query's job group, so
+    # both legs' jobs are listed under it (query.stop() can cancel them)
+    group_jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(group_jobs) >= 2 * len(job.sink().committed_ids())
+
+
+def test_dead_letter_commit_failure_fails_batch_then_restart_exactly_once(
+    spark, tmp_path, input_dir, template
+):
+    """A dead-letter ledger commit that raises fails the micro-batch (the
+    error is not lost on the leg's side thread); a plain job restarted on the
+    same checkpoint then holds each main and each dead-letter row once."""
+    from pyspark.errors import StreamingQueryException
+
+    from dlp_dataflow_deidentification_spark.streaming.commitlog import LocalFSCommitLog
+
+    src = spark.read.parquet(input_dir).withColumn(
+        "text", F.when(F.col("turn_idx") % 13 == 0, F.lit(None)).otherwise(F.col("text"))
+    )
+    in_dir = str(tmp_path / "in_null")
+    src.write.parquet(in_dir)
+    out, errs, ckpt = (str(tmp_path / d) for d in ("out_f", "errs_f", "ckpt_f"))
+
+    class FailFirstCommitLog(LocalFSCommitLog):
+        calls = 0
+
+        def commit(self, batch_id, entry):
+            self.calls += 1
+            if self.calls == 1:
+                raise RuntimeError("injected dead-letter commit failure")
+            super().commit(batch_id, entry)
+
+    class FailingJob(jobs.StreamingDeidJob):
+        def error_sink(self):
+            s = super().error_sink()
+            s.commit_log = FailFirstCommitLog(s.ledger_dir)
+            return s
+
+    q = FailingJob(spark, template, in_dir, out, ckpt, error_output_dir=errs).start()
+    with pytest.raises(StreamingQueryException, match="injected dead-letter commit failure"):
+        q.awaitTermination(600)
+
+    job = jobs.StreamingDeidJob(spark, template, in_dir, out, ckpt, error_output_dir=errs)
+    assert job.error_sink().committed_ids() == []
+    assert job.run_to_completion()
+
+    def keys(df):
+        return sorted(tuple(r) for r in df.select("conv_id", "turn_idx", "ts").collect())
+
+    assert keys(job.sink().read_committed(spark)) == keys(src.filter("text IS NOT NULL"))
+    assert keys(job.error_sink().read_committed(spark)) == keys(src.filter("text IS NULL"))
+    assert keys(src.filter("text IS NULL"))  # the input does plant null payloads
 
 
 def test_streaming_reid_strips_template_surrogate_envelope(spark, tmp_path, input_dir):
