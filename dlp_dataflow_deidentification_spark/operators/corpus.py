@@ -69,8 +69,8 @@ def curate(
 
     if near_dup_threshold is not None:
         # production dedup shape (LSH candidates + EXACT Jaccard verify):
-        # near_dup_threshold is a true Jaccard floor, not the signature
-        # estimator minhash_lsh_pairs would give
+        # near_dup_threshold is a true Jaccard floor, not a
+        # signature-agreement estimate
         pairs = minhash_dedup_pairs(
             kept, text_col, id_col, threshold=near_dup_threshold
         )

@@ -4,22 +4,32 @@ Beyond the reference's scope (its only dedup is the keep-one header combiner,
 common/ResolveDuplicatesCombineFn.java:21-43); these are the first-class
 corpus-dedup operators a 100 TB text pipeline needs. Hot paths are native
 Spark expressions (higher-order array functions, xxhash64, bit ops); the one
-deliberate exception is the minhash signature fold over materialized hashed
-shingles, which is an Arrow-vectorized numpy kernel (guide §4.2 — the
-num_hashes×|shingles| min-fold has no non-interpreted JVM form and no
-per-row Python loop inside the batch).
+deliberate exception is MinHash, which shingles, hashes, signs and bands in
+ONE Arrow-vectorized numpy stage (``_minhash_stage``; guide §4.2 — the
+num_hashes×|shingles| min-fold has no non-interpreted JVM form).
+
+Why MinHash shingles in Python but ``ngram_jaccard`` in the JVM: the
+signature fold already costs MinHash one Python boundary crossing, and a
+Python UDF's cost is mostly that crossing (CIDR'22), so tokenizing,
+shingle hashing and band keys ride along in the same stage at little cost,
+while their JVM forms are expensive here — the first ``F.lower`` in a JVM
+builds ICU's title-case table (1.2–1.7 s once per JVM), the higher-order
+shingler is interpreted, and 48 band-key expressions cost ~2.7k py4j calls
+to build plus their code generation. ``ngram_jaccard`` has no Python stage
+to fuse into: a new one for its shingles measured slower warm than the JVM
+``shingle_df``, which it keeps. The two shinglers share no code; the tests
+pin the Arrow stage bit-identical to ``shingle_df``.
 
 Scale notes (100 TB):
   * exact_dedup     — one hash-aggregate shuffle on a 128-bit md5 digest of
                       the normalized text, computed map-side: shuffle volume
                       is 16 bytes + id per row, NOT the corpus text.
-  * minhash_lsh     — shingle→signature is a narrow projection after one
-                      groupBy(doc); banding multiplies rows by n_bands (small
-                      constant); candidate generation is a self-join on
-                      band_key carrying ONLY (id, band_key) — signatures are
-                      re-attached to the (small) candidate set afterwards.
-  * minhash_dedup   — production shape: LSH candidates + exact-Jaccard
-                      verification on the candidate pairs only.
+  * minhash_dedup   — shingle→signature→band keys is one narrow Arrow stage
+                      (no shuffle); banding multiplies rows by n_bands
+                      (small constant); candidate generation buckets
+                      ONLY (id, band_key) rows, and the shingle sets are
+                      re-attached to the (small) candidate set for
+                      exact-Jaccard verification.
   * ngram_jaccard   — inverted-index self-join with a document-frequency cap
                       on shingles (a boilerplate shingle shared by 1e5 docs
                       would otherwise create a 1e10-row bucket); exact
@@ -34,9 +44,13 @@ their input, so the fan-out decision is made once, by the caller.
 """
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — pandas_udf resolves 'pd.Series' hints via module globals
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+from ..functions import xxhash64
 
 _PRIME = 2147483647  # 2^31 - 1, Mersenne prime for affine minhash perms
 
@@ -113,80 +127,95 @@ def _perm(i: int):
     return 2 * i + 1, 7919 * (i + 1)  # odd multiplier, fixed offset
 
 
-def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """Explode + num_hashes min-aggregates over ``shingle_df``'s hashed
-    shingles: each shingle's hash is permuted num_hashes times."""
-    ex = sh.select("id", F.explode("sh").alias("g")).select(
-        "id", F.pmod(F.col("g"), F.lit(_PRIME)).alias("h")
-    )
-    aggs = []
-    for i in range(num_hashes):
-        a, b = _perm(i)
-        aggs.append(F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(_PRIME))).alias(f"m{i}"))
-    per = ex.groupBy("id").agg(*aggs)
-    return per.select("id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig"))
+# a token is a maximal run of anything but Java's ``\s`` — the tokens of
+# ``split(lower(text), '\\s+')`` minus its empty edge strings
+_TOKEN = re.compile(r"[^ \t\n\x0b\f\r]+")
 
 
-def minhash_signatures_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """(id, sig: array<long>) via explode + num_hashes min-aggregates.
+def _minhash_batch(batch, shingle_n: int, num_hashes: int, bands: int):
+    """One Arrow batch of (id, text) → (id, sh, bands), bit-identical to
+    ``shingle_df`` followed by the expression-form signature and
+    ``xxhash64(lit(b), slice(sig, b·rows + 1, rows))`` band keys.
 
-    Map-side partial aggregation makes this one key-shuffle of pre-combined
-    per-partition minima; each shingle is xxhash'd exactly once (the pure
-    expression form recomputes it num_hashes times — 100x slower measured)."""
-    return _signatures_from_shingles(shingle_df(df, text_col, id_col, shingle_n), num_hashes)
-
-
-def _signatures_from_hashed_arrays(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """Signatures over a MATERIALIZED hashed-shingle table (no explode, no
-    shuffle). Round 6: one vectorized Arrow pandas UDF instead of
-    num_hashes interpreted ``array_min(transform(...))`` higher-order
-    terms — the HOF form executed num_hashes·|shingles| lambda steps per
-    doc (~150 CPU-seconds at 61k docs x 96 hashes; the numpy form is one
-    (num_hashes x |shingles|) int64 broadcast per row, ~3 CPU-seconds).
-    Exact integer modular arithmetic — h < 2^31 and a <= 2·num_hashes+1,
-    so a·h+b < 2^40 never overflows int64 — hence bit-identical minima to
-    the expression form (pinned by test). Only call this with a
-    persisted/cached array<bigint> column."""
+    Each kept doc becomes its tokens joined by single spaces, and all docs
+    are joined into ONE UTF-8 buffer, so a word n-gram is the byte range
+    from its first word's start to its last word's end — hashed there by
+    the vectorized XXH64, with no gram string ever built. ``str.lower``
+    is the JVM ``lower``'s full ICU mapping (final sigma, ``İ``). Distinct
+    grams keep their first occurrence (``array_distinct``); each minhash
+    row is one ``np.minimum.reduceat`` over every doc of the batch, in
+    blocks of at most ~4M int64."""
     import numpy as np
-    from pyspark.sql.types import ArrayType, LongType
+    import pyarrow as pa
 
-    A = np.array([_perm(i)[0] for i in range(num_hashes)], dtype=np.int64)[:, None]
-    B = np.array([_perm(i)[1] for i in range(num_hashes)], dtype=np.int64)[:, None]
+    keep, norm, n_words = [], [], []
+    for i, text in enumerate(batch.column(1).to_pylist()):
+        words = _TOKEN.findall(text.lower()) if text is not None else ()
+        if len(words) >= shingle_n:
+            keep.append(i)
+            norm.append(" ".join(words))
+            n_words.append(len(words))
+    buf = " ".join(norm).encode("utf-8")
+    spaces = np.flatnonzero(np.frombuffer(buf, dtype=np.uint8) == 0x20)
+    word_start = np.concatenate([[0], spaces + 1])
+    word_end = np.concatenate([spaces, [len(buf)]])
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _sig(shingles: pd.Series) -> pd.Series:
-        out = []
-        for hs in shingles:
-            if hs is None or len(hs) == 0:
-                # mirror the expression form: array_min over an empty (or
-                # null) transform is null per hash → an array of nulls
-                out.append([None] * num_hashes)
-                continue
-            h = np.asarray(hs, dtype=np.int64) % _PRIME
-            out.append((A * h[None, :] + B).__mod__(_PRIME).min(axis=1).tolist())
-        return pd.Series(out, dtype=object)
+    n_words = np.asarray(n_words, dtype=np.int64)
+    n_grams = n_words - (shingle_n - 1)
+    doc = np.repeat(np.arange(len(keep)), n_grams)
+    first_word = np.cumsum(n_words) - n_words
+    first_gram = np.cumsum(n_grams) - n_grams
+    gram_word = first_word[doc] + np.arange(doc.size) - first_gram[doc]
+    start = word_start[gram_word]
+    h = xxhash64.hash_ranges(buf, start, word_end[gram_word + shingle_n - 1] - start)
 
-    return sh.select("id", _sig("sh").alias("sig"))
+    order = np.lexsort((h, doc))  # stable: equal (doc, h) keep gram order
+    new = np.ones(h.size, dtype=bool)
+    new[1:] = (np.diff(doc[order]) != 0) | (np.diff(h[order]) != 0)
+    first = np.zeros(h.size, dtype=bool)
+    first[order[new]] = True
+    sh, doc = h[first], doc[first]
+    offsets = np.concatenate([[0], np.cumsum(np.bincount(doc, minlength=len(keep)))])
+
+    perms = np.array([_perm(i) for i in range(num_hashes)], dtype=np.int64)
+    # h mod p < 2^31 and a <= 2·num_hashes + 1, so a·h + b never overflows
+    hp = sh % _PRIME
+    sig = np.empty((len(keep), num_hashes), dtype=np.int64)
+    block = max(1, 4_000_000 // max(hp.size, 1))
+    for i in range(0, num_hashes, block):
+        a, b = perms[i : i + block, :1], perms[i : i + block, 1:]
+        mins = np.minimum.reduceat((a * hp + b) % _PRIME, offsets[:-1], axis=1)
+        sig[:, i : i + block] = mins.T
+
+    rows = num_hashes // bands
+    keys = np.repeat(xxhash64.hash_int(np.arange(bands))[None, :], len(keep), axis=0)
+    for r in range(rows):
+        keys = xxhash64.hash_long(sig[:, r::rows], keys)
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column(0).take(pa.array(keep, type=pa.int64())),
+            pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(sh)),
+            pa.ListArray.from_arrays(
+                pa.array(np.arange(len(keep) + 1) * bands, pa.int32()),
+                pa.array(keys.ravel()),
+            ),
+        ],
+        names=["id", "sh", "bands"],
+    )
 
 
-def _lsh_candidates(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """Distinct candidate id pairs (id < rid) sharing ≥1 LSH band.
-
-    ONE pass over the signatures: explode band keys → groupBy(band_key)
-    collecting the (sorted) member ids → enumerate in-bucket combinations
-    with a higher-order function. A self-join formulation would recompute
-    the whole signature subtree for its second side (Catalyst only reuses
-    byte-identical exchanges) and would carry both join sides through a
-    shuffle; here each doc id crosses the wire once per band. Buckets larger
-    than 1000 members are dropped — a degenerate band key (e.g. the empty
-    signature of boilerplate) would otherwise create an O(k²) pair bucket;
-    real near-dup buckets are tiny."""
+def _minhash_stage(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+) -> DataFrame:
+    """(id, sh, bands): ``shingle_df``'s ordered hashed shingle sets plus
+    each doc's ``bands`` LSH band keys, from ONE ``mapInArrow`` stage that
+    shingles, hashes, signs and bands (``_minhash_batch``). The id keeps
+    its input type."""
     if bands < 1 or num_hashes % bands != 0:
         # bands > num_hashes would make rows == 0: every band key becomes
         # the constant hash of an EMPTY slice, the bucket cap drops the
@@ -197,13 +226,21 @@ def _lsh_candidates(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
             f"bands={bands} must divide num_hashes={num_hashes} "
             "(rows-per-band = num_hashes / bands must be a positive integer)"
         )
-    rows = num_hashes // bands
-    band_cols = [
-        F.xxhash64(F.lit(b), F.slice("sig", b * rows + 1, rows)).alias("band_key")
-        for b in range(bands)
-    ]
-    banded = sigs.select("id", F.explode(F.array(*band_cols)).alias("band_key"))
-    return _pairs_from_buckets(banded, "band_key", 1000)
+    schema = StructType(
+        [
+            StructField("id", df.schema[id_col].dataType),
+            StructField("sh", ArrayType(LongType())),
+            StructField("bands", ArrayType(LongType())),
+        ]
+    )
+
+    def run(batches):
+        for batch in batches:
+            yield _minhash_batch(batch, shingle_n, num_hashes, bands)
+
+    return df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")).mapInArrow(
+        run, schema
+    )
 
 
 def _pairs_from_buckets(
@@ -265,36 +302,6 @@ def _with_pair_values(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash + LSH banding.
-
-    shingle → signature (narrow) → explode band keys → ids-only self-join per
-    bucket → re-attach signatures to the candidate set → verify with
-    signature agreement ≥ threshold (estimator of Jaccard).
-    Output: id_a < id_b, est_jaccard.
-    """
-    sigs = minhash_signatures_df(df, text_col, id_col, num_hashes, shingle_n).persist()
-    withsig = _with_pair_values(
-        _lsh_candidates(sigs, num_hashes, bands), sigs, "sig", "sig", "rsig"
-    )
-    agree = F.size(
-        F.filter(F.zip_with("sig", "rsig", lambda x, y: x == y), lambda x: x)
-    ) / F.lit(float(num_hashes))
-    return (
-        withsig.withColumn("est_jaccard", agree)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id").alias("id_a"), F.col("rid").alias("id_b"), "est_jaccard")
-    )
-
-
 def _exact_jaccard_on_pairs(cands: DataFrame, sh: DataFrame) -> DataFrame:
     """Attach exact Jaccard (over full distinct-shingle sets) to candidate id
     pairs (post-LSH / post-df-cap)."""
@@ -325,23 +332,27 @@ def minhash_dedup_pairs(
     """Production dedup shape: MinHash-LSH candidate generation + EXACT
     Jaccard verification of the candidate pairs (full shingle sets).
 
-    Unlike ``minhash_lsh_pairs`` (signature-agreement estimator), the output
-    values are exact, so the DuckDB oracle (exact Jaccard over all pairs)
-    reproduces them bit-for-bit whenever LSH recall is 1.0 at the threshold —
-    the driver's hash-match doubles as a recall proof. bands=32/rows=2 gives
-    miss probability (1-j^2)^32 ≈ 1e-4 at j=0.5, ~0 above.
-    Output: id_a < id_b, jaccard (double).
+    The output values are exact, so the DuckDB oracle (exact Jaccard over
+    all pairs) reproduces them bit-for-bit whenever LSH recall is 1.0 at the
+    threshold — the driver's hash-match doubles as a recall proof.
+    bands=32/rows=2 gives miss probability (1-j^2)^32 ≈ 1e-4 at j=0.5, ~0
+    above. Output: id_a < id_b, jaccard (double).
 
-    The shingle table feeds BOTH the signature aggregation and the
-    verification join; it is cached once (persist — lineage kept, so an
+    One Arrow stage (``_minhash_stage``) emits each doc's shingle set and
+    band keys; its output feeds BOTH candidate generation and the
+    verification join, so it is cached once (persist — lineage kept, so an
     executor loss recomputes the lost blocks instead of failing the job)
     rather than recomputed per consumer — at 100 TB this is the standard
-    materialize-the-signature-table step of a dedup pipeline. Hand in ``df``
-    already spread to about ``defaultParallelism`` partitions: shingling and
-    signing run at the input's partitioning."""
-    sh = shingle_df(df, text_col, id_col, shingle_n).persist()
-    sigs = _signatures_from_hashed_arrays(sh, num_hashes)
-    cands = _lsh_candidates(sigs, num_hashes, bands)
+    materialize-the-signature-table step of a dedup pipeline. Candidates
+    are the pairs sharing ≥1 band key, each doc id crossing the wire once
+    per band; buckets larger than 1000 members are dropped — a degenerate
+    band key (e.g. the signature of boilerplate) would otherwise create an
+    O(k²) pair bucket; real near-dup buckets are tiny. Hand in ``df``
+    already spread to about ``defaultParallelism`` partitions: the stage
+    runs at the input's partitioning."""
+    sh = _minhash_stage(df, text_col, id_col, shingle_n, num_hashes, bands).persist()
+    banded = sh.select("id", F.explode("bands").alias("band_key"))
+    cands = _pairs_from_buckets(banded, "band_key", 1000)
     return _exact_jaccard_on_pairs(cands, sh).filter(F.col("jaccard") >= threshold)
 
 

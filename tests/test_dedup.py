@@ -38,7 +38,7 @@ def test_exact_dedup(spark, docs):
 
 
 def test_minhash_lsh_finds_planted_near_dups(spark, docs):
-    pairs = dedup.minhash_lsh_pairs(
+    pairs = dedup.minhash_dedup_pairs(
         docs, num_hashes=64, bands=16, shingle_n=5, threshold=0.5
     ).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
@@ -55,9 +55,9 @@ def test_minhash_lsh_finds_planted_near_dups(spark, docs):
     # near dups (one token appended, high jaccard): ≥95% recall via 16 bands
     recall = len(planted & got) / len(planted)
     assert recall >= 0.95, f"minhash recall {recall}"
-    # estimator sanity on exact pairs
-    est = {(r.id_a, r.id_b): r.est_jaccard for r in pairs}
-    assert all(est[p] == 1.0 for p in exact_planted)
+    # exact verification on exact pairs
+    jac = {(r.id_a, r.id_b): r.jaccard for r in pairs}
+    assert all(jac[p] == 1.0 for p in exact_planted)
 
 
 def test_ngram_jaccard_exact_pairs(spark, docs):
@@ -97,34 +97,94 @@ def test_simhash_is_deterministic(spark, docs):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_vectorized_signatures_equal_expression_form(spark, docs):
-    """The Arrow/numpy minhash-signature kernel must be bit-identical to the
-    pure-expression explode+aggregate form (same modular arithmetic on the
-    same hashed shingles), including empty shingle arrays."""
-    sh = dedup.shingle_df(docs.limit(40)).persist()
-    try:
-        fast = {
-            r["id"]: list(r["sig"])
-            for r in dedup._signatures_from_hashed_arrays(sh, 16).collect()
-        }
-        ref = {
-            r["id"]: list(r["sig"])
-            for r in dedup._signatures_from_shingles(sh, 16).collect()
-        }
-        assert fast == ref
-        empty = spark.createDataFrame(
-            [(1, [])], "id long, sh array<long>"
+def _ref_signatures(sh, num_hashes):
+    """Expression-form MinHash reference over ``shingle_df``'s hashed
+    shingles: explode + num_hashes min-aggregates, each shingle's hash
+    permuted num_hashes times with the operator's ``_perm``/``_PRIME``."""
+    ex = sh.select("id", F.explode("sh").alias("g")).select(
+        "id", F.pmod(F.col("g"), F.lit(dedup._PRIME)).alias("h")
+    )
+    aggs = []
+    for i in range(num_hashes):
+        a, b = dedup._perm(i)
+        aggs.append(
+            F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(dedup._PRIME))).alias(f"m{i}")
         )
-        rows = dedup._signatures_from_hashed_arrays(empty, 4).collect()
-        assert rows[0]["sig"] == [None, None, None, None]
+    per = ex.groupBy("id").agg(*aggs)
+    return per.select("id", F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig"))
+
+
+def _ref_band_keys(sigs, num_hashes, bands):
+    """Expression-form LSH band keys: xxhash64(b, slice(sig, b·rows+1, rows))."""
+    rows = num_hashes // bands
+    keys = [
+        F.xxhash64(F.lit(b), F.slice("sig", b * rows + 1, rows)) for b in range(bands)
+    ]
+    return sigs.select("id", F.array(*keys).alias("bands"))
+
+
+def _assert_stage_equals_reference(df, num_hashes, bands, shingle_n=5):
+    """The Arrow stage's (ordered) shingle arrays equal the JVM
+    ``shingle_df``'s, and its band keys equal the expression reference's."""
+    sh = dedup.shingle_df(df, shingle_n=shingle_n).persist()
+    try:
+        want_sh = {r["id"]: list(r["sh"]) for r in sh.collect()}
+        want_bands = {
+            r["id"]: list(r["bands"])
+            for r in _ref_band_keys(_ref_signatures(sh, num_hashes), num_hashes, bands).collect()
+        }
     finally:
         sh.unpersist()
+    out = dedup._minhash_stage(df, "text", "doc_id", shingle_n, num_hashes, bands)
+    assert out.schema["id"].dataType == df.schema["doc_id"].dataType
+    rows = out.collect()
+    assert {r["id"]: list(r["sh"]) for r in rows} == want_sh
+    assert {r["id"]: list(r["bands"]) for r in rows} == want_bands
+    return want_sh
+
+
+def test_vectorized_signatures_equal_expression_form(spark, docs):
+    """The Arrow shingle→signature→band stage must be bit-identical to the
+    JVM shingler plus the pure-expression explode+aggregate signatures and
+    ``xxhash64`` band keys (same modular arithmetic, same hashes)."""
+    _assert_stage_equals_reference(docs.limit(40), num_hashes=16, bands=8)
+    _assert_stage_equals_reference(docs.limit(40), num_hashes=96, bands=48)
+
+
+def test_minhash_stage_tokenizes_like_the_jvm(spark):
+    """Case folding and whitespace splitting in the Arrow stage equal the
+    JVM ``lower``/``split('\\s+')``: full Unicode lowercase (final sigma,
+    dotted capital I, capital sharp s), Java ``\\s`` only (tab, newline,
+    \\x0b, \\f split; U+00A0 and U+2003 do not), edge whitespace, null
+    text and short docs dropping out, and a string-typed id column."""
+    texts = {
+        "sigma": "ΟΔΟΣ ΚΑΙ ΛΟΓΟΣ ΣΟΦΟΣ ΚΟΣΜΟΣ Σ ΑΣ",
+        "turkish": "İSTANBUL İzmir KIRIKKALE ẞTRASSE GROẞ STRAẞE Ǆ ǅ",
+        "cjk": "中文 文本 去重 测试 😀 emoji 🎉 party 👍🏽 ok ﬁ ﬂ",
+        "ws": "\talpha\nbeta\x0bgamma\fdelta\repsilon  zeta\t\n eta theta ",
+        "nbsp": "one two\u00a0three four\u2003five six seven eight",
+        "mixed": "Ünïcödé WÖRDS wïth ÄCCENTS and ASCII Words Mixed İn",
+        "null": None,
+        "short": "two words",
+        "empty": "",
+        "spaces": " \t\n ",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id string, text string")
+    got = _assert_stage_equals_reference(df, num_hashes=16, bands=4, shingle_n=3)
+    assert set(got) == set(texts) - {"null", "short", "empty", "spaces"}
+    # U+00A0 and U+2003 are not in Java's \s: doc "n" is 3 tokens, so no
+    # 5-gram, while tab and form feed split doc "t" into 5 tokens
+    nbsp = spark.createDataFrame(
+        [("n", "one two\u00a0three four\u2003five"), ("t", "one two\tthree four\ffive")],
+        "doc_id string, text string",
+    )
+    ids = {r["id"] for r in dedup._minhash_stage(nbsp, "text", "doc_id", 5, 4, 2).collect()}
+    assert ids == {"t"}
 
 
 def test_dedup_plans_have_no_python(spark, docs):
     for df in [
         dedup.exact_dedup(docs),
-        dedup.minhash_lsh_pairs(docs.limit(10)),
         dedup.simhash_pairs(docs.limit(10)),
     ]:
         plan = df._jdf.queryExecution().executedPlan().toString()
