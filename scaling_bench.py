@@ -5,12 +5,10 @@ two cluster sizes over the identical pre-materialized input, and we report
 throughput at both plus scaling efficiency = (thr_4N / thr_N) / 4. Results
 land in BENCH_SCALING.json and are summarized in BASELINE.md.
 
-Default master mode is ``local-cluster[N,1,mem]`` — one JVM per single-core
+The master is ``local-cluster[N,1,mem]`` — one JVM per single-core
 executor, matching a real N-machine deployment (and removing the shared-heap
 GC confound the round-1 local[] runs measured: N threads in ONE JVM contend
 on one allocator/GC, which is not how the engine deploys).
-Set SPARK_GRAFT_SCALING_MASTER=local to reproduce the round-1 shared-JVM
-numbers.
 """
 from __future__ import annotations
 
@@ -41,16 +39,16 @@ EXTRA_LEVELS = tuple(
 )
 
 
-def materialize_input(in_dir: str) -> None:
+def materialize_input(in_dir: str, turns: int, n_conversations: int) -> None:
     sys.path.insert(0, HERE)
     from bench import build_spark
     from dlp_dataflow_deidentification_spark.sources.transcripts import synthesize_transcripts
 
     spark = build_spark(32)
     spark.sparkContext.setLogLevel("ERROR")
-    synthesize_transcripts(spark, TURNS, n_conversations=100000).repartition(128).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
+    synthesize_transcripts(spark, turns, n_conversations=n_conversations).repartition(
+        128
+    ).write.mode("overwrite").parquet(in_dir)
     spark.stop()
 
 
@@ -89,12 +87,7 @@ def run_levels_interleaved(
     return out
 
 
-MASTER_MODE = os.environ.get("SPARK_GRAFT_SCALING_MASTER", "local-cluster")
-
-
 def _master_args(cpus: int) -> list[str]:
-    if MASTER_MODE == "local":
-        return ["--master", f"local[{cpus}]", "--conf", "spark.driver.memory=32g"]
     # one single-core executor JVM per "machine"; per-executor memory sized
     # so even the informational 32-executor level fits the 128 GiB box
     mem_mb = int(os.environ.get("SPARK_GRAFT_SCALING_EXEC_MB", "0")) or min(
@@ -162,19 +155,6 @@ def _run_once(
     raise RuntimeError(f"no result from {cpus} (log: {log}):\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
 
 
-def materialize_stateful_input(in_dir: str, turns: int) -> None:
-    sys.path.insert(0, HERE)
-    from bench import build_spark
-    from dlp_dataflow_deidentification_spark.sources.transcripts import synthesize_transcripts
-
-    spark = build_spark(32)
-    spark.sparkContext.setLogLevel("ERROR")
-    synthesize_transcripts(spark, turns, n_conversations=50000).repartition(128).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    spark.stop()
-
-
 def run_stateful_scaling() -> None:
     """N vs 4N for the chained deid → BUCKETED stateful-sessions stream
     (SPARK_GRAFT_SCALING_ONLY=stateful): the bucket shuffle + RocksDB state
@@ -188,7 +168,7 @@ def run_stateful_scaling() -> None:
     workroot = tempfile.mkdtemp(prefix="dlp_scaling_st_", dir=base)
     try:
         in_dir = os.path.join(workroot, "in")
-        materialize_stateful_input(in_dir, turns)
+        materialize_input(in_dir, turns, n_conversations=50000)
         zip_path = os.path.join(workroot, "dds.zip")
         subprocess.run(
             ["zip", "-qr", zip_path, "dlp_dataflow_deidentification_spark"],
@@ -233,7 +213,7 @@ def main() -> None:
     workroot = tempfile.mkdtemp(prefix="dlp_scaling_", dir=base)
     try:
         in_dir = os.path.join(workroot, "in")
-        materialize_input(in_dir)
+        materialize_input(in_dir, TURNS, n_conversations=100000)
         zip_path = os.path.join(workroot, "dds.zip")
         subprocess.run(
             ["zip", "-qr", zip_path, "dlp_dataflow_deidentification_spark"],
@@ -272,7 +252,7 @@ def main() -> None:
             "batch_levels": {f"local[{c}]": r for c, r in batch.items()},
             "batch_scaling_efficiency": round(beff, 3) if beff else None,
             "extra_levels": {f"local[{c}]": r for c, r in extras.items()},
-            "master_mode": MASTER_MODE,
+            "master_mode": "local-cluster",
             "note": (
                 f"N={LEVELS[0]} vs 4N={LEVELS[1]} single-core executors, one "
                 "JVM per executor (local-cluster) — matches a real N-machine "

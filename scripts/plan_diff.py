@@ -12,9 +12,10 @@ Usage:
   python scripts/plan_diff.py --sf /path/to/sf0.001 --dump OUT.json TREE [q ...]
 
 Each tree is dumped in its own Python process (it imports that tree's
-``__spark_entry__``). The compare form prints one line per query and a
-final ``identical/total`` line; ``--show`` adds a unified diff per
-differing query.
+``__spark_entry__``). The compare form prints one line per query found in
+either tree (``ONLY_A``/``ONLY_B`` for a query only one tree declares) and
+a final ``identical/total`` line over that union; ``--show`` adds a
+unified diff per query that is not identical.
 """
 from __future__ import annotations
 
@@ -62,6 +63,36 @@ def dump(tree: str, sf: str, cpus: int, names: list[str]) -> dict[str, str]:
     return out
 
 
+def compare(
+    a: dict[str, str], b: dict[str, str], labels=("A", "B"), show: bool = False
+) -> list[str]:
+    """Report lines for two dumps: one per query in EITHER dump (``same``,
+    ``DIFFERS``, ``ONLY_A`` or ``ONLY_B``; A's order, then B's extras),
+    then ``identical/total`` counted over that union."""
+    lines, same = [], 0
+    names = list({**a, **b})
+    for n in names:
+        if n not in b:
+            status = "ONLY_A"
+        elif n not in a:
+            status = "ONLY_B"
+        elif a[n] == b[n]:
+            status = "same"
+            same += 1
+        else:
+            status = "DIFFERS"
+        lines.append(f"{status:<7} {n}\n")
+        if show and status != "same":
+            lines.extend(
+                difflib.unified_diff(
+                    a.get(n, "").splitlines(True), b.get(n, "").splitlines(True),
+                    f"{labels[0]}:{n}", f"{labels[1]}:{n}",
+                )
+            )
+    lines.append(f"{same}/{len(names)} identical\n")
+    return lines
+
+
 def _dump_in_subprocess(tree: str, args, out_path: str) -> dict[str, str]:
     cmd = [
         sys.executable, os.path.abspath(__file__), "--sf", args.sf,
@@ -94,21 +125,7 @@ def main() -> None:
             _dump_in_subprocess(t, args, os.path.join(tmp, f"{i}.json"))
             for i, t in enumerate(trees)
         )
-    same = 0
-    for n in a:
-        if a[n] == b.get(n):
-            same += 1
-            print(f"same    {n}")
-            continue
-        print(f"DIFFERS {n}")
-        if args.show:
-            sys.stdout.writelines(
-                difflib.unified_diff(
-                    a[n].splitlines(True), b.get(n, "").splitlines(True),
-                    f"{trees[0]}:{n}", f"{trees[1]}:{n}",
-                )
-            )
-    print(f"{same}/{len(a)} identical")
+    sys.stdout.writelines(compare(a, b, trees, args.show))
 
 
 if __name__ == "__main__":

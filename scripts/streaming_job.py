@@ -1,8 +1,8 @@
 """Standalone streaming DEID job for spark-submit (scaling evidence runner).
 
 Usage (see scaling_bench.py):
-  spark-submit --master local[N] --py-files dds.zip scripts/streaming_job.py \
-      <input_dir> <work_dir> [repo_dir]
+  spark-submit --master 'local-cluster[N,1,MEM_MB]' --py-files dds.zip \
+      scripts/streaming_job.py <input_dir> <work_dir> [repo_dir]
 
 Reads a transcript parquet stream, de-identifies it through the exactly-once
 sink, prints one JSON line with throughput + p50 micro-batch latency.

@@ -171,6 +171,14 @@ def test_dictionary_detector(spark):
         "met [PROJECT_CODENAME] and [PROJECT_CODENAME] today",
         "redo [PROJECT_CODENAME] ready",
     ]
+    # inspect findings of overlapping terms: longest at each position, in
+    # text order, non-overlapping
+    from dlp_dataflow_deidentification_spark.operators.inspect import inspect
+
+    df = spark.createDataFrame([(1, "error expires soon")], "doc_id long, text string")
+    det = dictionary("TT", ["error", "expires soon", "expires"])
+    found = inspect(df, [det], ["text"], id_columns=["doc_id"]).collect()
+    assert [r["quote"] for r in found] == ["error", "expires soon"]
 
 
 def test_date_shift_deterministic_bounded(spark):
