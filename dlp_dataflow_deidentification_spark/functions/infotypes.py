@@ -107,10 +107,11 @@ ONLINE_USER_ID = InfoType("ONLINE_USER_ID", r"\b:[0-9]{16}", kind="regex")
 
 def _reject_empty_match(name: str, pattern: str) -> None:
     """A detector whose regex matches the EMPTY string is meaningless for
-    findings (it 'matches' at every position) and breaks the position-capped
-    inspect plan, whose offset derivation pairs regexp_extract_all matches
-    with split segments — the two disagree on empty matches, silently
-    misaligning offsets. Reject at construction."""
+    findings: it 'matches' at every position, so each cell yields an empty
+    finding per character, and those crowd real findings out of the
+    maxFindingsPerItem cap. The DuckDB oracle's offset derivation also
+    pairs regexp_extract_all matches with split segments, and the two
+    disagree on empty matches. Reject at construction."""
     if re.match(pattern, "") is not None:
         raise ValueError(
             f"detector {name!r}: pattern {pattern!r} matches the empty "

@@ -8,13 +8,17 @@ schema mirroring common/Util.java:162-173:
   source_ref, field_id, quote, info_type_name, likelihood
   [, location_start, location_end]   (codepoint offsets)
 
-Two paths:
-  * ``inspect``        — JVM-native: explode(regexp_extract_all) per detector,
-                          no offsets. Whole-stage codegen; this is the scale
-                          path and the one with a full SQL oracle.
-  * ``inspect_offsets``— Arrow-batched pandas UDF returning byte-range
-                          offsets (Util.java:170-171 location_start/end),
-                          for strict findings-schema parity.
+Two paths; ``inspect`` picks one per call:
+  * JVM-native      — explode(regexp_extract_all) per detector, no offsets.
+                      Whole-stage codegen, zero Python. Serves uncapped
+                      calls whose ruleSet, if any, holds only quote-scoped
+                      exclusions (regex / dictionary).
+  * ``inspect_offsets`` — Arrow-batched pandas UDF returning codepoint
+                      offsets (Util.java:170-171 location_start/end), the
+                      maxFindingsPerItem cap in document-position order and
+                      the full ruleSet. ``inspect`` serves capped calls and
+                      offset-dependent rule sets (``_needs_offsets``) from
+                      it, minus the location columns.
 """
 from __future__ import annotations
 
@@ -190,8 +194,8 @@ def _apply_rules_cell(cell: list, text: str, compiled) -> list:
 def _native_quote_keep(compiled, det_name):
     """For the JVM-native path: AND-of-negated-exclusions predicate over the
     raw match string, or None when no rule applies to ``det_name``. Only
-    quote-expressible rules (regex / dictionary) can appear here — proximity
-    and overlap rules need offsets and are routed to ``inspect_offsets``."""
+    quote-expressible rules (regex / dictionary) reach here: ``inspect``
+    sends rule sets for which ``_needs_offsets`` holds to the scanner."""
     makers = []
     for scope, _hots, excls in compiled:
         if scope is not None and det_name not in scope:
@@ -230,22 +234,15 @@ def _native_quote_keep(compiled, det_name):
     return keep
 
 
-def _validate_native_rules(rule_sets):
-    """The native path supports quote-only exclusions; anything needing
-    offsets (hotword adjustment, overlap exclusion, excludeByHotword) must
-    go through inspect_offsets."""
-    for rs in rule_sets or []:
-        if rs.hotwords:
-            raise ValueError(
-                "hotword rules need finding offsets — use inspect_offsets "
-                "for ruleSet entries with hotwordRule"
-            )
-        for ex in rs.exclusions:
-            if ex.exclude_info_types is not None or ex.hotword is not None:
-                raise ValueError(
-                    "excludeInfoTypes/excludeByHotword need finding offsets "
-                    "— use inspect_offsets for these ruleSet entries"
-                )
+def _needs_offsets(rule_sets) -> bool:
+    """True when a rule set needs finding offsets or the whole cell — a
+    hotwordRule, an excludeInfoTypes or an excludeByHotword exclusion —
+    which only ``inspect_offsets`` has in hand."""
+    return any(
+        rs.hotwords
+        or any(ex.exclude_info_types is not None or ex.hotword is not None for ex in rs.exclusions)
+        for rs in rule_sets or []
+    )
 
 
 def inspect(
@@ -258,31 +255,32 @@ def inspect(
     max_findings_per_item: "int | None" = None,
     rule_sets=None,
 ) -> DataFrame:
-    """Native findings table: one row per (input row, column, detector, match).
+    """Findings table: one row per (input row, column, detector, match).
 
     Columns: *id_columns, field_id, info_type_name, likelihood, quote.
-    Pure regexp_extract_all + explode → no Python, no shuffle.
-
-    ``rule_sets`` (plans.config.InspectionRuleSet list) applies QUOTE-scoped
-    exclusion rules natively — regex and dictionary rules become a
-    filter() over each match array BEFORE the findings cap, so exclusions
-    never consume cap slots (the service rule). Rules that need offsets
-    (hotwordRule, excludeInfoTypes, excludeByHotword) raise here — route
-    those configs through ``inspect_offsets``.
 
     InspectConfig fidelity (inspect-template.json:8-32,
     beam/DLPInspectText.java:269-270,306-309): ``min_likelihood`` drops
     detectors below the floor, ``include_quote=False`` nulls the quote (the
     match text is never shipped to the sink), ``max_findings_per_item``
-    caps findings per input row (DLP limits.maxFindingsPerItem analogue).
+    caps findings per input row (DLP limits.maxFindingsPerItem analogue),
+    keeping the first N in document-position order (column_idx,
+    start_offset, detector_idx).
 
-    The cap keeps the first N findings in DLP's document-position order,
-    total order (column_idx, start_offset, detector_idx); match offsets are
-    derived natively from cumulative segment/match lengths of
-    ``split``/``regexp_extract_all`` — still one source scan, zero Python,
-    no shuffle.
+    Uncapped calls whose ``rule_sets`` (plans.config.InspectionRuleSet
+    list), if any, hold only QUOTE-scoped exclusions run JVM-native:
+    regexp_extract_all + explode, no Python, no shuffle; regex and
+    dictionary rules become a filter() over each match array. Capped calls and rule sets that need
+    offsets (``_needs_offsets``: hotwordRule, excludeInfoTypes,
+    excludeByHotword) run on the ``inspect_offsets`` scanner, whose
+    location columns are dropped here. On both paths exclusions apply
+    before the cap, so excluded findings never consume cap slots.
     """
-    _validate_native_rules(rule_sets)
+    if max_findings_per_item is not None or _needs_offsets(rule_sets):
+        return inspect_offsets(
+            df, detectors, text_columns, id_columns, min_likelihood,
+            include_quote, max_findings_per_item, rule_sets,
+        ).drop("location_start", "location_end")
     compiled_rules = _compile_rule_sets(rule_sets)
     dets = _filter_min_likelihood([resolve(d) for d in detectors], min_likelihood)
     keeps = {it.name: _native_quote_keep(compiled_rules, it.name) for it in dets}
@@ -311,12 +309,6 @@ def inspect(
             F.lit(None).cast("string").alias("quote"),
         ).where(F.lit(False))
 
-    if max_findings_per_item is not None:
-        return _inspect_position_capped(
-            df, dets, text_columns, id_columns, include_quote,
-            max_findings_per_item, keeps
-        )
-
     per_pair = []
     for col in text_columns:
         for it in dets:
@@ -327,166 +319,12 @@ def inspect(
                 F.coalesce(F.col(col), F.lit("")), F.lit(it.pattern), F.lit(0)
             )
             if keeps[it.name] is not None:
-                # exclusion rules drop matches BEFORE tagging and the cap
+                # exclusion rules drop matches before tagging
                 matches = F.filter(matches, keeps[it.name])
             per_pair.append(F.transform(matches, _tag(col, it)))
     findings = F.flatten(F.array(*per_pair))
     return df.select(
         *[F.col(c) for c in id_columns], F.explode(findings).alias("f")
-    ).select(*id_columns, "f.*")
-
-
-def _inspect_position_capped(
-    df: DataFrame,
-    dets: list,
-    text_columns: Sequence[str],
-    id_columns: Sequence[str],
-    include_quote: bool,
-    cap: int,
-    keeps: "dict | None" = None,
-) -> DataFrame:
-    """Position-ordered ``max_findings_per_item``: per row, every (column,
-    detector) pair's matches are tagged with their codepoint start offset
-    (cumulative lengths of the split segments + preceding matches — the
-    same derivation the DuckDB oracle and ``inspect_offsets`` use), the
-    combined array is ``array_sort``-ed on (column_idx, offset,
-    detector_idx) and sliced to the cap.
-
-    FAST PATH: a row whose TOTAL finding count is <= cap emits every finding
-    untruncated — its survivor set is order-independent, so no offsets are
-    needed at all. Only over-cap rows (the minority in real corpora) take
-    the conditional branch that re-splits the text for segment lengths; the
-    CASE WHEN evaluates branches lazily per row, so the splits/folds are
-    never executed for in-cap rows.
-
-    Plan-shape note (measured HOF-capture trap, operators/dedup.py): the
-    match arrays are materialized as their own projection (and multi-
-    referenced, so CollapseProject keeps them un-inlined); every reference
-    in the tagging stage is a WHOLE-ARRAY input to one higher-order
-    function — never captured inside a per-element lambda — so regexp/split
-    subtrees are evaluated at most once per row. The per-element work
-    touches only the accumulator and the zipped element."""
-    keeps = keeps or {}
-    # quote-scoped exclusion rules: offsets derive from segment/match
-    # alignment of the UNfiltered match arrays, so exclusions apply after
-    # tagging (on a raw-match field the strip stage drops) — but before the
-    # cap, so excluded findings never consume cap slots
-    has_rules = any(keeps.get(it.name) is not None for it in dets)
-    proj = [F.col(c) for c in id_columns]
-    for ci, col in enumerate(text_columns):
-        txt = F.coalesce(F.col(col), F.lit(""))
-        # keep the coalesced text for the lazy split branch
-        proj.append(txt.alias(f"__t_{ci}"))
-        for di, it in enumerate(dets):
-            proj.append(
-                F.regexp_extract_all(txt, F.lit(it.pattern), F.lit(0)).alias(
-                    f"__m_{ci}_{di}"
-                )
-            )
-    stage1 = df.select(*proj)
-
-    def _tagged(ci: int, col: str, di: int, it) -> "F.Column":
-        m = F.col(f"__m_{ci}_{di}")
-        # split lives INSIDE the over-cap branch: whole-array input to one
-        # zip_with → evaluated once per row, and only for rows that need it
-        s = F.split(F.col(f"__t_{ci}"), it.pattern, -1)
-        # (len(segment-before-match), len(match)) pairs; n segments for n
-        # matches — ints only, the strings are not carried into the fold
-        lens = F.zip_with(
-            F.slice(s, 1, F.size(m)),
-            m,
-            lambda seg, q: F.struct(
-                F.length(seg).alias("sl"), F.length(q).alias("ql")
-            ),
-        )
-        # one left-to-right fold per row, accumulating ONLY the int start
-        # offsets (start_i = running_total + len(seg_i)). The growing-array
-        # concat is inherently O(m²) in element copies, but on a primitive
-        # int array that is a cheap memcpy of 4-byte slots — the previous
-        # form carried the full tagged STRUCTS (five strings each) through
-        # every step, re-copying all quotes/names O(m²) times.
-        starts = F.aggregate(
-            lens,
-            F.struct(
-                F.lit(0).alias("cur"), F.array().cast("array<int>").alias("arr")
-            ),
-            lambda acc, x: F.struct(
-                (acc["cur"] + x["sl"] + x["ql"]).alias("cur"),
-                F.concat(acc["arr"], F.array(acc["cur"] + x["sl"])).alias("arr"),
-            ),
-            lambda acc: acc["arr"],
-        )
-        # one LINEAR pass attaches the heavy struct per match at its offset
-        tagged = F.zip_with(
-            starts,
-            m,
-            lambda p, q: F.struct(
-                F.lit(ci).alias("_col"),
-                p.alias("_pos"),
-                F.lit(di).alias("_det"),
-                F.lit(col).alias("field_id"),
-                F.lit(it.name).alias("info_type_name"),
-                F.lit(it.likelihood).alias("likelihood"),
-                (q if include_quote else F.lit(None).cast("string")).alias("quote"),
-                # trailing field → never reached by the (_col,_pos,_det)
-                # sort comparator; only materialized when rules exist
-                *([q.alias("_raw")] if has_rules else []),
-            ),
-        )
-        kp = keeps.get(it.name)
-        if kp is not None:
-            tagged = F.filter(tagged, lambda f: kp(f["_raw"]))
-        return tagged
-
-    def _plain(ci: int, col: str, di: int, it) -> "F.Column":
-        # untruncated tag (fast path): no positions, just the output fields
-        m = _kept(ci, di, it)
-        return F.transform(
-            m,
-            lambda q: F.struct(
-                F.lit(col).alias("field_id"),
-                F.lit(it.name).alias("info_type_name"),
-                F.lit(it.likelihood).alias("likelihood"),
-                (q if include_quote else F.lit(None).cast("string")).alias("quote"),
-            ),
-        )
-
-    def _kept(ci: int, di: int, it) -> "F.Column":
-        m = F.col(f"__m_{ci}_{di}")
-        kp = keeps.get(it.name)
-        return F.filter(m, kp) if kp is not None else m
-
-    pairs = [
-        (ci, col, di, it)
-        for ci, col in enumerate(text_columns)
-        for di, it in enumerate(dets)
-    ]
-    total = None
-    for ci, _col, di, it in pairs:
-        # post-exclusion count decides the fast path — excluded findings
-        # must not push a row onto the offset branch or eat cap slots
-        sz = F.size(_kept(ci, di, it))
-        total = sz if total is None else total + sz
-
-    # default struct comparator = lexicographic on fields in order:
-    # (_col, _pos, _det) is a total order (a detector cannot match twice at
-    # one offset), so the string fields never tie-break
-    sorted_slice = F.slice(
-        F.array_sort(F.flatten(F.array(*[_tagged(*p) for p in pairs]))), 1, cap
-    )
-    stripped = F.transform(
-        sorted_slice,
-        lambda f: F.struct(
-            f["field_id"].alias("field_id"),
-            f["info_type_name"].alias("info_type_name"),
-            f["likelihood"].alias("likelihood"),
-            f["quote"].alias("quote"),
-        ),
-    )
-    simple = F.flatten(F.array(*[_plain(*p) for p in pairs]))
-    final = F.when(total <= F.lit(cap), simple).otherwise(stripped)
-    return stage1.select(
-        *[F.col(c) for c in id_columns], F.explode(final).alias("f")
     ).select(*id_columns, "f.*")
 
 
@@ -517,8 +355,9 @@ def inspect_offsets(
     (`re`), one UDF call per Arrow batch, then a JVM-side explode. One array
     per input row covering ALL text columns (single source scan; the
     ``max_findings_per_item`` cap therefore applies per row, like DLP's
-    limits.maxFindingsPerItem), in the same document-position order as
-    ``inspect``: (column_idx, start_offset, detector_idx).
+    limits.maxFindingsPerItem), in document-position order: (column_idx,
+    start_offset, detector_idx). ``inspect`` serves every capped call from
+    here.
 
     ``rule_sets`` is the FULL InspectionRuleSet surface (this is the path
     that has offsets and the whole cell in hand, so every rule kind works):

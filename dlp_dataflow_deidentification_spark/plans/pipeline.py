@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.deidentify import deidentify, reidentify
-from ..operators.inspect import inspect, inspect_offsets
+from ..operators.inspect import _needs_offsets, inspect, inspect_offsets
 from ..operators.skew import salted_repartition
 from ..sources import files
 from .config import DeidTemplate, InspectConfig
@@ -124,9 +124,10 @@ def apply_method(
       like a malformed CSV record in the reference's reader.
     - "inspect": findings over ``text_columns`` keyed by ``id_columns``,
       with ``inspect_config`` (None = the template's detectors). A ruleSet
-      that needs finding offsets (hotwordRule, excludeInfoTypes,
-      excludeByHotword) runs on ``inspect_offsets``; quote-only configs stay
-      on the JVM-native ``inspect``.
+      that needs finding offsets (``operators.inspect._needs_offsets``:
+      hotwordRule, excludeInfoTypes, excludeByHotword) runs on
+      ``inspect_offsets`` and keeps its location columns; every other
+      config runs on ``inspect``, which picks its own path.
     - "reid": ``reidentify`` each of ``reid_columns`` in ``crypto_mode``,
       stripping ``surrogate_info_type`` or, when None, the envelope the
       template minted for that column (an enveloped token fed raw to the
@@ -148,12 +149,7 @@ def apply_method(
         ic = inspect_config
         if ic is None:
             return inspect(df, template.detectors, list(text_columns), id_columns=list(id_columns))
-        needs_offsets = any(
-            rs.hotwords
-            or any(ex.exclude_info_types is not None or ex.hotword is not None for ex in rs.exclusions)
-            for rs in ic.rule_sets
-        )
-        return (inspect_offsets if needs_offsets else inspect)(
+        return (inspect_offsets if _needs_offsets(ic.rule_sets) else inspect)(
             df,
             ic.detectors,
             list(text_columns),

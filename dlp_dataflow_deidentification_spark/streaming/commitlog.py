@@ -9,15 +9,18 @@ implementations:
   committed by atomic ``os.rename``. Correct on POSIX filesystems (the
   sandbox, HDFS via a local mount, NFS with close-to-open); NOT safe on
   object stores, where rename is copy+delete and not atomic.
-* ``IcebergCommitLog`` — the cluster implementation: the Iceberg table's own
-  snapshot log IS the ledger. Each batch is appended with a snapshot summary
-  property ``spark-graft.batch-id``; ``is_committed`` queries the
-  ``<table>.snapshots`` metadata table for that property; per-partition
-  lineage rides in the same summary. Iceberg's optimistic metadata swap
-  gives the atomic commit point, so this is object-store-safe. The code is
-  real but requires the Iceberg runtime jars + a configured catalog, which
-  this sandbox does not have — constructing it without them raises with
-  provisioning instructions (and ``tests/test_commitlog.py`` pins the gate).
+* ``IcebergCommitLog`` — the cluster implementation: an Iceberg table's
+  snapshot log is the ledger. ``commit`` appends an empty snapshot whose
+  summary carries the property ``spark-graft.batch-id`` and the
+  per-partition lineage; ``is_committed`` queries the ``<table>.snapshots``
+  metadata table for that property. Iceberg's optimistic metadata swap
+  gives the atomic commit point, so the ledger is object-store-safe. The
+  batch's data is NOT in that snapshot: ``IdempotentBatchSink`` writes it as
+  parquet under ``data/batch_id=<id>/`` first, exactly as with the local
+  ledger. The code is real but requires the Iceberg runtime jars + a
+  configured catalog, which this sandbox does not have — constructing it
+  without them raises with provisioning instructions (and
+  ``tests/test_commitlog.py`` pins the gate).
 
 The same split applies to the dynamic-schema keep-one ledger
 (``sources/dynamic.py``): ``LocalFSSchemaLedger`` is first-writer-wins via
@@ -101,17 +104,17 @@ class IcebergCommitLog:
     Commit protocol (all through Iceberg's atomic metadata swap — safe on
     object stores, no rename semantics assumed):
 
-    * ``commit``: the sink appends the batch with
-      ``df.writeTo(table).option("snapshot-property." + BATCH_ID_PROP,
-      str(batch_id)).append()`` — data files AND the ledger entry (summary
-      properties) land in ONE atomic snapshot, so there is no window where
-      data is visible without its ledger entry (the local-FS impl needs the
-      rename-after-write ordering for the same guarantee).
+    * ``commit``: an EMPTY append to ``table`` whose snapshot summary
+      carries the batch id and the lineage entry (``write_options``). The
+      sink has already written the batch's data as parquet under
+      ``data/batch_id=<id>/``, so data and ledger entry are two steps, as
+      with the local-FS ledger: a crash between them leaves data without a
+      ledger entry, which readers ignore and the replay overwrites.
     * ``is_committed`` / ``committed_ids``: read the ``<table>.snapshots``
       metadata table (a metadata-only scan of the snapshot log; no data
       files touched) filtering on the summary property.
     * replay: Structured Streaming re-delivers a batch → the property is
-      already present → the sink skips the append. A crashed half-finished
+      already present → the sink skips the batch. A crashed half-finished
       append leaves NO snapshot (Iceberg commits are all-or-nothing), so the
       retry is clean.
     """
@@ -143,19 +146,16 @@ class IcebergCommitLog:
         )
 
     def commit(self, batch_id: int, entry: dict) -> None:
-        # The data-carrying append normally IS the commit (write_options
-        # stamps the summary on that snapshot). commit() covers ledger-only
-        # entries — e.g. an empty batch — with an EMPTY append carrying the
-        # same summary properties, so the READ side (snapshot-summary
-        # filters below) sees every commit through one mechanism. No SQL
-        # string interpolation: the entry travels as a write option.
+        # an EMPTY append carrying the summary properties: the sink writes
+        # the batch's data elsewhere (data/batch_id=<id>/) before this call.
+        # No SQL string interpolation: the entry travels as a write option.
         writer = self.spark.table(self.table).limit(0).writeTo(self.table)
         for k, v in self.write_options(batch_id, entry).items():
             writer = writer.option(k, v)
         writer.append()
 
     def write_options(self, batch_id: int, entry: dict) -> dict:
-        """Options for the data-carrying append (one atomic snapshot)."""
+        """Snapshot-summary options of the ledger append."""
         return {
             f"snapshot-property.{BATCH_ID_PROP}": str(batch_id),
             f"snapshot-property.{LINEAGE_PROP}": json.dumps(entry),

@@ -137,9 +137,9 @@ class StreamingDeidJob:
     mode: str = "deid"
     text_columns: tuple = ("text",)
     # optional full InspectConfig for mode="inspect" (detectors +
-    # minLikelihood/includeQuote/limits + ruleSet; quote-only rules run on
-    # the native path, offset-dependent ones on inspect_offsets, as in batch
-    # — plans.pipeline.apply_method). None = the deid template's detectors
+    # minLikelihood/includeQuote/limits + ruleSet; offset-dependent rule
+    # sets run on inspect_offsets, every other config on inspect, as in
+    # batch — plans.pipeline.apply_method). None = the deid template's detectors
     inspect_config: "object | None" = None
     reid_columns: tuple = ("text",)
     # no default key on purpose: reid mode raises without an explicit key

@@ -28,9 +28,14 @@ each), not from Column-API trees (~5 ms each): they are rebuilt for every
 micro-batch, on the critical path of the sink call.
 
 The commit interface has two implementations (commitlog.py):
-``LocalFSCommitLog`` (atomic rename; used here) and ``IcebergCommitLog``
-(the object-store-safe cluster form — data + ledger entry in ONE atomic
-Iceberg snapshot, jar-gated in this sandbox).
+``LocalFSCommitLog`` (atomic rename; the default) and ``IcebergCommitLog``
+(an object-store-safe ledger in an Iceberg table's snapshot log,
+jar-gated). With either one the sink takes the same two steps: it writes
+the batch's parquet under ``data/batch_id=<id>/``, then calls
+``commit_log.commit``, which for Iceberg appends an EMPTY snapshot that
+carries the batch id and lineage. The ledger entry is the commit point; a
+crash between the two steps leaves an uncommitted directory that
+``read_committed`` ignores and the replay overwrites.
 """
 from __future__ import annotations
 

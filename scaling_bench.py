@@ -76,12 +76,13 @@ def run_levels_interleaved(
         med["median_turns_per_sec"] = statistics.median(
             r["turns_per_sec"] for r in runs[c]
         )
-        if med.get("jvm_cpu_sec"):
-            # engine-saturation evidence: CPU-seconds burned per wall-second
-            # per task slot (≈1.0 → all cores busy; throughput shortfall is
-            # then per-core slowdown, not engine serialization)
+        if med.get("executor_cpu_sec"):
+            # engine-saturation evidence: executor CPU-seconds burned per
+            # wall-second per task slot (≈1.0 → all cores busy; throughput
+            # shortfall is then per-core slowdown, not engine serialization).
+            # The driver's CPU (driver_cpu_sec) runs on no task slot.
             med["cpu_utilization"] = round(
-                med["jvm_cpu_sec"] / (med["wall_sec"] * c), 3
+                med["executor_cpu_sec"] / (med["wall_sec"] * c), 3
             )
         out[c] = med
     return out

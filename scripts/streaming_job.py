@@ -13,13 +13,14 @@ import sys
 import time
 
 
-def _jvm_cpu_seconds() -> float:
-    """Total CPU seconds consumed by the whole Spark process tree (read from
-    /proc): in local[] mode the driver JVM IS the executor; in
-    local-cluster[] mode the executors are separate JVMs forked by the
-    driver, so we sum the driver + every descendant (executor JVMs, python
-    workers). Evidence for the scaling report:
-    utilization = Δcpu / (wall · cores)."""
+def _jvm_cpu_seconds() -> tuple[float, float]:
+    """CPU seconds of the Spark process tree (read from /proc), split into
+    (driver, executors). The tree's root is the driver JVM (our parent under
+    spark-submit). In local-cluster[] mode each executor is a separate JVM
+    (``CoarseGrainedExecutorBackend``) forked by the driver, with its Python
+    workers below it: the executors' share is those subtrees, the driver's
+    is the rest (the driver JVM and this Python process). Evidence for the
+    scaling report: utilization = Δexecutor cpu / (wall · executor cores)."""
     hz = os.sysconf("SC_CLK_TCK")
     me = os.getpid()
     procs: dict[int, tuple[int, float, str]] = {}
@@ -28,14 +29,15 @@ def _jvm_cpu_seconds() -> float:
             continue
         try:
             with open(f"/proc/{pid}/stat") as f:
-                head, rest = f.read().rsplit(") ", 1)
-            comm = head.split("(", 1)[1]
+                rest = f.read().rsplit(") ", 1)[1]
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmd = f.read().decode(errors="replace")
             parts = rest.split()
             # fields after comm: state ppid ... utime=idx11 stime=idx12
             procs[int(pid)] = (
                 int(parts[1]),
                 (int(parts[11]) + int(parts[12])) / hz,
-                comm,
+                cmd,
             )
         except (OSError, IndexError, ValueError):
             continue
@@ -45,12 +47,15 @@ def _jvm_cpu_seconds() -> float:
     children: dict[int, list[int]] = {}
     for pid, (par, _, _) in procs.items():
         children.setdefault(par, []).append(pid)
-    total, stack = 0.0, [root]
+    cpu = {False: 0.0, True: 0.0}  # in an executor subtree?
+    stack = [(root, False)]
     while stack:
-        p = stack.pop()
-        total += procs.get(p, (0, 0.0, ""))[1]
-        stack.extend(children.get(p, []))
-    return total
+        p, in_exec = stack.pop()
+        _, sec, cmd = procs.get(p, (0, 0.0, ""))
+        in_exec = in_exec or "CoarseGrainedExecutorBackend" in cmd
+        cpu[in_exec] += sec
+        stack.extend((c, in_exec) for c in children.get(p, []))
+    return cpu[False], cpu[True]
 
 
 def main() -> None:
@@ -146,7 +151,7 @@ def main() -> None:
             run_once("warm")
         cpu0 = _jvm_cpu_seconds()
         wall, n, cap = run_once("main")
-        cpu_sec = round(_jvm_cpu_seconds() - cpu0, 2)
+        cpu1 = _jvm_cpu_seconds()
         print(
             "SCALING_RESULT "
             + json.dumps(
@@ -156,7 +161,8 @@ def main() -> None:
                     "wall_sec": round(wall, 2),
                     "turns_per_sec": round(n / wall, 1),
                     "p50_batch_ms": round(cap.p50_batch_ms(), 1),
-                    "jvm_cpu_sec": cpu_sec,
+                    "driver_cpu_sec": round(cpu1[0] - cpu0[0], 2),
+                    "executor_cpu_sec": round(cpu1[1] - cpu0[1], 2),
                 }
             )
         )
@@ -191,7 +197,7 @@ def main() -> None:
     )
     job.run_to_completion(timeout_sec=3600)
     wall = time.time() - t0
-    cpu_sec = round(_jvm_cpu_seconds() - cpu0, 2)
+    cpu1 = _jvm_cpu_seconds()
     n_out = sum(e["metrics"]["n_rows"] for e in job.sink().lineage())
     for _ in range(60):
         if cap.total_rows() >= n_out:
@@ -206,7 +212,8 @@ def main() -> None:
                 "wall_sec": round(wall, 2),
                 "turns_per_sec": round(n_out / wall, 1),
                 "p50_batch_ms": round(cap.p50_batch_ms(), 1),
-                "jvm_cpu_sec": cpu_sec,
+                "driver_cpu_sec": round(cpu1[0] - cpu0[0], 2),
+                "executor_cpu_sec": round(cpu1[1] - cpu0[1], 2),
             }
         )
     )

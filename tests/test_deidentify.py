@@ -381,6 +381,72 @@ def test_inspect_position_cap_long_cell_is_not_quadratic_in_structs(spark):
     assert time.time() - t0 < 60  # generous; the struct-fold form crawls
 
 
+def test_inspect_config_fidelity_on_card_notes(spark, sf_dir):
+    """minLikelihood / includeQuote / maxFindingsPerItem through a config
+    shaped like the reference's inspect template (inspect-template.json:8-32:
+    IBAN, email and phone infoTypes plus the ONLINE_USER_ID custom regex),
+    on the card table's free-text notes, which hold all four kinds of PII."""
+    import re
+
+    import __spark_entry__ as entry
+    import dlp_dataflow_deidentification_spark as dds
+
+    icfg = dds.InspectConfig.from_dict({"inspectConfig": {
+        "infoTypes": [{"name": "IBAN_CODE"}, {"name": "EMAIL_ADDRESS"}, {"name": "PHONE_NUMBER"}],
+        "customInfoTypes": [{
+            "infoType": {"name": "ONLINE_USER_ID"},
+            "regex": {"pattern": "\\b:\\d{16}"},
+            "likelihood": "VERY_LIKELY",
+        }],
+        "minLikelihood": "LIKELY",
+        "limits": {"maxFindingsPerItem": 2},
+    }})
+    cards = entry._cards(spark, sf_dir).select("id", "notes").cache()
+
+    def run(**kw):
+        return dds.inspect(cards, icfg.detectors, ["notes"], id_columns=["id"], **kw)
+
+    base = sorted(run(min_likelihood=icfg.min_likelihood).collect())
+    assert {r.info_type_name for r in base} == {
+        "IBAN_CODE", "EMAIL_ADDRESS", "PHONE_NUMBER", "ONLINE_USER_ID"}
+
+    # a VERY_LIKELY floor keeps only the VERY_LIKELY-rated detector
+    high = sorted(run(min_likelihood="VERY_LIKELY").collect())
+    assert high == [r for r in base if r.info_type_name == "ONLINE_USER_ID"]
+
+    # includeQuote=False: the same findings, the matched text withheld
+    noq = run(min_likelihood=icfg.min_likelihood, include_quote=False).collect()
+    assert sorted((r.id, r.info_type_name) for r in noq) == [
+        (r.id, r.info_type_name) for r in base]
+    assert all(r.quote is None for r in noq)
+
+    # maxFindingsPerItem: the first two findings per row in document order
+    want = []
+    for row in cards.collect():
+        found = sorted(
+            (m.start(), di, it.name, m.group(0))
+            for di, it in enumerate(icfg.detectors)
+            for m in re.finditer(it.pattern, row.notes)
+        )
+        want += [(row.id, name, q) for _, _, name, q in found[:2]]
+    capped = run(
+        min_likelihood=icfg.min_likelihood,
+        max_findings_per_item=icfg.max_findings_per_item,
+    )
+    assert sorted((r.id, r.info_type_name, r.quote) for r in capped.collect()) == sorted(want)
+    assert len(want) < len(base)  # rows with three or four findings were cut
+
+    # the offsets path honours the same config
+    off = dds.inspect_offsets(
+        cards, icfg.detectors, ["notes"], id_columns=["id"],
+        max_findings_per_item=2, include_quote=False,
+    ).collect()
+    assert sorted((r.id, r.info_type_name) for r in off) == sorted(
+        (i, name) for i, name, _ in want)
+    assert all(r.quote is None and r.location_end > r.location_start for r in off)
+    cards.unpersist()
+
+
 # -- RecordCondition: recordSuppressions + per-transform condition +
 #    replaceDictionaryConfig (public DeidentifyConfig surface; the
 #    reference's sample templates omit them but its users configure them —

@@ -83,7 +83,7 @@ def test_dictionary_words_with_regex_metacharacters_match_literally(spark):
 
 def test_empty_matching_detector_patterns_rejected():
     """A pattern matching the empty string 'matches' at every position and
-    breaks the position-capped offset derivation (split vs
+    breaks the DuckDB oracle's offset derivation (split vs
     regexp_extract_all disagree on empty matches) — rejected at
     construction, as is an empty/empty-word dictionary (which renders the
     empty-matching '\\b(?:)\\b')."""

@@ -204,15 +204,31 @@ def test_exclude_by_hotword(spark):
     assert [r.quote for r in out] == ["real@x.com"]
 
 
-def test_native_path_rejects_offset_dependent_rules(spark):
-    df = _df(spark, ["x"])
-    with pytest.raises(ValueError, match="hotword"):
-        ins.inspect(df, ["EMAIL_ADDRESS"], ["t"], rule_sets=[
-            InspectionRuleSet(hotwords=[HotwordRule(pattern="x")])])
-    with pytest.raises(ValueError, match="offsets"):
-        ins.inspect(df, ["EMAIL_ADDRESS"], ["t"], rule_sets=[
-            InspectionRuleSet(exclusions=[ExclusionRule(
-                exclude_info_types=["PHONE_NUMBER"])])])
+def test_inspect_routes_offset_dependent_rules_to_scanner(spark):
+    # hotword adjustment and overlap exclusion need offsets: inspect serves
+    # them from the scanner and returns its findings minus the locations
+    df = _df(spark, [
+        "call 415-555-0199 or mail a@x.com",
+        "fax 415-555-0142, ref 415-555-0142@x.com",
+    ])
+    dets = ["PHONE_NUMBER", "EMAIL_ADDRESS"]
+    hotword = [InspectionRuleSet(hotwords=[HotwordRule(
+        pattern="(?i)call", window_before=10, fixed_likelihood="VERY_LIKELY")])]
+    overlap = [InspectionRuleSet(info_types=["PHONE_NUMBER"], exclusions=[
+        ExclusionRule(exclude_info_types=["EMAIL_ADDRESS"])])]
+    got = {}
+    for name, rules in (("hotword", hotword), ("overlap", overlap)):
+        out = ins.inspect(df, dets, ["t"], id_columns=["id"], rule_sets=rules)
+        want = ins.inspect_offsets(
+            df, dets, ["t"], id_columns=["id"], rule_sets=rules
+        ).drop("location_start", "location_end")
+        assert out.columns == want.columns
+        got[name] = sorted(out.collect())
+        assert got[name] == sorted(want.collect())
+    phones = {(r.quote, r.likelihood) for r in got["hotword"] if r.info_type_name == "PHONE_NUMBER"}
+    assert phones == {("415-555-0199", "VERY_LIKELY"), ("415-555-0142", "LIKELY")}
+    # the phone inside the email address is excluded, the bare one is kept
+    assert len(got["hotword"]) == 5 and len(got["overlap"]) == 4
 
 
 def test_exclusions_do_not_consume_cap_slots(spark):
@@ -226,16 +242,6 @@ def test_exclusions_do_not_consume_cap_slots(spark):
             df, ["EMAIL_ADDRESS"], ["t"], rule_sets=rules,
             max_findings_per_item=1).collect()]
         assert got == ["c@keep.example"], path.__name__
-
-
-def test_capped_fast_path_plan_unchanged_without_rules(spark):
-    # no rule sets → the capped plan must not contain the _raw field (the
-    # extra struct string is only materialized when rules exist)
-    df = _df(spark, ["a@x.com"])
-    plan = ins.inspect(
-        df, ["EMAIL_ADDRESS"], ["t"], max_findings_per_item=5
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "_raw" not in plan
 
 
 def test_rules_cell_python_oracle_cross_check(spark):

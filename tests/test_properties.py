@@ -96,17 +96,53 @@ def test_fixed_size_bucketing_total(spark, values):
             assert g == f"{float(lo)}-{float(lo+10)}"
 
 
+# random text with whole PII fragments in random order, so rows hold
+# several findings from different detectors
+PII_TEXT = st.lists(
+    st.one_of(
+        TEXT,
+        st.sampled_from([
+            "a@b.co", "415-555-0199", "123-45-6789", "4111 1111 1111 1111",
+            "DE44 5001 0517 5407 3249 31", "name:0000000000000066",
+        ]),
+    ),
+    max_size=6,
+).map(" ".join)
+
+
 @settings(max_examples=10, deadline=None)
-@given(st.lists(TEXT, min_size=1, max_size=6))
+@given(st.lists(PII_TEXT, min_size=1, max_size=6))
 def test_inspect_quotes_substring_property(spark, values):
+    """Every finding is a real substring. The capped path (the Python-``re``
+    scanner) keeps the first two findings of a pure-Python scan in (start,
+    detector index) order, and a cap above every row's count gives the
+    uncapped JVM path's multiset: Java regex and Python ``re`` agree."""
     from dlp_dataflow_deidentification_spark.operators.inspect import inspect
 
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(values)], "rid int, text string"
     )
-    rows = inspect(df, infotypes.DEFAULT_DETECTOR_ORDER, ["text"], ["rid"]).collect()
-    for r in rows:
-        assert r.quote in values[r.rid]  # every finding is a real substring
+    dets = [infotypes.resolve(n) for n in infotypes.DEFAULT_DETECTOR_ORDER]
+
+    def run(cap=None):
+        out = inspect(df, dets, ["text"], ["rid"], max_findings_per_item=cap)
+        return sorted((r.rid, r.info_type_name, r.quote) for r in out.collect())
+
+    rows = run()
+    for rid, _, quote in rows:
+        assert quote in values[rid]  # every finding is a real substring
+    scan = [
+        sorted(
+            (m.start(), di, it.name, m.group(0))
+            for di, it in enumerate(dets)
+            for m in re.finditer(it.pattern, v)
+        )
+        for v in values
+    ]
+    assert run(2) == sorted(
+        (rid, name, q) for rid, fs in enumerate(scan) for _, _, name, q in fs[:2]
+    )
+    assert run(max(map(len, scan)) + 1) == rows
 
 
 from hypothesis import given, settings

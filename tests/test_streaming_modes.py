@@ -377,11 +377,13 @@ def test_streaming_reid_strips_template_surrogate_envelope(spark, tmp_path, inpu
 
 def test_streaming_inspect_mode_with_rule_set_exclusions(spark, tmp_path, input_dir, template):
     """mode='inspect' with a full InspectConfig: a quote-scoped exclusion
-    ruleSet drops EMAIL findings in-stream (native filter over the match
-    arrays — no Python in the hot path); stream ≡ batch with the same
+    ruleSet drops EMAIL findings in-stream, uncapped (native filter over
+    the match arrays — no Python in the hot path) and with
+    maxFindingsPerItem (the scanner); stream ≡ batch with the same
     config."""
-    cfg = dds.InspectConfig.from_dict(
-        {
+    totals = {}
+    for cap in (None, 1):
+        doc = {
             "inspectConfig": {
                 "infoTypes": [{"name": "EMAIL_ADDRESS"}, {"name": "PHONE_NUMBER"}],
                 "ruleSet": [
@@ -399,40 +401,48 @@ def test_streaming_inspect_mode_with_rule_set_exclusions(spark, tmp_path, input_
                 ],
             }
         }
-    )
-    job = jobs.StreamingDeidJob(
-        spark,
-        template,
-        input_dir,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-        mode="inspect",
-        inspect_config=cfg,
-    )
-    job.run_to_completion()
-    got = {
-        r.info_type_name: r["count"]
-        for r in job.sink().read_committed(spark).groupBy("info_type_name").count().collect()
-    }
-    want = {
-        r.info_type_name: r["count"]
-        for r in dds.inspect(
-            spark.read.parquet(input_dir),
-            cfg.detectors,
-            ["text"],
-            id_columns=["conv_id"],
-            rule_sets=cfg.rule_sets,
+        if cap:
+            doc["inspectConfig"]["limits"] = {"maxFindingsPerItem": cap}
+        cfg = dds.InspectConfig.from_dict(doc)
+        job = jobs.StreamingDeidJob(
+            spark,
+            template,
+            input_dir,
+            str(tmp_path / f"out_{cap}"),
+            str(tmp_path / f"ckpt_{cap}"),
+            mode="inspect",
+            inspect_config=cfg,
         )
-        .groupBy("info_type_name")
-        .count()
-        .collect()
-    }
-    assert got == want and set(got) == {"EMAIL_ADDRESS", "PHONE_NUMBER"}
+        job.run_to_completion()
+        got = {
+            r.info_type_name: r["count"]
+            for r in job.sink().read_committed(spark).groupBy("info_type_name").count().collect()
+        }
+        want = {
+            r.info_type_name: r["count"]
+            for r in dds.inspect(
+                spark.read.parquet(input_dir),
+                cfg.detectors,
+                ["text"],
+                id_columns=["conv_id"],
+                max_findings_per_item=cfg.max_findings_per_item,
+                rule_sets=cfg.rule_sets,
+            )
+            .groupBy("info_type_name")
+            .count()
+            .collect()
+        }
+        assert got == want and set(got) == {"EMAIL_ADDRESS", "PHONE_NUMBER"}
+        totals[cap] = got
     # the exclusion actually bit: fewer emails than the rule-free run
     free = dds.inspect(
         spark.read.parquet(input_dir), cfg.detectors, ["text"]
     ).where(F.col("info_type_name") == "EMAIL_ADDRESS").count()
-    assert got["EMAIL_ADDRESS"] < free
+    assert totals[None]["EMAIL_ADDRESS"] < free
+    # a turn with a phone holds an excluded email before it (turn 132:
+    # user132@example.com, then 415-555-0132), so cap 1 keeps every
+    # finding only if excluded findings take no cap slots
+    assert totals[1] == totals[None]
 
 
 def test_streaming_inline_tokenize_then_inline_reid_roundtrip(spark, tmp_path, input_dir):
