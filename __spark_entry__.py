@@ -345,11 +345,9 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k. Round 6: served through the Arrow/BLAS
     kernel (guide §4.2 — one numpy matmul per corpus batch) instead of the
     per-pair higher-order-function cosine, which interpreted 2·dim lambda
-    steps for each of the |corpus|·|Q| pairs (42 s at sf1.0, one core; the
-    HOF operator remains ``similarity.cosine_topk`` for per-pair verify
-    stages). Same oracle as always — both kernels have been driver-proven
-    value-identical against it every round — and re-verified green at
-    sf0.001/0.01/0.1 after the swap."""
+    steps for each of the |corpus|·|Q| pairs (42 s at sf1.0, one core).
+    Same oracle as always, re-verified green at sf0.001/0.01/0.1 after the
+    swap."""
     from dlp_dataflow_deidentification_spark.operators import similarity
 
     emb = _spread(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id")

@@ -41,32 +41,10 @@ def stopword_count(col: Column, words: list[str]) -> Column:
     return F.size(F.regexp_extract_all(F.lower(col), F.lit(pat), F.lit(0)))
 
 
-def quality_score(col: Column) -> Column:
-    """Deterministic [0,1] quality heuristic: length band + stopword presence
-    - punctuation excess. (Components mirror common corpus-filter features:
-    length, punct ratio, stopword ratio.)"""
-    toks = token_count(col).cast("double")
-    sw = stopword_count(col, LANG_STOPWORDS["en"]).cast("double")
-    length_term = F.least(toks / F.lit(64.0), F.lit(1.0)) * F.lit(0.4)
-    stop_term = F.least(sw / F.greatest(toks, F.lit(1.0)) * F.lit(4.0), F.lit(1.0)) * F.lit(0.3)
-    punct_term = (F.lit(1.0) - F.least(punct_ratio(col) * F.lit(5.0), F.lit(1.0))) * F.lit(0.3)
-    return F.round(length_term + stop_term + punct_term, 6)
-
-
-def lang_id(col: Column) -> Column:
-    """Stopword-dictionary language ID: argmax of per-language stopword hits,
-    deterministic tiebreak by language code, 'und' when no hits.
-    (array_max on struct compares fields in order: max hits wins, larger
-    lang code breaks ties.) NOTE: the argmax struct appears in both the
-    predicate and the value branch; when this column sits next to other
-    metric columns, prefer materializing ``metric_components`` once and
-    using ``lang_from``."""
-    best = _lang_best(col)
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
 def _lang_best(col: Column) -> Column:
-    """argmax struct behind lang_id, exposed so it can be materialized once."""
+    """Per-language stopword hits as an argmax struct: array_max on structs
+    compares fields in order, so max hits wins and the larger lang code
+    breaks ties."""
     scores = [
         F.struct(
             stopword_count(col, ws).alias("hits"),
@@ -80,13 +58,14 @@ def _lang_best(col: Column) -> Column:
 def metric_components(col: Column) -> Column:
     """The shared metric building blocks as ONE struct expression, so a
     caller can materialize each regex/split pass exactly once. The naive
-    composition (quality_score + lang_id + token_count as sibling columns)
+    composition (quality + lang + token_count as sibling columns)
     recomputes token_count three times and punct_ratio twice per row:
     every repeat sits inside a CASE WHEN / least / greatest branch, and
     Spark's codegen subexpression elimination skips conditionally-evaluated
     subtrees (measured: the single-projection form burned 60+ CPU-seconds
     on 50k docs; the materialized form ~8). Fields: toks (int), sw (en
-    stopword hits), punct (unrounded ratio), best (lang argmax struct)."""
+    stopword hits), punct (unrounded ratio), best (lang argmax struct).
+    Compose the metrics from it with ``quality_from`` and ``lang_from``."""
     return F.struct(
         token_count(col).alias("toks"),
         stopword_count(col, LANG_STOPWORDS["en"]).alias("sw"),
@@ -96,8 +75,9 @@ def metric_components(col: Column) -> Column:
 
 
 def quality_from(m: Column) -> Column:
-    """quality_score recomposed from materialized components — identical
-    arithmetic on identical values, so results are bit-identical."""
+    """Deterministic [0,1] quality heuristic over materialized components:
+    length band + stopword presence - punctuation excess (common
+    corpus-filter features: length, punct ratio, stopword ratio)."""
     toks = m["toks"].cast("double")
     sw = m["sw"].cast("double")
     length_term = F.least(toks / F.lit(64.0), F.lit(1.0)) * F.lit(0.4)
@@ -111,6 +91,8 @@ def quality_from(m: Column) -> Column:
 
 
 def lang_from(m: Column) -> Column:
+    """Stopword-dictionary language ID over materialized components: the
+    argmax language of per-language stopword hits, 'und' when no hits."""
     best = m["best"]
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
 

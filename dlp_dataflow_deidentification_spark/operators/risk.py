@@ -1,6 +1,5 @@
 """Re-identification risk analysis — DLP's RiskAnalysisJobConfig metrics
-computed natively (k-anonymity, l-diversity, categorical / numerical
-stats).
+computed natively (k-anonymity, l-diversity, numerical stats).
 
 The reference pipeline stops at inspect/deid (its DLPTransform switch,
 common/DLPTransform.java:110-181); its users run exactly these DLP risk
@@ -60,15 +59,6 @@ def l_diversity(
     return df.groupBy(*quasi_ids).agg(
         F.count(F.lit(1)).cast("long").alias("class_size"),
         F.countDistinct(s).cast("long").alias("l_distinct_sensitive"),
-    )
-
-
-def categorical_stats(df: DataFrame, column: "str | Column") -> DataFrame:
-    """Value-frequency histogram (CategoricalStatsConfig): per value, its
-    record count. The long tail stays distributed — no driver collect."""
-    c = F.col(column) if isinstance(column, str) else column
-    return df.groupBy(c.alias("value")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_records")
     )
 
 

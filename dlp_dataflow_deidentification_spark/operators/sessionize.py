@@ -20,13 +20,6 @@ def epoch_seconds(col: Column) -> Column:
     return col.cast("timestamp").cast("long")
 
 
-def with_turn_order(df: DataFrame) -> DataFrame:
-    """Stable (conv_id, turn_idx) ordering guarantee: recompute a dense turn
-    order from event time, tiebreak on turn_idx (input_hint invariant)."""
-    w = W.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    return df.withColumn("turn_order", (F.row_number().over(w) - 1).cast("int"))
-
-
 def sessionize(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Assign a per-conversation session index by event-time gap.
 

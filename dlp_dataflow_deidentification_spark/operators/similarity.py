@@ -1,9 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline; random-hyperplane-LSH
-bucketed search as the 100 TB path (scan only same/nearby buckets instead of
-the full corpus). Dot products via JVM higher-order functions
-(zip_with + aggregate) — no Python per row.
+Exact brute-force cosine top-k (``cosine_topk_arrow``: one numpy matmul per
+Arrow batch) as the exactness baseline; random-hyperplane-LSH and IVF
+bucketed search as the 100 TB path (scan only same/nearby buckets instead
+of the full corpus). The bucketed paths and embedding dedup score pairs
+with JVM higher-order functions (zip_with + aggregate) — no Python per row.
 """
 from __future__ import annotations
 
@@ -49,8 +50,9 @@ def _check_dim(df: DataFrame, vec_col: str, dim: int, what: str) -> None:
 def _check_same_width(
     corpus: DataFrame, queries: DataFrame, vec_col: str, what: str
 ) -> None:
-    """Corpus/query width consistency peek (same failure mode as
-    ``_check_dim``: silent null sims instead of an error)."""
+    """Corpus/query width consistency peek for the brute-force path: a
+    width mismatch would otherwise drop every corpus row from scoring and
+    return an empty top-k instead of an error."""
     c = corpus.select(F.size(F.col(vec_col)).alias("n")).first()
     q = queries.select(F.size(F.col(vec_col)).alias("n")).first()
     if c is not None and q is not None and c.n is not None and q.n is not None and c.n != q.n:
@@ -71,34 +73,6 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact brute-force cosine top-k: broadcast the (small) query set against
-    the corpus — a single narrow pass over the corpus, then a per-query top-k
-    window. Output: query_id, vec_id, rank, sim.
-
-    Scale: corpus-side scan is embarrassingly parallel; only the per-query
-    top-k rows shuffle (k·|Q| rows, not the corpus).
-    """
-    _check_same_width(corpus, queries, vec_col, "cosine_topk")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    c = corpus.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("cv"))
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        cosine(F.col("qv"), F.col("cv")).alias("sim"),
-    )
-    return _topk(scored, k)
-
-
 def cosine_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -111,30 +85,25 @@ def cosine_topk_arrow(
     matrix rides to executors in the UDF closure; each Arrow batch of the
     corpus is scored with ONE numpy matmul (|batch| x |Q|) and reduced to
     its per-batch top-k inside ``mapInPandas``, so only k·|Q| candidate
-    rows per batch reach the final global top-k window. Same results as
-    ``cosine_topk`` (ties broken by vec_id); at scale this swaps the
-    per-element interpreted higher-order dot product for BLAS — the right
-    brute-force baseline when embeddings are wide or the corpus is huge.
+    rows per batch reach the final global top-k window. Ranking is sim
+    desc, ties broken by vec_id asc — the oracle's order.
 
     Edge-case contract: zero-norm corpus vectors AND zero-norm query
-    vectors score sim=0.0 here (a defined value); the native/HOF path's
-    cosine is NaN for them (undefined, and Spark's desc sort ranks NaN
-    first). Filter zero vectors out before
-    calling either path if your corpus can contain them. Ties are broken by
-    vec_id among rows with EQUAL computed sims — but BLAS blocking gives
-    remainder rows position-dependent last-ulp results, so EXACT-duplicate
-    corpus vectors can rank among themselves differently from the
-    per-row-deterministic native path; dedup exact copies first if that
+    vectors score sim=0.0 (a defined value, where the cosine formula is
+    0/0). Ties are broken by vec_id among rows with EQUAL computed sims —
+    but BLAS blocking gives remainder rows position-dependent last-ulp
+    results, so EXACT-duplicate corpus vectors can rank among themselves
+    by position rather than by vec_id; dedup exact copies first if that
     distinction matters. Null or wrong-width corpus vectors are dropped
-    from scoring (the native path's null sim sorts last — same top-k).
+    from scoring.
     """
     import numpy as np
     import pandas as pd
 
     _check_same_width(corpus, queries, vec_col, "cosine_topk_arrow")
 
-    # id columns keep their INPUT types (string media ids etc.), like the
-    # native path — the mapInPandas schema is derived, not hardcoded long
+    # id columns keep their INPUT types (string ids etc.) — the
+    # mapInPandas schema is derived, not hardcoded long
     q_id_type = queries.schema[query_id_col].dataType.simpleString()
     c_id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {q_id_type}, vec_id {c_id_type}, sim double"
@@ -149,8 +118,8 @@ def cosine_topk_arrow(
     q_ids = np.array([r.query_id for r in qrows])
     Q = np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows])
     # same zero-norm guard as the corpus side: an unguarded 0/0 makes every
-    # sim for that query NaN, and NaN ordering then diverges from the native
-    # path's desc sort — a zero-norm QUERY scores 0.0 against everything
+    # sim for that query NaN, and Spark's desc sort ranks NaN first — a
+    # zero-norm QUERY scores 0.0 against everything
     qnorms = np.linalg.norm(Q, axis=1, keepdims=True)
     qnorms[qnorms == 0] = 1.0
     Qn = Q / qnorms
@@ -163,8 +132,7 @@ def cosine_topk_arrow(
                 continue
             # null / wrong-width corpus vectors cannot enter np.stack (it
             # raises on None and on ragged input, failing the whole job);
-            # drop them — the native path gives them a null sim, which desc
-            # sort places last, so the surviving top-k is identical
+            # drop them from scoring
             ok = np.fromiter(
                 (v is not None and len(v) == width for v in pdf[vec_col]),
                 dtype=bool,
@@ -183,12 +151,12 @@ def cosine_topk_arrow(
             out_q, out_id, out_sim = [], [], []
             for j in range(len(q_ids)):
                 col = S[:, j]
-                # top-k with the native path's tie rule (sim desc, vec_id
-                # asc). argpartition alone keeps an ARBITRARY subset of
-                # values tied at the k-boundary, so include every row >= the
-                # k-th value before the exact lexsort — otherwise a
-                # duplicate-sim low-id vector can be dropped in favor of a
-                # higher id, diverging from cosine_topk and the oracle.
+                # top-k with the oracle's tie rule (sim desc, vec_id asc).
+                # argpartition alone keeps an ARBITRARY subset of values
+                # tied at the k-boundary, so include every row >= the k-th
+                # value before the exact lexsort — otherwise a duplicate-sim
+                # low-id vector can be dropped in favor of a higher id,
+                # diverging from the oracle.
                 if kk < len(ids):
                     part = np.argpartition(-col, kk - 1)[:kk]
                     cand = np.flatnonzero(col >= col[part].min())

@@ -113,17 +113,6 @@ def read_files(
     return df.withColumn(SOURCE_KEY_COL, _sanitize_col(decoded))
 
 
-def stringify_all(df: DataFrame, except_cols: tuple = (SOURCE_KEY_COL,)) -> DataFrame:
-    """Cast every column to string — the reference's universal degradation for
-    BigQuery output (DLPTextToBigQueryStreaming.java:845-846)."""
-    return df.select(
-        *[
-            F.col(c) if c in except_cols else F.col(c).cast("string").alias(c)
-            for c in df.columns
-        ]
-    )
-
-
 def write_text_lines(df: DataFrame, path: str, delimiter: str = ",") -> None:
     """Row → delimiter-joined text line, partitioned per source key when
     present (ConvertTableRowToString + WriteToGCS analogue,

@@ -15,7 +15,8 @@ PubSub topic reads the same envelope from the Kafka topic.
 
 No broker (or spark-sql-kafka jar) exists in this sandbox, so the publisher
 raises a clear error at start() when the connector is absent; the converter —
-the actual row→message logic — is fully unit-tested (tests/test_streaming_modes.py).
+the actual row→message logic — is fully unit-tested
+(tests/test_streaming.py::test_pubsub_message_converter_payload).
 """
 from __future__ import annotations
 

@@ -21,16 +21,18 @@ import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 TURNS = int(os.environ.get("SPARK_GRAFT_SCALING_TURNS", "8000000"))
-# N vs 4N executors. This sandbox's memory bandwidth saturates string/regex
+# N vs 4N executors. This host's memory bandwidth saturates string/regex
 # workloads at ~8 busy cores (measured round 1: pure-python regex throughput
-# grows 4.2x from 2 to 8 processes but only 1.25x from 8 to 32; per-row JVM
-# CPU grows 28% from 2 to 8 single-core executors while utilization stays
-# ~1.0) — a real cluster adds a machine's worth of memory bandwidth with
-# every executor, which one box cannot emulate past ~4-8 busy cores. The
-# N->4N demonstration therefore runs INSIDE the linear-bandwidth envelope
-# (1 vs 4 executors); 8 is recorded as an informational extra showing the
-# box's saturation point, with per-level CPU utilization as the attribution
-# evidence.
+# grows 4.2x from 2 to 8 processes but only 1.25x from 8 to 32). An earlier
+# reading of +28% per-row JVM CPU from 2 to 8 single-core executors at
+# utilization ~1.0 came from whole-process-tree CPU accounting; the 8M-turn
+# levels have not been re-measured with executor-only CPU, which needs a
+# host bigger than 4 vCPUs. A real cluster adds a machine's worth of memory
+# bandwidth with every executor, which one box cannot emulate past ~4-8
+# busy cores. The N->4N demonstration therefore runs INSIDE the
+# linear-bandwidth envelope (1 vs 4 executors); 8 is recorded as an
+# informational extra showing the box's saturation point, with per-level
+# CPU utilization as the attribution evidence.
 LEVELS = tuple(
     int(x) for x in os.environ.get("SPARK_GRAFT_SCALING_LEVELS", "1,4").split(",")
 )
@@ -259,10 +261,13 @@ def main() -> None:
                 "JVM per executor (local-cluster) — matches a real N-machine "
                 "deployment and removes the round-1 shared-heap GC confound. "
                 "The pair sits inside the box's linear memory-bandwidth "
-                "envelope; saturation beyond ~8 busy cores (per-row CPU "
-                "+28% from 2->8 executors at utilization ~1.0) is recorded "
+                "envelope; saturation beyond ~8 busy cores is recorded "
                 "informationally in extra_levels — a real cluster adds "
-                "bandwidth with every machine, one box does not"
+                "bandwidth with every machine, one box does not. The "
+                "earlier +28% per-row CPU from 2->8 executors at "
+                "utilization ~1.0 came from whole-process-tree CPU "
+                "accounting; the 8M-turn levels have not been re-measured "
+                "with executor-only CPU (needs a host bigger than 4 vCPUs)"
             ),
         }
         with open(os.path.join(HERE, "BENCH_SCALING.json"), "w") as f:

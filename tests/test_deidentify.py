@@ -362,10 +362,11 @@ def test_inspect_cap_truncates_in_position_order(spark):
 
 
 def test_inspect_position_cap_long_cell_is_not_quadratic_in_structs(spark):
-    """Over-cap rows pay the offset fold; with thousands of matches in one
-    cell the fold must accumulate ONLY int offsets (linear-ish memcpy of a
-    primitive array) — the old form re-copied every tagged STRUCT (five
-    strings each) per step, O(m²) string traffic that stalls on long cells."""
+    """A capped ``inspect`` call runs on the ``inspect_offsets`` scanner.
+    One cell with 5,000 matches under a cap of 10 must still finish well
+    inside the bound: any per-match work that grows with the matches seen
+    so far (re-copying the findings collected so far at each step) is
+    O(m²) and stalls on long cells."""
     import time
 
     import dlp_dataflow_deidentification_spark as dds
@@ -378,7 +379,7 @@ def test_inspect_position_cap_long_cell_is_not_quadratic_in_structs(spark):
         df, ["EMAIL_ADDRESS"], ["t"], id_columns=["id"], max_findings_per_item=10
     ).collect()
     assert [r.quote for r in out] == [f"x{i}@b.com" for i in range(10)]
-    assert time.time() - t0 < 60  # generous; the struct-fold form crawls
+    assert time.time() - t0 < 60  # generous; quadratic per-match work crawls
 
 
 def test_inspect_config_fidelity_on_card_notes(spark, sf_dir):

@@ -458,3 +458,35 @@ def test_dead_letter_reason_with_lone_surrogate_without_arrow_fallback(
     assert len(dead) == 1 and dead[0].path.endswith("bad.csv")
     assert "analysis failure" in dead[0].reason
     assert "undecodable header \\ud800" in dead[0].reason
+
+
+def test_dead_letter_write_falls_back_row_wise_when_arrow_conversion_fails(
+    spark, dirs, monkeypatch
+):
+    """Any failure of the Arrow conversion behind the dead-letter write (not
+    only the lone-surrogate case) must leave the batch committable: with
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` at its default,
+    ``createDataFrame`` retries row-wise and the dead-letter row still
+    lands next to the good key's rows."""
+    _write(os.path.join(dirs["in"], "good.csv"), ["a,b", "3,4"])
+    _write(os.path.join(dirs["in"], "stray.bak"), ["junk"])
+
+    from dlp_dataflow_deidentification_spark.sources.dynamic import (
+        DynamicSchemaFileStream,
+    )
+
+    calls = []
+
+    def arrow_fails(*args, **kwargs):
+        calls.append(1)
+        raise RuntimeError("forced Arrow conversion failure")
+
+    monkeypatch.setattr(spark, "_create_from_pandas_with_arrow", arrow_fails)
+    job = DynamicSchemaFileStream(spark, dirs["in"], dirs["out"], dirs["ckpt"])
+    assert job.run_to_completion()
+    assert calls, "the dead-letter write must attempt the Arrow conversion"
+    assert [(r.a, r.b) for r in job.read_table("good").collect()] == [("3", "4")]
+    dead = job.read_table(DynamicSchemaFileStream.DEAD_LETTER_KEY).collect()
+    assert [(os.path.basename(r.path), r.reason) for r in dead] == [
+        ("stray.bak", "unrecognized file extension")
+    ]

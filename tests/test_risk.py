@@ -1,5 +1,5 @@
 """Re-identification risk analysis (operators/risk.py): k-anonymity,
-l-diversity, categorical/numerical stats against hand-computed oracles,
+l-diversity, numerical stats against hand-computed oracles,
 plus the deid-decision loop (generalize until k >= threshold)."""
 import pytest
 from pyspark.sql import functions as F
@@ -43,11 +43,6 @@ def test_l_diversity(people):
     # the measles class has k=2 but l=1: k alone hides the disclosure
     assert got[("02139", "20-29")] == (2, 1)
     assert got[("94110", "20-29")] == (3, 2)
-
-
-def test_categorical_stats(people):
-    got = {r.value: r.n_records for r in risk.categorical_stats(people, "disease").collect()}
-    assert got == {"flu": 3, "cold": 1, "measles": 2}
 
 
 def test_numerical_stats_exact_quantiles(spark):

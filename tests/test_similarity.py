@@ -1,4 +1,5 @@
-"""Similarity-search tests: brute-force exactness vs numpy oracle; LSH recall."""
+"""Similarity-search tests: brute-force exactness vs a numpy reference; LSH
+and IVF recall against the same reference."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,8 @@ def queries_df(spark, emb):
 
 
 def numpy_topk(emb_rows, q_rows, k):
+    """Exact cosine top-k per query: {query_id: [(vec_id, sim), ...]} in
+    rank order (sim desc, vec_id asc)."""
     ids = np.array([r.vec_id for r in emb_rows])
     M = np.array([r.embedding for r in emb_rows], dtype=np.float64)
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
@@ -27,17 +30,25 @@ def numpy_topk(emb_rows, q_rows, k):
         v = np.array(q.embedding, dtype=np.float64)
         sims = Mn @ (v / np.linalg.norm(v))
         order = np.lexsort((ids, -sims))[:k]
-        out[q.query_id] = [int(ids[i]) for i in order]
+        out[q.query_id] = [(int(ids[i]), float(sims[i])) for i in order]
     return out
 
 
 def test_brute_force_topk_matches_numpy(spark, emb, queries_df):
-    got_rows = similarity.cosine_topk(emb, queries_df, k=5).collect()
+    """The Arrow/BLAS brute-force path returns the exact ranking of the
+    numpy reference, with sims to float tolerance."""
+    got_rows = similarity.cosine_topk_arrow(emb, queries_df, k=5).collect()
     got = {}
     for r in sorted(got_rows, key=lambda r: (r.query_id, r.rank)):
-        got.setdefault(r.query_id, []).append(r.vec_id)
+        got.setdefault(r.query_id, []).append((r.rank, r.vec_id, r.sim))
     want = numpy_topk(emb.collect(), queries_df.collect(), 5)
-    assert got == want
+    assert set(got) == set(want) and want
+    for qid, ranked in want.items():
+        assert [(rank, vid) for rank, vid, _ in got[qid]] == [
+            (i + 1, vid) for i, (vid, _) in enumerate(ranked)
+        ]
+        for (_, _, sim), (_, wsim) in zip(got[qid], ranked):
+            assert abs(sim - wsim) < 1e-9
     # self-similarity: rank 1 is the query itself with sim ≈ 1
     by_rank1 = {r.query_id: r for r in got_rows if r.rank == 1}
     for qid, r in by_rank1.items():
@@ -46,8 +57,13 @@ def test_brute_force_topk_matches_numpy(spark, emb, queries_df):
 
 def test_cosine_topk_arrow_equals_native(spark, emb, queries_df):
     """The Arrow/BLAS matmul path returns the identical ranking (and sims to
-    float tolerance) as the native higher-order-function path."""
-    nat = similarity.cosine_topk(emb, queries_df, k=7).collect()
+    float tolerance) as the native higher-order-function scoring: IVF with
+    every cell probed scans the whole corpus with the JVM cosine, so it is
+    an exact top-k."""
+    n_cells = 4
+    nat = similarity.ivf_topk(
+        emb, queries_df, k=7, n_cells=n_cells, nprobe=n_cells
+    ).collect()
     arr = similarity.cosine_topk_arrow(emb, queries_df, k=7).collect()
     nat_m = {(r.query_id, r.rank): (r.vec_id, r.sim) for r in nat}
     arr_m = {(r.query_id, r.rank): (r.vec_id, r.sim) for r in arr}
@@ -60,11 +76,9 @@ def test_cosine_topk_arrow_equals_native(spark, emb, queries_df):
 
 def test_lsh_topk_recall(spark, emb, queries_df):
     k = 5
-    exact = similarity.cosine_topk(emb, queries_df, k=k).collect()
+    exact = numpy_topk(emb.collect(), queries_df.collect(), k)
     approx = similarity.lsh_topk(emb, queries_df, k=k, n_planes=8).collect()
-    ex = {}
-    for r in exact:
-        ex.setdefault(r.query_id, set()).add(r.vec_id)
+    ex = {q: {vid for vid, _ in ranked} for q, ranked in exact.items()}
     ap = {}
     for r in approx:
         ap.setdefault(r.query_id, set()).add(r.vec_id)
@@ -138,17 +152,6 @@ def test_embedding_dedup_recalls_perturbed_near_dups(spark, emb):
     assert set(got) == want  # 100% recall AND no sub-threshold survivors
 
 
-def test_similarity_plans_native(spark, emb, queries_df):
-    plan = (
-        similarity.cosine_topk(emb, queries_df, k=3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Python" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan  # query side broadcast
-
-
 def test_kmeans_centroids_deterministic_and_complete(spark, sf_dir):
     from dlp_dataflow_deidentification_spark.operators import similarity as S
 
@@ -172,7 +175,8 @@ def test_kmeans_centroids_rejects_non_finite_component(spark):
 
 def test_ivf_topk_recall_and_native_plan(spark, sf_dir):
     """IVF must recover ≥90% of the exact top-10 on raw (unplanted random)
-    embeddings with nprobe=3 of 8 cells, and plan without Python."""
+    embeddings with nprobe=3 of 8 cells, and plan without Python, with the
+    query side broadcast."""
     from pyspark.sql import functions as F
 
     from dlp_dataflow_deidentification_spark.operators import similarity as S
@@ -181,7 +185,11 @@ def test_ivf_topk_recall_and_native_plan(spark, sf_dir):
     qs = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    want = {(r.query_id, r.vec_id) for r in S.cosine_topk(emb, qs, k=10).collect()}
+    want = {
+        (q, vid)
+        for q, ranked in numpy_topk(emb.collect(), qs.collect(), 10).items()
+        for vid, _ in ranked
+    }
 
     def recall(npr):
         got = {
@@ -200,6 +208,7 @@ def test_ivf_topk_recall_and_native_plan(spark, sf_dir):
     assert r5 >= max(r3, 0.8), (r3, r5)
     plan = S.ivf_topk(emb, qs, k=10)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
+    assert "BroadcastExchange" in plan  # the probe (query) side is broadcast
 
 
 def test_cosine_topk_arrow_boundary_ties_keep_lowest_ids(spark):
@@ -245,7 +254,7 @@ def test_cosine_topk_arrow_zero_norm_query_defined(spark):
     z = [r for r in rows if r.query_id == 0]
     assert len(z) == 3
     assert all(r.sim == 0.0 for r in z)
-    # all-tied sims → vec_id ascending tie-break, like the native path
+    # all-tied sims → vec_id ascending tie-break
     assert [r.vec_id for r in sorted(z, key=lambda r: r.rank)] == [0, 1, 2]
     assert all(r.sim > 0 for r in rows if r.query_id == 1)
 
@@ -302,20 +311,17 @@ def test_dim_mismatch_raises_instead_of_degenerating(spark, emb, queries_df):
         similarity.kmeans_centroids(emb, k=4, dim=128)
     with pytest.raises(ValueError, match="dim=16"):
         similarity.ivf_topk(emb, queries_df, n_cells=4, dim=16)
-    # width mismatch between corpus and queries (brute-force paths)
+    # width mismatch between corpus and queries (brute-force path)
     wide_q = queries_df.select(
         "query_id", F.concat(F.col("embedding"), F.col("embedding")).alias("embedding")
     )
-    with pytest.raises(ValueError, match="wide"):
-        similarity.cosine_topk(emb, wide_q)
     with pytest.raises(ValueError, match="wide"):
         similarity.cosine_topk_arrow(emb, wide_q)
 
 
 def test_cosine_topk_arrow_tolerates_null_and_ragged_corpus_rows(spark):
     """A null (or wrong-width) corpus embedding must not crash the Arrow
-    path (np.stack raises on None/ragged) — it is dropped from scoring,
-    matching the native path where its null sim sorts last."""
+    path (np.stack raises on None/ragged) — it is dropped from scoring."""
     corpus = spark.createDataFrame(
         [
             (1, [1.0, 0.0]),

@@ -1,95 +1,10 @@
-"""Multimodal plumbing + file sources + chatlog parser tests."""
-import hashlib
+"""File source and chatlog parser tests."""
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from dlp_dataflow_deidentification_spark.operators import multimodal as mm
 from dlp_dataflow_deidentification_spark.sources import chatlog, files
-
-
-# -- multimodal -------------------------------------------------------------
-
-
-def test_image_features_deterministic_schema_and_values(spark):
-    media = mm.synthesize_media(spark, 30)
-    feats = mm.extract_image_features(media)
-    rows = feats.collect()
-    assert len(rows) == media.filter("kind = 'image'").count() > 0
-    assert [f.name for f in feats.schema.fields] == [
-        "media_id", "width", "height", "embedding", "payload_sha",
-    ]
-    r = sorted(rows, key=lambda r: r.media_id)[0]
-    assert len(r.embedding) == 16
-    # embedding is unit-norm and reproducible
-    s = sum(x * x for x in r.embedding)
-    assert abs(s - 1.0) < 1e-3
-    again = {x.media_id: x.embedding for x in mm.extract_image_features(media).collect()}
-    assert again[r.media_id] == r.embedding
-
-
-def test_image_features_sha_matches_payload(spark):
-    media = mm.synthesize_media(spark, 9)
-    payloads = {r.media_id: bytes(r.payload) for r in media.collect()}
-    for r in mm.extract_image_features(media).collect():
-        assert r.payload_sha == hashlib.sha256(payloads[r.media_id]).hexdigest()
-
-
-def test_video_frame_sampling_fanout(spark):
-    media = mm.synthesize_media(spark, 30)
-    frames = mm.sample_video_frames(media, every_ms=1000)
-    rows = frames.collect()
-    durs = {r.media_id: r.duration_ms for r in media.filter("kind='video'").collect()}
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r.media_id, []).append(r)
-    for mid, frs in by_media.items():
-        expected = len(range(0, durs[mid], 1000))
-        assert len(frs) == expected
-        assert sorted(f.frame_idx for f in frs) == list(range(expected))
-
-
-def test_real_decoder_raises_not_implemented(spark):
-    media = mm.synthesize_media(spark, 6)
-    with pytest.raises(Exception) as e:
-        mm.extract_image_features(media, decoder="pil").collect()
-    assert "NotImplementedError" in str(e.value) or isinstance(
-        e.value, NotImplementedError
-    )
-
-
-def test_audio_features_frame_math_and_determinism(spark):
-    media = mm.synthesize_media(spark, 30)
-    out = {r.media_id: r for r in mm.extract_audio_features(media, frame_ms=25, hop_ms=10).collect()}
-    src = {r.media_id: r for r in media.filter("kind='audio'").collect()}
-    assert set(out) == set(src) and out
-    for mid, r in out.items():
-        dur = src[mid].duration_ms
-        # MFCC-style framing: windows of 25ms at 10ms hop
-        assert r.n_frames == (dur - 25) // 10 + 1
-        assert r.duration_ms == dur
-        assert len(r.embedding) == 16
-        import hashlib as H
-
-        assert r.payload_sha == H.sha256(bytes(src[mid].payload)).hexdigest()
-    # deterministic across runs
-    again = {r.media_id: r.embedding for r in mm.extract_audio_features(media).collect()}
-    assert {m: r.embedding for m, r in out.items()} == again
-
-
-def test_resize_images_tracks_target_dims(spark):
-    media = mm.synthesize_media(spark, 30)
-    small = {r.media_id: r for r in mm.resize_images(media, 32, 32).collect()}
-    big = {r.media_id: r for r in mm.resize_images(media, 128, 128).collect()}
-    src_ids = {r.media_id for r in media.filter("kind='image'").collect()}
-    assert set(small) == src_ids == set(big) and src_ids
-    for mid in src_ids:
-        assert (small[mid].width, small[mid].height) == (32, 32)
-        # fake payload size is proportional to target area (real schema/shape)
-        assert len(big[mid].payload) > len(small[mid].payload)
-    with pytest.raises(Exception):
-        mm.resize_images(media, 32, 32, decoder="pil").collect()
 
 
 # -- file sources ------------------------------------------------------------

@@ -336,6 +336,29 @@ def test_pubsub_message_converter_payload(spark):
     assert [(x.key, bytes(x.value).decode()) for x in h] == [("table_name", "tbl_a")]
 
 
+def _kafka_available(spark) -> bool:
+    try:
+        spark.read.format("kafka").load()
+        return True
+    except Exception as e:
+        return "Failed to find data source" not in str(e)
+
+
+def test_publish_stream_without_kafka_connector_raises_actionable_error(spark, tmp_path):
+    """Without the spark-sql-kafka connector, starting the publisher must
+    raise an error that names the missing connector and the --packages fix,
+    not Spark's bare data-source lookup failure (K4 publisher gate)."""
+    from dlp_dataflow_deidentification_spark.streaming import messages
+
+    if _kafka_available(spark):
+        pytest.skip("spark-sql-kafka present — the gate does not apply")
+    df = spark.readStream.format("rate").load().select(
+        F.lit("tbl_a").alias("source_key"), "value"
+    )
+    with pytest.raises(NotImplementedError, match="Kafka connector not on the classpath.*--packages"):
+        messages.publish_stream(df, "t", "localhost:1", str(tmp_path / "ckpt"))
+
+
 def test_streaming_exact_dedup_drops_redelivered_rows(spark, tmp_path):
     """dropDuplicatesWithinWatermark dedup: the same turns delivered twice
     (two input files with overlapping rows) commit exactly once, equal to

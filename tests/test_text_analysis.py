@@ -27,10 +27,18 @@ def test_punct_ratio(spark):
     assert out == [0.25, 1.0, 0.0, 0.0]
 
 
+def quality(col):
+    return T.quality_from(T.metric_components(col))
+
+
+def lang(col):
+    return T.lang_from(T.metric_components(col))
+
+
 def test_quality_score_monotone_band(spark):
     rich = "the quick brown fox and the lazy dog went to the market for a while " * 5
     junk = "!!! ??? ### $$$ %%%"
-    hi, lo = vals(spark, [rich, junk], T.quality_score)
+    hi, lo = vals(spark, [rich, junk], quality)
     assert 0 <= lo < hi <= 1.0
 
 
@@ -43,7 +51,7 @@ def test_lang_id(spark):
             "el gato es un animal y la casa es grande",
             "zzz qqq xxx",
         ],
-        T.lang_id,
+        lang,
     )
     assert out == ["en", "de", "es", "und"]
 
@@ -57,8 +65,8 @@ def test_fingerprint_normalizes_whitespace_and_case(spark):
 def test_all_native_plans(spark):
     df = spark.createDataFrame([("x",)], "v string").select(
         T.token_count(F.col("v")),
-        T.quality_score(F.col("v")),
-        T.lang_id(F.col("v")),
+        quality(F.col("v")),
+        lang(F.col("v")),
         T.fingerprint(F.col("v")),
     )
     assert "Python" not in df._jdf.queryExecution().executedPlan().toString()
