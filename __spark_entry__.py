@@ -197,17 +197,6 @@ def q_deid_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_crypto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ECB fast-path tokenize→reidentify roundtrip (explicit opt-in cipher)."""
-    cards = _cards(spark, sf_dir)
-    enc = cards.withColumn(
-        "holder_name", dds.transforms.crypto_deterministic(F.col("holder_name"), KEY)
-    ).withColumn("card_number", dds.transforms.crypto_deterministic(F.col("card_number"), KEY))
-    return dds.reidentify(enc, ["holder_name", "card_number"], KEY, mode="ecb").select(
-        "id", "holder_name", "card_number"
-    )
-
-
 def q_crypto_roundtrip_siv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-default cipher roundtrip: AES-SIV (RFC 5297, the
     reference's cryptoDeterministicConfig cipher — deid-template.json:212-231)
@@ -225,6 +214,10 @@ def q_crypto_roundtrip_siv(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = dds.reidentify(enc, ["holder_name"], KEY, surrogate_info_type="NAME_TOKEN")
     out = dds.reidentify(out, ["card_number"], KEY, surrogate_info_type="CC_TOKEN")
     return out.select("id", "holder_name", "card_number")
+
+
+# AES-SIV is the one deterministic cipher: both names, one body
+q_crypto_roundtrip = q_crypto_roundtrip_siv
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

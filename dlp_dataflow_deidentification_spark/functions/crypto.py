@@ -1,11 +1,11 @@
-"""Optional AES-SIV deterministic tokenization (strict DLP parity path).
+"""AES-SIV deterministic tokenization and HMAC-SHA-256 hashing.
 
 The reference's cryptoDeterministicConfig is AES-SIV (RFC 5297) under a
 KMS-wrapped key (/root/reference/src/main/resources/deid-template.json:212-231).
-The default engine path is the JVM-native ``transforms.crypto_deterministic``
-(AES-ECB, zero Python); this module provides true AES-SIV as an Arrow-batched
-pandas UDF for users who need misuse-resistant tokens. Gated behind a
-try-import so the package works without the ``cryptography`` wheel.
+This module is the engine's one deterministic cipher: AES-SIV as an
+Arrow-batched pandas UDF, used by the template compiler, ``reidentify`` and
+the inline per-finding path alike. An SIV token reveals only whether two
+whole values are equal.
 """
 from __future__ import annotations
 
@@ -16,27 +16,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-try:  # pragma: no cover - availability depends on environment
-    from cryptography.hazmat.primitives.ciphers.aead import AESSIV
-
-    HAVE_AESSIV = True
-except Exception:  # pragma: no cover
-    AESSIV = None
-    HAVE_AESSIV = False
-
-
-def _require() -> None:
-    if not HAVE_AESSIV:
-        raise NotImplementedError(
-            "AES-SIV requires the 'cryptography' package; use "
-            "transforms.crypto_deterministic (native AES-ECB) instead"
-        )
-
 
 def aes_siv_encrypt(col: Column, key: bytes) -> Column:
     """Deterministic AES-SIV tokenization, base64 output. Vectorized pandas UDF
     (Arrow batches); the per-cell cipher call is C-backed."""
-    _require()
     if len(key) not in (32, 48, 64):
         raise ValueError("AES-SIV key must be 32/48/64 bytes")
 
@@ -93,7 +76,6 @@ def aes_siv_decrypt(col: Column, key: bytes, strict: bool = True) -> Column:
     aes_decrypt). ``strict=False`` returns NULL for corrupt tokens — bad
     base64, failed SIV authentication, or non-UTF-8 plaintext — so callers
     can route them to the error table (common/DLPTransform.java:330-343)."""
-    _require()
 
     @F.pandas_udf(StringType())
     def _dec(s: pd.Series) -> pd.Series:

@@ -144,13 +144,6 @@ def siv_repl(key: bytes, surrogate_info_type: "str | None" = None) -> Callable[[
     (the reference's cipher), base64, optional ``NAME(len):token`` envelope
     — the same token shape the column-level ``crypto.siv_tokenize`` mints,
     so ``reidentify_text`` / column reid share one envelope grammar."""
-    from . import crypto
-
-    if not crypto.HAVE_AESSIV:
-        raise NotImplementedError(
-            "inline cryptoDeterministicConfig needs the 'cryptography' "
-            "package (AES-SIV); not installed in this environment"
-        )
 
     def repl(s: str) -> str:
         tok = base64.b64encode(_siv(key).encrypt(s.encode(), None)).decode()
@@ -203,13 +196,6 @@ def reidentify_text(
     envelope text UNTOUCHED instead — deviating from column reid's
     null-the-cell because nulling a whole free-text cell would destroy the
     surrounding non-token content."""
-    from . import crypto
-
-    if not crypto.HAVE_AESSIV:
-        raise NotImplementedError(
-            "reidentify_text needs the 'cryptography' package (AES-SIV); "
-            "not installed in this environment"
-        )
     head = re.compile(re.escape(surrogate_info_type) + r"\((\d+)\):")
 
     @F.pandas_udf(StringType())

@@ -15,7 +15,7 @@ like the SIV path.
 
 Implements the FF1 mode (10-round Feistel, CBC-MAC PRF) from the public
 spec, pinned bit-for-bit to the NIST ACVP/SP 800-38G sample vectors in
-tests/test_transforms.py. Gated behind the same try-import as AES-SIV.
+tests/test_transforms.py.
 """
 from __future__ import annotations
 
@@ -24,17 +24,10 @@ import math
 
 import numpy as np
 import pandas as pd
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
-
-try:  # pragma: no cover - availability depends on environment
-    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
-
-    HAVE_FPE = True
-except Exception:  # pragma: no cover
-    Cipher = algorithms = modes = None
-    HAVE_FPE = False
 
 # DLP FfxCommonNativeAlphabet enum → concrete alphabets (radix = len)
 COMMON_ALPHABETS = {
@@ -47,13 +40,6 @@ COMMON_ALPHABETS = {
 }
 
 _ZERO_IV = b"\x00" * 16
-
-
-def _require() -> None:
-    if not HAVE_FPE:
-        raise NotImplementedError(
-            "FF1 requires the 'cryptography' package (AES primitive)"
-        )
 
 
 def resolve_alphabet(alphabet: str) -> str:
@@ -73,7 +59,6 @@ class FF1:
     arbitrary-length byte tweak."""
 
     def __init__(self, key: bytes, alphabet: str):
-        _require()
         if len(key) not in (16, 24, 32):
             raise ValueError("FF1 key must be 16/24/32 bytes (AES)")
         self.alphabet = resolve_alphabet(alphabet)
@@ -293,7 +278,6 @@ def _codec(
 ) -> Column:
     """Shared tokenize/reidentify plumbing: per-row optional context tweak,
     non-conforming passthrough (or strict raise), surrogate envelope."""
-    _require()
     resolve_alphabet(alphabet)  # validate driver-side, not first-batch-side
 
     env_prefix = f"{surrogate_info_type}(" if surrogate_info_type else None

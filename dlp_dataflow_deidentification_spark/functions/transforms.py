@@ -4,19 +4,18 @@ Re-implements the DLP primitive transformations the reference invokes remotely
 (template: /root/reference/src/main/resources/deid-template.json; call site
 /root/reference/src/main/java/com/google/swarm/tokenization/beam/DLPDeidentifyText.java:325-382).
 
-Design rule: every transform is a *native* Spark SQL expression (JVM-side,
-whole-stage codegen, no Python in the hot path). The only pandas-UDF escape
-hatch in this package is the optional AES-SIV tokenizer in ``crypto.py`` and
-the offset-reporting inspector in ``operators/inspect.py``.
+Design rule: every transform that Spark SQL can express is a *native*
+expression here (JVM-side, whole-stage codegen, no Python in the hot path).
+Arrow UDFs are kept for what it cannot express: the ciphers (AES-SIV in
+``crypto.py``, FF1 in ``fpe.py``), per-finding transforms
+(``findings.py``), the offset-reporting scanner (``operators/inspect.py``)
+and the MinHash stage (``operators/dedup.py``).
 
 Transforms:
   - replace_with_infotype  (deid-template.json:188-211, replaceWithInfoTypeConfig)
   - redact / replace_value (DLP redactConfig / replaceConfig)
   - character_mask         (deid-template.json:34-45, characterMaskConfig)
   - crypto_hash            (deid-template.json:17-27, cryptoHashConfig)
-  - crypto_deterministic / crypto_reidentify
-                           (deid-template.json:212-231; reverse path
-                            /root/reference/src/main/resources/re-identify-config.config:8-27)
   - bucketing (numeric + string)  (deid-template.json:52-181, bucketingConfig)
   - fixed_size_bucketing   (DLP fixedSizeBucketingConfig)
   - date_shift             (DLP dateShiftConfig, deterministic per context key)
@@ -167,75 +166,12 @@ def crypto_hash(col: Column, key: str) -> Column:
     (deid-template.json:17-27). In-process we use the keyed-prefix SHA-256
     construction ``sha256(key || value)`` (hex) — same contract (deterministic,
     irreversible, keyed), expressible natively in Spark AND in the DuckDB
-    oracle. For strict HMAC parity use crypto.aes_siv_* instead.
+    oracle. For strict HMAC parity use crypto.crypto_hash_hmac instead.
     """
     s = col.cast("string")
     return F.when(s.isNull(), F.lit(None).cast("string")).otherwise(
         F.sha2(F.concat(F.lit(key), s), 256)
     )
-
-
-# ---------------------------------------------------------------------------
-# cryptoDeterministicConfig — reversible deterministic tokenization
-# ---------------------------------------------------------------------------
-
-
-def crypto_deterministic(col: Column, key: str, surrogate_info_type: str | None = None) -> Column:
-    """Reversible deterministic tokenization (DLP AES-SIV analogue).
-
-    Native fast path: AES-ECB over the UTF-8 cell (deterministic: identical
-    plaintext → identical token), base64-encoded, optionally wrapped in a
-    ``SURROGATE(len):token`` envelope like DLP's surrogateInfoType
-    (deid-template.json:212-231).
-
-    SECURITY TRADE-OFF — choose deliberately: for cells longer than 16
-    bytes, ECB reveals shared 16-byte-aligned plaintext prefixes across
-    different cells (identical leading blocks → identical leading
-    ciphertext). The reference's cipher is AES-SIV, which leaks only exact
-    whole-value equality; the template compiler therefore defaults
-    cryptoDeterministicConfig to ``crypto.siv_tokenize`` and this ECB path
-    is an explicit opt-in (plans/config.py deterministic_mode="ecb") for
-    short-cell / throughput-critical columns.
-
-    ``key`` must be 16/24/32 ASCII characters (AES key sizes).
-    """
-    _check_key(key)
-    s = col.cast("string")
-    tok = F.base64(F.aes_encrypt(s.cast("binary"), F.lit(key), F.lit("ECB"), F.lit("PKCS")))
-    if surrogate_info_type:
-        tok = F.concat(
-            F.lit(surrogate_info_type + "("),
-            F.length(tok).cast("string"),
-            F.lit("):"),
-            tok,
-        )
-    return F.when(s.isNull(), F.lit(None).cast("string")).otherwise(tok)
-
-
-def crypto_reidentify(
-    col: Column,
-    key: str,
-    surrogate_info_type: str | None = None,
-    strict: bool = True,
-) -> Column:
-    """Inverse of crypto_deterministic (reference REID path:
-    /root/reference/src/main/java/com/google/swarm/tokenization/beam/DLPReidentifyText.java:323-381).
-
-    ``strict=False`` uses try_aes_decrypt: corrupt/foreign tokens become NULL
-    instead of failing the job (route them to the error table — the
-    reference's API-error side output, common/DLPTransform.java:330-343)."""
-    _check_key(key)
-    s = col.cast("string")
-    if surrogate_info_type:
-        # strip "NAME(len):" envelope
-        s = F.regexp_replace(s, r"^[A-Z0-9_]+\([0-9]+\):", "")
-    dec = F.try_aes_decrypt if not strict else F.aes_decrypt
-    return dec(F.unbase64(s), F.lit(key), F.lit("ECB"), F.lit("PKCS")).cast("string")
-
-
-def _check_key(key: str) -> None:
-    if len(key.encode()) not in (16, 24, 32):
-        raise ValueError("AES key must be 16/24/32 bytes")
 
 
 # ---------------------------------------------------------------------------

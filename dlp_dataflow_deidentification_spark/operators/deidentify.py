@@ -14,7 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.config import DeidTemplate
-from ..functions import transforms
 
 
 def deidentify(df: DataFrame, template: DeidTemplate) -> DataFrame:
@@ -105,17 +104,15 @@ def reidentify(
     common/DLPTransform.java:196-197). ``strict=False`` nulls corrupt tokens
     instead of failing (pair with plans.pipeline.split_malformed for the
     error-table side output) — honored on every cipher path. ``mode``
-    defaults to "siv", matching the template compiler's
-    cryptoDeterministicConfig default (plans.config deterministic_mode), so
-    an omitted-mode deid→reid pair round-trips; pass ``mode="ecb"`` only for
-    tokens minted by the explicit ECB opt-in path, ``mode="ffx"`` (with
-    ``alphabet``/``context`` matching the deid template's
+    names the cipher that minted the tokens: "siv" (the default) for the
+    AES-SIV column tokens every cryptoDeterministicConfig compiles to,
+    "ffx" (with ``alphabet``/``context`` matching the deid template's
     cryptoReplaceFfxFpeConfig) for format-preserving FF1 tokens, and
-    ``mode="inline"`` for free text whose per-finding SIV tokens sit in
+    "inline" for free text whose per-finding SIV tokens sit in
     ``surrogate_info_type(len):token`` envelopes (functions/findings.py;
     ``strict=False`` leaves a corrupt envelope in the text)."""
-    if mode not in ("siv", "ecb", "ffx", "inline"):
-        raise ValueError(f"mode must be 'siv', 'ecb', 'ffx', or 'inline', got {mode!r}")
+    if mode not in ("siv", "ffx", "inline"):
+        raise ValueError(f"mode must be 'siv', 'ffx', or 'inline', got {mode!r}")
     if mode == "inline" and not surrogate_info_type:
         raise ValueError(
             "mode='inline' needs a surrogate_info_type — inline envelopes "
@@ -129,7 +126,7 @@ def reidentify(
 
             dec = findings.reidentify_text if mode == "inline" else crypto.siv_reidentify
             col = dec(out[name], derive_siv_key(key), surrogate_info_type, strict)
-        elif mode == "ffx":
+        else:
             from ..functions import fpe
 
             col = fpe.ff1_reidentify(
@@ -140,7 +137,5 @@ def reidentify(
                 surrogate_info_type=surrogate_info_type,
                 strict=strict,
             )
-        else:
-            col = transforms.crypto_reidentify(out[name], key, surrogate_info_type, strict)
         out = out.withColumn(name, col)
     return out

@@ -15,10 +15,9 @@ redactConfig, timePartConfig, dateShiftConfig, replaceWithInfoTypeConfig
 and per-transformation ``condition`` (RecordCondition), compiled to native
 boolean Columns evaluated against pre-transformation values.
 
-cryptoDeterministicConfig routes to true AES-SIV (RFC 5297, the reference's
-actual cipher — deid-template.json:212-231) by default; the JVM-native
-AES-ECB fast path requires explicit opt-in (``deterministic_mode="ecb"``)
-because ECB leaks shared 16-byte plaintext prefixes across cells.
+cryptoDeterministicConfig compiles to AES-SIV (RFC 5297, the reference's
+actual cipher — deid-template.json:212-231), the engine's one deterministic
+cipher (``crypto.siv_tokenize``).
 """
 from __future__ import annotations
 
@@ -185,17 +184,12 @@ class DeidTemplate:
         doc: dict,
         crypto_key: "str | None" = None,
         custom_infotypes: dict[str, infotypes.InfoType] | None = None,
-        deterministic_mode: str = "siv",
         hash_mode: str = "hmac",
         date_shift_basis: str = "xxhash64",
     ) -> "DeidTemplate":
         # validate the mode knobs eagerly — a typo'd mode on a template whose
         # primitives never reach the matching branch must still fail loudly,
         # not be silently accepted and ignored
-        if deterministic_mode not in ("siv", "ecb"):
-            raise ValueError(
-                f"deterministic_mode must be 'siv' or 'ecb', got {deterministic_mode!r}"
-            )
         if hash_mode not in ("hmac", "sha256"):
             raise ValueError(f"hash_mode must be 'hmac' or 'sha256', got {hash_mode!r}")
         if date_shift_basis not in ("xxhash64", "md5"):
@@ -307,12 +301,10 @@ class DeidTemplate:
                         )
                     )
                 elif "cryptoDeterministicConfig" in prim:
-                    # inline tokenization: always AES-SIV (the reference's
-                    # cipher — no ECB opt-in inline: free-text cells are
-                    # long, exactly where ECB's prefix leak is worst), and
-                    # the surrogate envelope is MANDATORY — without it the
-                    # token boundary inside the text is unrecoverable and
-                    # reidentify_text could never find it
+                    # inline tokenization: AES-SIV (the reference's
+                    # cipher), and the surrogate envelope is MANDATORY —
+                    # without it the token boundary inside the text is
+                    # unrecoverable and reidentify_text could never find it
                     k = _resolve_key(
                         prim["cryptoDeterministicConfig"], crypto_key,
                         "cryptoDeterministicConfig (per-finding)",
@@ -390,7 +382,7 @@ class DeidTemplate:
             out.transformations.append(
                 FieldTransformation(
                     fields_,
-                    _primitive(prim, crypto_key, deterministic_mode, hash_mode, date_shift_basis),
+                    _primitive(prim, crypto_key, hash_mode, date_shift_basis),
                     list(prim)[0],
                     condition=cond,
                 )
@@ -639,7 +631,6 @@ def _resolve_key(cfg: "dict | None", crypto_key: "str | None", which: str) -> st
 def _primitive(
     prim: dict,
     crypto_key: "str | None",
-    deterministic_mode: str = "siv",
     hash_mode: str = "hmac",
     date_shift_basis: str = "xxhash64",
 ) -> Callable[[Column], Column]:
@@ -653,27 +644,14 @@ def _primitive(
         if hash_mode == "hmac":
             key = crypto_key
             return lambda c: crypto.crypto_hash_hmac(c, key)
-        if hash_mode != "sha256":
-            raise ValueError(f"hash_mode must be 'hmac' or 'sha256', got {hash_mode!r}")
         return lambda c: transforms.crypto_hash(c, crypto_key)
     if "cryptoDeterministicConfig" in prim:
         crypto_key = _resolve_key(
             prim["cryptoDeterministicConfig"], crypto_key, "cryptoDeterministicConfig"
         )
         sur = prim["cryptoDeterministicConfig"].get("surrogateInfoType", {}).get("name")
-        if deterministic_mode == "siv":
-            if not crypto.HAVE_AESSIV:
-                raise NotImplementedError(
-                    "cryptoDeterministicConfig defaults to AES-SIV (the "
-                    "reference's cipher) but the 'cryptography' package is "
-                    "missing; pass deterministic_mode='ecb' to opt in to the "
-                    "native AES-ECB path (leaks shared 16-byte prefixes)"
-                )
-            key = derive_siv_key(crypto_key)
-            return lambda c: crypto.siv_tokenize(c, key, sur)
-        if deterministic_mode != "ecb":
-            raise ValueError(f"deterministic_mode must be 'siv' or 'ecb', got {deterministic_mode!r}")
-        return lambda c: transforms.crypto_deterministic(c, crypto_key, sur)
+        key = derive_siv_key(crypto_key)
+        return lambda c: crypto.siv_tokenize(c, key, sur)
     if "cryptoReplaceFfxFpeConfig" in prim:
         cfg = prim["cryptoReplaceFfxFpeConfig"]
         crypto_key = _resolve_key(cfg, crypto_key, "cryptoReplaceFfxFpeConfig")

@@ -12,7 +12,7 @@ One declarative spec replaces the reference's pipeline-options surface:
       "template": <path or dict>,            # deid/inspect template
       "reid_columns": [...],                 # reid mode
       "text_columns": [...],                 # inspect mode
-      "crypto_mode": "siv|ecb|ffx|inline",   # cipher (deid: siv|ecb)
+      "crypto_mode": "siv|ffx|inline",       # reid cipher (deid: siv)
       "surrogate_info_type": ...,            # reid envelope override
       "strict": true,                        # reid: false nulls bad tokens
       "required_columns": [...],             # null cell → error_path
@@ -55,22 +55,6 @@ def _maybe_inspect_config(template: "str | dict") -> "InspectConfig | None":
     return None
 
 ERROR_SCHEMA_COLS = ("file_name", "transaction_timestamp", "error_message", "stack_trace")
-
-
-def load_template(
-    template: "str | dict",
-    crypto_key: "str | None",
-    deterministic_mode: str = "siv",
-) -> DeidTemplate:
-    # no default key: templates using crypto transforms raise from the
-    # compiler unless the caller supplies one (plans/config._require_key)
-    if isinstance(template, str):
-        return DeidTemplate.from_file(
-            template, crypto_key=crypto_key, deterministic_mode=deterministic_mode
-        )
-    return DeidTemplate.from_dict(
-        template, crypto_key=crypto_key, deterministic_mode=deterministic_mode
-    )
 
 
 def split_malformed(df: DataFrame, required: list[str]) -> tuple[DataFrame, DataFrame]:
@@ -195,6 +179,12 @@ def run_batch(spark: SparkSession, spec: dict[str, Any], crypto_key: "str | None
 
     ``crypto_key`` has NO default value on purpose: specs whose template
     tokenizes/hashes (or mode="reid") fail loudly without an explicit key."""
+    mode = spec.get("mode", "deid")
+    crypto_mode = spec.get("crypto_mode", "siv")
+    if mode == "deid" and crypto_mode != "siv":
+        # a deid template tokenizes with AES-SIV only (ffx and inline are
+        # reid ciphers): refuse rather than silently ignore the value
+        raise ValueError(f"a deid spec's crypto_mode must be 'siv', got {crypto_mode!r}")
     src = spec["source"]
     df = files.read_files(
         spark,
@@ -217,23 +207,12 @@ def run_batch(spark: SparkSession, spec: dict[str, Any], crypto_key: "str | None
             errors.write.mode("append").parquet(spec["error_path"])
             metrics["rows_error"] = int(err_obs.get["n"])
 
-    mode = spec.get("mode", "deid")
-    # ONE shared cipher default for the whole spec surface: a deid spec and a
-    # reid spec that both omit crypto_mode round-trip (both SIV, the template
-    # compiler's default). ECB-decrypting an SIV token can "succeed" and emit
-    # garbage, so asymmetric defaults would corrupt silently.
-    # MIGRATION NOTE: token stores minted by an explicit crypto_mode="ecb"
-    # deid spec must pass crypto_mode="ecb" on the reid side too — the reid
-    # default is now "siv", and SIV-decrypting ECB tokens fails per token
-    # (strict) or NULLs/dead-letters every row (tolerant).
-    crypto_mode = spec.get("crypto_mode", "siv")
     icfg = _maybe_inspect_config(spec["template"]) if mode == "inspect" else None
     template = None
     if icfg is None and spec.get("template") is not None:
-        # a reid spec reads only the envelopes its template minted; ffx and
-        # inline are reid-only ciphers, so it compiles with the SIV default
-        det_mode = "siv" if mode == "reid" and crypto_mode in ("ffx", "inline") else crypto_mode
-        template = load_template(spec["template"], crypto_key, det_mode)
+        # no default key: templates using crypto transforms raise from the
+        # compiler unless the caller supplies one (plans/config._require_key)
+        template = DeidTemplate.from_dict(spec["template"], crypto_key=crypto_key)
     out = apply_method(
         df,
         mode,

@@ -146,9 +146,9 @@ class StreamingDeidJob:
     # (a shared hardcoded key would make every deployment's tokens public)
     crypto_key: "str | None" = None
     # cipher for reid mode, any operators.deidentify.reidentify mode — "siv"
-    # (the template compiler's cryptoDeterministicConfig default, so an
-    # omitted-mode deid→reid pair round-trips in streaming too), "ecb" for
-    # the explicit opt-in path, "ffx" or "inline" (free-text envelopes)
+    # (the AES-SIV tokens every cryptoDeterministicConfig compiles to, so an
+    # omitted-mode deid→reid pair round-trips in streaming too), "ffx" or
+    # "inline" (free-text envelopes)
     crypto_mode: str = "siv"
     # surrogate envelope override for reid mode; None = use the envelope the
     # TEMPLATE minted for each column (template.surrogates) — tokens written

@@ -10,6 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import dlp_dataflow_deidentification_spark as dds
+from dlp_dataflow_deidentification_spark.functions import crypto
+from dlp_dataflow_deidentification_spark.plans.config import derive_siv_key
 from dlp_dataflow_deidentification_spark.sources.transcripts import load_transcripts
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -114,12 +116,30 @@ def test_reidentify_roundtrip_on_column(spark):
         "id string, holder_name string",
     )
     enc = df.withColumn(
-        "holder_name", dds.transforms.crypto_deterministic(F.col("holder_name"), KEY)
+        "holder_name", crypto.siv_tokenize(F.col("holder_name"), derive_siv_key(KEY))
     )
-    back = dds.reidentify(enc, ["holder_name"], KEY, mode="ecb")
+    back = dds.reidentify(enc, ["holder_name"], KEY)
     assert sorted((r.id, r.holder_name) for r in back.collect()) == sorted(
         (r.id, r.holder_name) for r in df.collect()
     )
+
+
+def test_cards_template_reid_roundtrip(spark, sf_dir):
+    """Reference-free twin of test_reference_template_reid_roundtrip: the
+    template-compiled cryptoDeterministicConfig columns of
+    configs/deid_cards.json re-identify through reidentify's default mode."""
+    import __spark_entry__ as entry
+
+    cards = entry._cards(spark, sf_dir)
+    t = dds.DeidTemplate.from_file(os.path.join(HERE, "configs/deid_cards.json"), crypto_key=KEY)
+    cols = ["holder_name", "card_number"]
+    enc = dds.deidentify(cards, t)
+    back = dds.reidentify(enc, cols, KEY)
+    src = {r.id: (r.holder_name, r.card_number) for r in cards.select("id", *cols).collect()}
+    tok = {r.id: (r.holder_name, r.card_number) for r in enc.select("id", *cols).collect()}
+    got = {r.id: (r.holder_name, r.card_number) for r in back.select("id", *cols).collect()}
+    assert src and all(tok[i][0] != v[0] and tok[i][1] != v[1] for i, v in src.items())
+    assert got == src
 
 
 def test_inspect_plan_scans_source_once(spark, sf_dir, template):
@@ -136,32 +156,9 @@ def test_inspect_plan_scans_source_once(spark, sf_dir, template):
     assert "Python" not in plan
 
 
-def test_reidentify_tolerant_mode_nulls_corrupt_tokens(spark):
-    df = spark.createDataFrame(
-        [("c1", "Alice"), ("c2", "Bob")], "id string, name string"
-    )
-    enc = df.withColumn("name", dds.transforms.crypto_deterministic(F.col("name"), KEY))
-    corrupt = enc.unionByName(
-        spark.createDataFrame([("c3", "not-a-token!!")], "id string, name string")
-    )
-    out = {
-        r.id: r.name
-        for r in dds.reidentify(corrupt, ["name"], KEY, strict=False, mode="ecb").collect()
-    }
-    assert out["c1"] == "Alice" and out["c2"] == "Bob" and out["c3"] is None
-    # strict mode raises on the same input
-    with pytest.raises(Exception):
-        dds.reidentify(corrupt, ["name"], KEY, strict=True, mode="ecb").collect()
-
-
 def test_reidentify_tolerant_mode_siv_nulls_corrupt_tokens(spark):
     """strict=False is honored on the SIV path too (one corrupt token must
     not fail the whole job with InvalidTag)."""
-    from dlp_dataflow_deidentification_spark.functions import crypto
-    from dlp_dataflow_deidentification_spark.plans.config import derive_siv_key
-
-    if not crypto.HAVE_AESSIV:
-        pytest.skip("cryptography wheel absent")
     df = spark.createDataFrame(
         [("c1", "Alice"), ("c2", "Bob")], "id string, name string"
     )

@@ -91,7 +91,6 @@ def test_transform_findings_uncovered_detector_raises():
         )
 
 
-@pytest.mark.skipif(not crypto.HAVE_AESSIV, reason="needs cryptography")
 def test_inline_siv_tokenize_then_reidentify_text_roundtrip(spark):
     key = derive_siv_key(KEY)
     df = spark.createDataFrame(
@@ -120,7 +119,6 @@ def test_inline_siv_tokenize_then_reidentify_text_roundtrip(spark):
         dds.reidentify(tok, ["tok"], KEY, mode="inline")
 
 
-@pytest.mark.skipif(not crypto.HAVE_AESSIV, reason="needs cryptography")
 def test_reidentify_text_strict_vs_tolerant(spark):
     key = derive_siv_key(KEY)
     corrupt = "prefix EMAIL_TOKEN(8):AAAAAAAA suffix"
@@ -137,7 +135,6 @@ def test_reidentify_text_strict_vs_tolerant(spark):
     assert got == corrupt  # tolerant: envelope left untouched, text intact
 
 
-@pytest.mark.skipif(not crypto.HAVE_AESSIV, reason="needs cryptography")
 def test_ff1_repl_format_preserving_and_passthrough(spark):
     from dlp_dataflow_deidentification_spark.functions import fpe
 
@@ -148,7 +145,6 @@ def test_ff1_repl_format_preserving_and_passthrough(spark):
     assert repl("1") == "1"  # below minlen → passthrough
 
 
-@pytest.mark.skipif(not crypto.HAVE_AESSIV, reason="needs cryptography")
 def test_template_inline_primitives_compile_and_apply(spark):
     doc = {
         "deidentifyConfig": {

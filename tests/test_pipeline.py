@@ -210,10 +210,6 @@ def test_batch_reid_strips_template_surrogate_envelope(spark, csv_dir, tmp_path)
     envelope the template minted (template.surrogates) without a
     surrogate_info_type key — the batch mirror of
     test_streaming_reid_strips_template_surrogate_envelope."""
-    from dlp_dataflow_deidentification_spark.functions import crypto
-
-    if not crypto.HAVE_AESSIV:
-        pytest.skip("cryptography wheel absent: AES-SIV path unavailable")
     key = "0123456789abcdef"
     template = {
         "deidentifyConfig": {
@@ -256,3 +252,30 @@ def test_batch_reid_strips_template_surrogate_envelope(spark, csv_dir, tmp_path)
     )
     want = {(r.id, r.notes) for r in spark.read.csv(csv_dir, header=True).collect()}
     assert {(r.id, r.notes) for r in spark.read.parquet(back).collect()} == want
+
+
+def test_removed_ecb_cipher_is_refused(spark, csv_dir, tmp_path):
+    """AES-SIV is the one deterministic cipher: the removed AES-ECB mode is
+    refused by ``reidentify``, by a reid spec and by a deid spec, with a
+    message that names the ciphers that remain."""
+    import dlp_dataflow_deidentification_spark as dds
+
+    removed = "ecb"
+    key = "0123456789abcdef"
+    df = spark.createDataFrame([("x",)], "c string")
+    with pytest.raises(ValueError, match="'siv', 'ffx', or 'inline'"):
+        dds.reidentify(df, ["c"], key, mode=removed)
+    reid = {
+        "source": {"path": csv_dir, "format": "csv"},
+        "mode": "reid",
+        "template": TEMPLATE,
+        "reid_columns": ["notes"],
+        "crypto_mode": removed,
+        "sink": {"path": str(tmp_path / "reid"), "format": "parquet"},
+    }
+    with pytest.raises(ValueError, match="'siv', 'ffx', or 'inline'"):
+        pipeline.run_batch(spark, reid, crypto_key=key)
+    deid = dict(reid, mode="deid", sink={"path": str(tmp_path / "deid"), "format": "parquet"})
+    with pytest.raises(ValueError, match="crypto_mode must be 'siv'"):
+        pipeline.run_batch(spark, deid, crypto_key=key)
+    assert not os.path.exists(tmp_path / "reid") and not os.path.exists(tmp_path / "deid")

@@ -8,7 +8,8 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from dlp_dataflow_deidentification_spark.functions import infotypes, transforms
+from dlp_dataflow_deidentification_spark.functions import crypto, infotypes, transforms
+from dlp_dataflow_deidentification_spark.plans.config import derive_siv_key
 
 KEY = "0123456789abcdef"
 
@@ -28,14 +29,9 @@ def run_col(spark, values, expr_fn):
 @settings(max_examples=20, deadline=None)
 @given(st.lists(TEXT, min_size=1, max_size=8))
 def test_crypto_roundtrip_property(spark, values):
-    toks = run_col(
-        spark, values, lambda c: transforms.crypto_deterministic(c, KEY)
-    )
-    back = run_col(
-        spark,
-        toks,
-        lambda c: transforms.crypto_reidentify(c, KEY),
-    )
+    key = derive_siv_key(KEY)
+    toks = run_col(spark, values, lambda c: crypto.siv_tokenize(c, key))
+    back = run_col(spark, toks, lambda c: crypto.siv_reidentify(c, key))
     assert back == values
     # determinism: equal plaintexts ⇒ equal tokens, and vice versa
     for v, t in zip(values, toks):

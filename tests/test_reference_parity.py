@@ -109,17 +109,6 @@ def test_reference_template_reid_roundtrip(spark, sample, template):
     assert got == want
 
 
-def test_reference_template_ecb_optin_roundtrip(spark, sample):
-    """Explicit ECB opt-in (deterministic_mode='ecb') keeps the native
-    fast-path working end-to-end."""
-    t = dds.DeidTemplate.from_file(TEMPLATE, crypto_key=KEY, deterministic_mode="ecb")
-    enc = dds.deidentify(sample, t)
-    back = dds.reidentify(enc, ["Card Holder's Name", "Card Number"], KEY, mode="ecb")
-    got = {r["ID"]: (r["Card Holder's Name"], r["Card Number"]) for r in back.collect()}
-    want = {r["ID"]: (r["Card Holder's Name"], r["Card Number"]) for r in sample.collect()}
-    assert got == want
-
-
 def test_reference_inspect_template_config_fidelity(spark, sample):
     """Drive minLikelihood / includeQuote / maxFindingsPerItem through the
     reference's OWN inspect template shape (inspect-template.json:8-32;

@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import dlp_dataflow_deidentification_spark as dds
+from dlp_dataflow_deidentification_spark.functions import crypto
+from dlp_dataflow_deidentification_spark.plans.config import derive_siv_key
 from dlp_dataflow_deidentification_spark.sources.transcripts import synthesize_transcripts
 from dlp_dataflow_deidentification_spark.streaming import jobs
 
@@ -63,13 +65,12 @@ def test_streaming_inspect_mode_equals_batch(spark, tmp_path, input_dir, templat
 def test_streaming_reid_inverts_streaming_deid(spark, tmp_path, input_dir, template):
     """DEID stream → tokenized table → REID stream → original text, all
     through the exactly-once sink (crypto roundtrip across two streaming jobs)."""
-    from dlp_dataflow_deidentification_spark.functions import transforms
-
+    key = "0123456789abcdef"
     # tokenize `text` deterministically (deid with cryptoDeterministic on text)
     tok_dir = str(tmp_path / "tok")
     tdf = spark.read.parquet(input_dir)
     tdf.withColumn(
-        "text", transforms.crypto_deterministic(F.col("text"), "0123456789abcdef")
+        "text", crypto.siv_tokenize(F.col("text"), derive_siv_key(key))
     ).write.parquet(tok_dir)
 
     job = jobs.StreamingDeidJob(
@@ -80,8 +81,7 @@ def test_streaming_reid_inverts_streaming_deid(spark, tmp_path, input_dir, templ
         str(tmp_path / "ckpt"),
         mode="reid",
         reid_columns=("text",),
-        crypto_key="0123456789abcdef",  # reid now refuses to run keyless
-        crypto_mode="ecb",  # tokens above were minted by the ECB opt-in path
+        crypto_key=key,  # reid refuses to run keyless
     )
     job.run_to_completion()
     got = {
@@ -99,14 +99,6 @@ def test_streaming_reid_siv_default_roundtrip_and_dead_letter(
     template compiler's default path, and — with a dead-letter dir — corrupt
     tokens are NULL-routed per cell (crypto.aes_siv_decrypt strict=False)
     instead of failing the job on the first InvalidTag."""
-    import pytest as _pytest
-
-    from dlp_dataflow_deidentification_spark.functions import crypto
-    from dlp_dataflow_deidentification_spark.plans.config import derive_siv_key
-
-    if not crypto.HAVE_AESSIV:
-        _pytest.skip("cryptography wheel absent: AES-SIV path unavailable")
-
     key = "0123456789abcdef"
     tdf = spark.read.parquet(input_dir)
     tok = tdf.withColumn(
@@ -202,11 +194,9 @@ def test_streaming_reid_dead_letter_side_output(spark, tmp_path, input_dir, temp
     """K5 in streaming form: corrupt tokens land in the dead-letter sink
     (with the original token + error_message) under the SAME exactly-once
     batch ids; good rows decode to the original text."""
-    from dlp_dataflow_deidentification_spark.functions import transforms
-
     key = "0123456789abcdef"
     tdf = spark.read.parquet(input_dir)
-    tok = tdf.withColumn("text", transforms.crypto_deterministic(F.col("text"), key))
+    tok = tdf.withColumn("text", crypto.siv_tokenize(F.col("text"), derive_siv_key(key)))
     corrupted = tok.withColumn(
         "text",
         F.when(F.col("turn_idx") % 17 == 0, F.lit("@@not-a-token@@")).otherwise(
@@ -225,7 +215,6 @@ def test_streaming_reid_dead_letter_side_output(spark, tmp_path, input_dir, temp
         mode="reid",
         reid_columns=("text",),
         crypto_key=key,
-        crypto_mode="ecb",  # tokens above were minted by the ECB opt-in path
         error_output_dir=str(tmp_path / "errs_dl"),
     )
     q = job.start()
@@ -316,13 +305,7 @@ def test_streaming_reid_strips_template_surrogate_envelope(spark, tmp_path, inpu
     surrogateInfoType are written as 'NAME(len):token'; the streaming reid
     job must strip that envelope (template.surrogates drives it — no manual
     knob needed) or NO token can ever decode."""
-    import pytest as _pytest
-
-    from dlp_dataflow_deidentification_spark.functions import crypto
     from dlp_dataflow_deidentification_spark.operators.deidentify import deidentify
-
-    if not crypto.HAVE_AESSIV:
-        _pytest.skip("cryptography wheel absent: AES-SIV path unavailable")
 
     key = "0123456789abcdef"
     tmpl = dds.DeidTemplate.from_dict(
@@ -452,10 +435,6 @@ def test_streaming_inline_tokenize_then_inline_reid_roundtrip(spark, tmp_path, i
     with crypto_mode='inline' decrypts the envelopes back out; final text
     equals the source row-for-row. A poisoned token routes to the
     dead-letter leg instead of crashing the stream."""
-    from dlp_dataflow_deidentification_spark.functions import crypto
-
-    if not crypto.HAVE_AESSIV:
-        pytest.skip("needs cryptography")
     key = "0123456789abcdef"
     inline_template = dds.DeidTemplate.from_dict(
         {

@@ -5,8 +5,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from dlp_dataflow_deidentification_spark.functions import transforms, crypto
+from dlp_dataflow_deidentification_spark.plans.config import derive_siv_key
 
 KEY16 = "0123456789abcdef"
+SIV_KEY = derive_siv_key(KEY16)
 
 
 def col_of(spark, values, dtype="string"):
@@ -53,30 +55,26 @@ def test_crypto_hash_deterministic_keyed(spark):
     assert out[3] is None
 
 
-def test_crypto_deterministic_roundtrip(spark):
+def test_siv_tokenize_roundtrip(spark):
     vals = ["Marilyn Monroe", "4111-1111-1111-1111", "", "Marilyn Monroe"]
     df = col_of(spark, vals)
-    enc = df.select(transforms.crypto_deterministic(F.col("v"), KEY16).alias("t"))
+    enc = df.select(crypto.siv_tokenize(F.col("v"), SIV_KEY).alias("t"))
     toks = [r[0] for r in enc.collect()]
     assert toks[0] == toks[3] and toks[0] != toks[1]  # deterministic
-    dec = enc.select(transforms.crypto_reidentify(F.col("t"), KEY16).alias("v"))
+    dec = enc.select(crypto.siv_reidentify(F.col("t"), SIV_KEY).alias("v"))
     assert [r[0] for r in dec.collect()] == vals
 
 
-def test_crypto_deterministic_surrogate_envelope(spark):
+def test_siv_tokenize_surrogate_envelope(spark):
     df = col_of(spark, ["bob"])
-    tok = df.select(
-        transforms.crypto_deterministic(F.col("v"), KEY16, "NAME_TOKEN").alias("t")
-    )
+    tok = df.select(crypto.siv_tokenize(F.col("v"), SIV_KEY, "NAME_TOKEN").alias("t"))
     t = tok.collect()[0][0]
     assert t.startswith("NAME_TOKEN(") and "):" in t
-    back = tok.select(transforms.crypto_reidentify(F.col("t"), KEY16, "NAME_TOKEN").alias("v"))
+    back = tok.select(crypto.siv_reidentify(F.col("t"), SIV_KEY, "NAME_TOKEN").alias("v"))
     assert back.collect()[0][0] == "bob"
 
 
 def test_aes_siv_roundtrip(spark):
-    if not crypto.HAVE_AESSIV:
-        pytest.skip("cryptography not installed")
     key = b"k" * 32
     df = col_of(spark, ["alice", "alice", "bob"])
     enc = df.select(crypto.aes_siv_encrypt(F.col("v"), key).alias("t"))
@@ -425,8 +423,7 @@ def test_crypto_hash_hmac_bit_parity_with_python_hmac(spark):
 
 
 def test_template_hash_mode_knob(spark):
-    """The template compiler selects the HMAC path via hash_mode='hmac'
-    (like deterministic_mode selects the cipher)."""
+    """The template compiler selects the HMAC path via hash_mode='hmac'."""
     import base64
     import hashlib
     import hmac
@@ -511,8 +508,6 @@ def test_template_hash_mode_defaults_to_hmac():
     }
     with pytest.raises(ValueError, match="hash_mode"):
         DeidTemplate.from_dict(mask_doc, hash_mode="hmca")
-    with pytest.raises(ValueError, match="deterministic_mode"):
-        DeidTemplate.from_dict(mask_doc, deterministic_mode="sivv")
 
 
 def test_crypto_hash_hmac_long_key_and_nulls(spark):
