@@ -12,11 +12,9 @@ beam/BatchRequestForDLP.java, is subsumed by micro-batch execution) →
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -194,12 +192,18 @@ class StreamingDeidJob:
         """foreachBatch body: one exactly-once sink, or — when a dead-letter
         dir is configured — a success/error fan-out committed under the SAME
         batch id (the reference's TupleTag success/failure side outputs,
-        common/DLPTransform.java:129-154). The legs run at the same time over
-        the one persisted batch: the dead-letter leg on a second Python
-        thread, wrapped in ``inheritable_thread_target`` so its jobs stay in
-        the query's job group (``query.stop()`` cancels them). Both end before
-        ``unpersist``; either one failing fails the micro-batch. Which ledger
-        commits first is unspecified; each leg is still replay-idempotent."""
+        common/DLPTransform.java:129-154). The batch is persisted, so the
+        dead predicate (reid's pandas UDF) and the ``rows_read`` observation
+        run once. The main leg writes first and counts the batch's dead rows
+        in the same pass: an observation on the whole batch, below the
+        ``NOT __dead`` filter, so the main lineage still counts live rows.
+        Only a batch with dead rows then runs the dead-letter write, over the
+        persisted batch; a clean batch commits a zero-row dead-letter ledger
+        entry (``commit_empty``), so it runs one Spark job in all. A replay
+        whose main leg is already committed has no count to read and runs
+        the (idempotent) dead-letter leg. The main ledger commits first; a
+        failure in either leg fails the micro-batch, and the replay
+        finishes what it left."""
         main, err = self.sink(), self.error_sink()
         reason = (
             "reid: undecodable token"
@@ -208,27 +212,23 @@ class StreamingDeidJob:
         )
 
         def fn(batch_df: DataFrame, batch_id: int) -> None:
-            if err is not None and "__dead" in batch_df.columns:
-                batch_df.persist()
-
-                @inheritable_thread_target(batch_df.sparkSession)
-                def err_leg() -> None:
+            if err is None or "__dead" not in batch_df.columns:
+                main(batch_df.drop("__dead"), batch_id)
+                return
+            batch_df.persist()
+            try:
+                replay = main.is_committed(batch_id)
+                dead = Observation(f"dead_{batch_id}")
+                counted = batch_df.observe(dead, F.expr("count_if(__dead) AS n"))
+                main(counted.filter("NOT __dead").drop("__dead"), batch_id)
+                if replay or dead.get["n"]:
                     errors = batch_df.filter("__dead").drop("__dead")
                     err(errors.withColumn("error_message", F.lit(reason)), batch_id)
-
-                try:
-                    with ThreadPoolExecutor(1) as pool:
-                        err_done = pool.submit(err_leg)
-                        try:
-                            main(batch_df.filter("NOT __dead").drop("__dead"), batch_id)
-                        finally:
-                            err_done.result()
-                finally:
-                    batch_df.unpersist()
-            else:
-                if "__dead" in batch_df.columns:
-                    batch_df = batch_df.drop("__dead")
-                main(batch_df, batch_id)
+                else:
+                    schema = StructType([f for f in batch_df.schema if f.name != "__dead"])
+                    err.commit_empty(batch_id, schema.add("error_message", StringType()))
+            finally:
+                batch_df.unpersist()
 
         return fn
 

@@ -15,17 +15,20 @@ ignoreInsertIds, or Storage Write API exactly-once) with a
   Streaming's at-least-once ``foreachBatch`` retries and checkpoint
   replays become exactly-once end-to-end.
 
-Lineage is computed EXECUTOR-SIDE in the same pass as the write: the
-``observe()`` node carries one conditional-count aggregate per write
-partition (``spark_partition_id()`` buckets), so the driver does zero
-per-file I/O after the write — no directory walk, no parquet-footer reads,
-no object-store GET storm at thousands-of-files batch sizes. (An earlier
-revision re-listed the output directory and read every footer on the
-driver, serial work proportional to files-per-batch.)
+Lineage is computed EXECUTOR-SIDE in the same pass as the write: one
+``observe()`` metric, a single ``named_struct`` of aggregates, carries the
+row count, the event-time range, the approximate key count and the
+per-partition row counts. The partition counts are one
+``histogram_numeric`` over the write task's ``spark_partition_id()`` folded
+into ``LINEAGE_MAX_BUCKETS`` buckets. The driver does zero per-file I/O
+after the write — no directory walk, no parquet-footer reads, no
+object-store GET storm at thousands-of-files batch sizes — and does not
+plan the batch a second time to size the buckets.
 
-The aggregates are built from SQL text (``F.expr``: one py4j call, ~0.3 ms
-each), not from Column-API trees (~5 ms each): they are rebuilt for every
-micro-batch, on the critical path of the sink call.
+The metric is built from SQL text (``F.expr``: one py4j call, ~0.3 ms),
+not from Column-API trees (~5 ms per aggregate): it is rebuilt for every
+micro-batch, on the critical path of the sink call, so it is kept to two
+``F.expr`` calls.
 
 The commit interface has two implementations (commitlog.py):
 ``LocalFSCommitLog`` (atomic rename; the default) and ``IcebergCommitLog``
@@ -35,32 +38,27 @@ the batch's parquet under ``data/batch_id=<id>/``, then calls
 ``commit_log.commit``, which for Iceberg appends an EMPTY snapshot that
 carries the batch id and lineage. The ledger entry is the commit point; a
 crash between the two steps leaves an uncommitted directory that
-``read_committed`` ignores and the replay overwrites.
+``read_committed`` ignores and the replay overwrites. ``commit_empty``
+commits a batch known to hold no rows with the ledger step alone: its
+entry has no data path and records the schema instead.
 """
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .commitlog import CommitLog, LocalFSCommitLog
 
-# one observe() aggregate per lineage bucket, each evaluated PER ROW in the
-# write pass — bounded so a wide batch (thousands of planned partitions)
-# cannot turn lineage into O(partitions) CASE WHENs per row: above the cap,
-# buckets are pid % cap groups (the entry records the fold factor)
+# lineage buckets: ledger partition i counts the rows of the write tasks
+# whose spark_partition_id() % LINEAGE_MAX_BUCKETS == i (one bucket per task
+# up to this many tasks). histogram_numeric with as many bins as buckets
+# never merges two distinct values, so its counts are exact
 LINEAGE_MAX_BUCKETS = 64
-
-
-def _partition_count(batch_df: DataFrame) -> int:
-    """Planned partition count of the write stage (physical planning only —
-    no job, no data read)."""
-    try:
-        return max(1, batch_df.rdd.getNumPartitions())
-    except Exception:
-        return 1
 
 
 def _quote(name: str) -> str:
@@ -88,22 +86,16 @@ class IdempotentBatchSink:
 
     @property
     def data_dir(self) -> str:
-        import os
-
         return os.path.join(self.output_dir, "data")
 
     @property
     def ledger_dir(self) -> str:
-        import os
-
         return os.path.join(self.output_dir, "_ledger")
 
     def is_committed(self, batch_id: int) -> bool:
         return self.commit_log.is_committed(batch_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         if self.is_committed(batch_id):
             # retry / replay of an already-committed batch → exactly-once no-op
             return
@@ -112,62 +104,64 @@ class IdempotentBatchSink:
 
         # lineage/metrics in the same pass as the write (observe() avoids a
         # second scan of the batch; Counter/Distribution analogue of
-        # beam/BatchRequestForDLP.java:37-40). Per-partition counts are one
-        # array of conditional sums over spark_partition_id() — computed on
-        # the executors inside the write pass itself.
-        from pyspark.sql import Observation
-
-        planned = _partition_count(batch_df)
-        nparts = min(planned, LINEAGE_MAX_BUCKETS)
+        # beam/BatchRequestForDLP.java:37-40)
+        cols = batch_df.columns
         # CollectMetrics only admits nondeterministic expressions as DIRECT
-        # aggregate arguments, so spark_partition_id() is materialized as a
-        # column UNDER the observe node (same stage as the write — the ids
-        # are the write tasks') and the metrics reference the plain attribute.
+        # arguments of declarative aggregates (an imperative one such as
+        # histogram_numeric fails at run time), so spark_partition_id() is
+        # materialized as a column UNDER the observe node (same stage as the
+        # write — the ids are the write tasks') and the metric references the
+        # plain attribute.
         # The helper column name is collision-proofed against user columns.
         pid_col = "_lineage_pid"
-        while pid_col in batch_df.columns:
+        while pid_col in cols:
             pid_col += "_"
-        batch_df = batch_df.withColumn(pid_col, F.expr(f"spark_partition_id() % {nparts}"))
-        obs = Observation(f"lineage_{batch_id}")
-        metrics_sql = [
-            "count(1) AS n_rows",
-            # one named conditional-count aggregate per lineage bucket; the
-            # modulo also absorbs planned-vs-executed drift (AQE coalesce,
-            # runtime re-plan), so the total always reconciles with n_rows
-            *[f"count_if({_quote(pid_col)} = {i}) AS _p{i}" for i in range(nparts)],
-        ]
-        if self.event_time_col in batch_df.columns:
+        metrics = {"n_rows": "count(1)"}
+        if self.event_time_col in cols:
             et = f"CAST({_quote(self.event_time_col)} AS TIMESTAMP)"
-            metrics_sql += [
-                f"CAST(min({et}) AS STRING) AS min_event_time",
-                f"CAST(max({et}) AS STRING) AS max_event_time",
-            ]
-        if self.key_cols and self.key_cols[0] in batch_df.columns:
-            metrics_sql.append(f"approx_count_distinct({_quote(self.key_cols[0])}) AS approx_keys")
-        observed = batch_df.observe(obs, *map(F.expr, metrics_sql)).drop(pid_col)
+            metrics["min_event_time"] = f"CAST(min({et}) AS STRING)"
+            metrics["max_event_time"] = f"CAST(max({et}) AS STRING)"
+        if self.key_cols and self.key_cols[0] in cols:
+            metrics["approx_keys"] = f"approx_count_distinct({_quote(self.key_cols[0])})"
+        metrics["_buckets"] = f"histogram_numeric({_quote(pid_col)}, {LINEAGE_MAX_BUCKETS})"
+        struct = ", ".join(f"'{k}', {v}" for k, v in metrics.items())
+        obs = Observation(f"lineage_{batch_id}")
+        observed = (
+            batch_df.withColumn(pid_col, F.expr(f"spark_partition_id() % {LINEAGE_MAX_BUCKETS}"))
+            .observe(obs, F.expr(f"named_struct({struct}) AS lineage"))
+            .drop(pid_col)
+        )
         writer = observed.write.mode("overwrite")
         if self.partition_col:
             writer = writer.partitionBy(self.partition_col)
         writer.parquet(target)
 
-        got = dict(obs.get)
-        partitions = [
-            {"partition": i, "rows": int(n)}
-            for i in range(nparts)
-            if (n := got.pop(f"_p{i}", 0))
-        ]
+        got = obs.get["lineage"].asDict()
+        rows: dict[int, int] = {}
+        # a bucket's bin may arrive split across task merges: sum by value
+        for b in got.pop("_buckets") or ():
+            rows[round(b.x)] = rows.get(round(b.x), 0) + round(b.y)
+        # per-partition lineage: one row-count per write-task bucket,
+        # computed executor-side in the write pass (no driver file I/O)
+        partitions = [{"partition": p, "rows": n} for p, n in sorted(rows.items())]
+        self._commit(batch_id, t0, target, got, partitions)
+
+    def commit_empty(self, batch_id: int, schema: StructType) -> None:
+        """Commit ``batch_id`` as a zero-row batch with no write job and no
+        data directory; the entry records ``schema`` so ``read_committed``
+        still returns typed columns. Idempotent like ``__call__``."""
+        if not self.is_committed(batch_id):
+            self._commit(batch_id, time.time(), None, {"n_rows": 0}, [], schema=schema.jsonValue())
+
+    def _commit(self, batch_id, t0, path, metrics, partitions, **extra) -> None:
         entry = {
             "batch_id": batch_id,
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "wall_seconds": round(time.time() - t0, 3),
-            "path": target,
-            "metrics": got,
-            # per-partition lineage: one row-count per write-stage partition
-            # (pid % bucket group when the batch is planned wider than
-            # LINEAGE_MAX_BUCKETS — planned_partitions records the fold),
-            # computed executor-side in the write pass (no driver file I/O)
+            "path": path,
+            "metrics": metrics,
             "partitions": partitions,
-            "planned_partitions": planned,
+            **extra,
         }
         self.commit_log.commit(batch_id, entry)
 
@@ -176,13 +170,16 @@ class IdempotentBatchSink:
         """Read back only ledger-committed batches (dirty/aborted batch
         directories without a ledger entry are invisible — snapshot-isolation
         analogue)."""
-        import os
-
-        ids = self.committed_ids()
-        if not ids:
+        entries = self.lineage()
+        if not entries:
             raise FileNotFoundError(f"no committed batches under {self.output_dir}")
-        paths = [os.path.join(self.data_dir, f"batch_id={i}") for i in ids]
-        return spark.read.option("basePath", self.data_dir).parquet(*paths)
+        paths = [os.path.join(self.data_dir, f"batch_id={e['batch_id']}") for e in entries if e["path"]]
+        if paths:
+            return spark.read.option("basePath", self.data_dir).parquet(*paths)
+        # zero-row batches only: the columns a read of an empty write yields
+        # (every column nullable, then the batch_id partition column)
+        fields = [StructField(f.name, f.dataType) for f in StructType.fromJson(entries[-1]["schema"])]
+        return spark.createDataFrame([], StructType(fields + [StructField("batch_id", IntegerType())]))
 
     def committed_ids(self) -> list[int]:
         return self.commit_log.committed_ids()

@@ -48,7 +48,8 @@ def test_query_matches_oracle(spark, sf_dir, name):
     if name not in oracles:
         assert len(got) >= 0  # rows-only check, mirrors the driver's weak path
         return
-    want = canon(duck_con(sf_dir).execute(oracles[name]).df())
+    with duck_con(sf_dir) as con:
+        want = canon(con.execute(oracles[name]).df())
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: column mismatch {got.columns} vs {want.columns}"
     )

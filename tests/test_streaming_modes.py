@@ -300,6 +300,87 @@ def test_dead_letter_commit_failure_fails_batch_then_restart_exactly_once(
     assert keys(src.filter("text IS NULL"))  # the input does plant null payloads
 
 
+def test_clean_batches_run_one_job_and_commit_empty_dead_letter_entries(
+    spark, tmp_path, input_dir, template
+):
+    """A micro-batch with no dead rows runs only the main write job: the
+    dead-letter leg commits a zero-row ledger entry without a write, and its
+    read side still returns the typed empty result an empty write gives."""
+    from pyspark.sql.types import IntegerType, StringType
+
+    assert spark.read.parquet(input_dir).filter("text IS NULL").count() == 0
+    errs = str(tmp_path / "errs_clean")
+    job = jobs.StreamingDeidJob(
+        spark, template, input_dir, str(tmp_path / "out_clean"), str(tmp_path / "ckpt_clean"),
+        max_files_per_trigger=2, error_output_dir=errs,
+    )
+    q = job.start()
+    assert q.awaitTermination(600)
+
+    ids = job.sink().committed_ids()
+    assert len(ids) >= 2  # several micro-batches
+    group_jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(group_jobs) == len(ids)  # one Spark job per micro-batch
+    data = os.path.join(errs, "data")
+    assert not os.path.isdir(data) or not any(f.startswith("batch_id=") for f in os.listdir(data))
+    entries = job.error_sink().lineage()
+    assert [e["batch_id"] for e in entries] == ids
+    assert all(e["metrics"]["n_rows"] == 0 for e in entries)
+    main = job.sink().read_committed(spark)
+    err = job.error_sink().read_committed(spark)
+    assert err.count() == 0
+    want = [(f.name, f.dataType) for f in main.schema if f.name != "batch_id"]
+    want += [("error_message", StringType()), ("batch_id", IntegerType())]
+    assert [(f.name, f.dataType) for f in err.schema] == want
+
+
+def test_dead_letter_write_failure_after_main_commit_then_restart_exactly_once(
+    spark, tmp_path, input_dir, template
+):
+    """The dead-letter leg's write job fails on a batch with dead rows after
+    the main leg has committed it; a plain job restarted on the same
+    checkpoint replays the batch and holds each main and each dead-letter
+    row once."""
+    from pyspark.errors import StreamingQueryException
+
+    from dlp_dataflow_deidentification_spark.streaming.sink import IdempotentBatchSink
+
+    src = spark.read.parquet(input_dir).withColumn(
+        "text", F.when(F.col("turn_idx") % 11 == 0, F.lit(None)).otherwise(F.col("text"))
+    )
+    in_dir = str(tmp_path / "in_null_w")
+    src.write.parquet(in_dir)
+    out, errs, ckpt = (str(tmp_path / d) for d in ("out_w", "errs_w", "ckpt_w"))
+
+    class FailingWriteSink(IdempotentBatchSink):
+        def __call__(self, batch_df, batch_id):
+            fail = F.raise_error(F.lit("injected dead-letter write failure"))
+            poisoned = batch_df.withColumn(
+                "error_message", F.when(F.col("turn_idx") >= 0, fail).otherwise(F.col("error_message"))
+            )
+            super().__call__(poisoned, batch_id)
+
+    class FailingJob(jobs.StreamingDeidJob):
+        def error_sink(self):
+            return FailingWriteSink(self.error_output_dir)
+
+    q = FailingJob(spark, template, in_dir, out, ckpt, error_output_dir=errs).start()
+    with pytest.raises(StreamingQueryException, match="injected dead-letter write failure"):
+        q.awaitTermination(600)
+
+    job = jobs.StreamingDeidJob(spark, template, in_dir, out, ckpt, error_output_dir=errs)
+    assert job.sink().committed_ids() == [0]  # the main leg committed first
+    assert job.error_sink().committed_ids() == []
+    assert job.run_to_completion()
+
+    def keys(df):
+        return sorted(tuple(r) for r in df.select("conv_id", "turn_idx", "ts").collect())
+
+    assert keys(job.sink().read_committed(spark)) == keys(src.filter("text IS NOT NULL"))
+    assert keys(job.error_sink().read_committed(spark)) == keys(src.filter("text IS NULL"))
+    assert keys(src.filter("text IS NULL"))  # the input does plant null payloads
+
+
 def test_streaming_reid_strips_template_surrogate_envelope(spark, tmp_path, input_dir):
     """Tokens minted by a template whose cryptoDeterministicConfig carries a
     surrogateInfoType are written as 'NAME(len):token'; the streaming reid
