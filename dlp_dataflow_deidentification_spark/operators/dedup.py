@@ -3,40 +3,36 @@
 Beyond the reference's scope (its only dedup is the keep-one header combiner,
 common/ResolveDuplicatesCombineFn.java:21-43); these are the first-class
 corpus-dedup operators a 100 TB text pipeline needs. Hot paths are native
-Spark expressions (higher-order array functions, xxhash64, bit ops); the one
-deliberate exception is MinHash, which shingles, hashes, signs and bands in
-ONE Arrow-vectorized numpy stage (``_minhash_stage``; guide §4.2 — the
-num_hashes×|shingles| min-fold has no non-interpreted JVM form).
+Spark expressions (higher-order array functions, xxhash64, bit ops) with two
+Arrow-vectorized numpy exceptions (guide §4.2; CIDR'22: one vectorized pass
+beats an operator chain): MinHash shingles, hashes, signs and bands in ONE
+stage (``_minhash_stage`` — the num_hashes×|shingles| min-fold has no
+non-interpreted JVM form), and every bucketing operator enumerates its
+candidate pairs in ONE pass (``_bucket_pairs``).
 
-Why MinHash shingles in Python but ``ngram_jaccard`` in the JVM: the
-signature fold already costs MinHash one Python boundary crossing, and a
-Python UDF's cost is mostly that crossing (CIDR'22), so tokenizing,
-shingle hashing and band keys ride along in the same stage at little cost,
-while their JVM forms are expensive here — the first ``F.lower`` in a JVM
-builds ICU's title-case table (1.2–1.7 s once per JVM), the higher-order
-shingler is interpreted, and 48 band-key expressions cost ~2.7k py4j calls
-to build plus their code generation. ``ngram_jaccard`` has no Python stage
-to fuse into: a new one for its shingles measured slower warm than the JVM
-``shingle_df``, which it keeps. The two shinglers share no code; the tests
-pin the Arrow stage bit-identical to ``shingle_df``.
+MinHash shingles in Python because its signature fold already pays the
+Python crossing, and the JVM forms are dear here: the first ``F.lower`` in a
+JVM builds ICU's title-case table (1.2–1.7 s), the higher-order shingler is
+interpreted, and 48 band-key expressions cost ~2.7k py4j calls plus their
+code generation. ``ngram_jaccard`` keeps the JVM ``shingle_df``: an Arrow
+shingler measured slower warm there. The tests pin the two bit-identical.
 
 Scale notes (100 TB):
   * exact_dedup     — one hash-aggregate shuffle on a 128-bit md5 digest of
                       the normalized text, computed map-side: shuffle volume
                       is 16 bytes + id per row, NOT the corpus text.
+  * candidate pairs — every bucketing operator shuffles ONLY (bucket, id)
+                      rows, once, and enumerates pairs in bounded slices;
+                      the values to verify (shingle sets, fingerprints,
+                      vectors) are re-attached to the distinct pairs.
   * minhash_dedup   — shingle→signature→band keys is one narrow Arrow stage
-                      (no shuffle); banding multiplies rows by n_bands
-                      (small constant); candidate generation buckets
-                      ONLY (id, band_key) rows, and the shingle sets are
-                      re-attached to the (small) candidate set for
-                      exact-Jaccard verification.
-  * ngram_jaccard   — inverted-index self-join with a document-frequency cap
-                      on shingles (a boilerplate shingle shared by 1e5 docs
-                      would otherwise create a 1e10-row bucket); exact
-                      Jaccard is computed on the FULL shingle sets of the
-                      surviving candidate pairs.
+                      (no shuffle); banding multiplies rows by n_bands.
+  * ngram_jaccard   — inverted index with a document-frequency cap on
+                      shingles (a boilerplate shingle shared by 1e5 docs
+                      would otherwise create a 1e10-pair bucket); exact
+                      Jaccard on the FULL shingle sets of the candidates.
   * simhash         — one 64-bit fingerprint per doc, candidates via
-                      pigeonhole chunk-match, verify with bit_count(xor).
+                      pigeonhole block keys, verify with bit_count(xor).
 
 Callers hand in inputs already spread to about ``defaultParallelism``
 partitions (the driver entry's ``_spread``); the operators never repartition
@@ -53,6 +49,7 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from ..functions import xxhash64
 
 _PRIME = 2147483647  # 2^31 - 1, Mersenne prime for affine minhash perms
+_PAIR_SLICE = 1 << 20  # most pairs per Arrow batch ``_bucket_pairs`` yields
 
 
 # ---------------------------------------------------------------------------
@@ -243,46 +240,63 @@ def _minhash_stage(
     )
 
 
+def _bucket_pairs(batches, max_bucket: "int | None"):
+    """One partition's (bucket, id) Arrow batches → (id, rid) batches of at
+    most ``_PAIR_SLICE`` rows: every ``(ids[i], ids[j])``, ``j > i``, of each
+    bucket's ``array_sort``-ordered ids (strings in byte order). A bucket of
+    n rows counts when 2 <= n <= ``max_bucket``; n includes null-id rows,
+    which never pair; a null key is no bucket; a repeated id self-pairs."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    batches = list(batches)
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    t = t.filter(pc.is_valid(t["bucket"]))
+    # null ids sort last, so a bucket's pairable ids lead its run
+    t = t.sort_by([("bucket", "ascending"), ("id", "ascending")]).combine_chunks()
+    if t.num_rows < 2:
+        return
+    bucket, ids = t["bucket"], t["id"].chunk(0)
+    new = pc.not_equal(bucket[1:], bucket[:-1]).to_numpy(zero_copy_only=False)
+    start = np.flatnonzero(np.concatenate([[True], new]))
+    valid = ids.is_valid().to_numpy(zero_copy_only=False)
+    m = np.add.reduceat(valid.astype(np.int64), start)
+    keep = m >= 2
+    if max_bucket is not None:
+        keep &= np.diff(start, append=t.num_rows) <= max_bucket
+    start, m = start[keep], m[keep] - 1
+    # a bucket's i-th id anchors its m - i later ids; flat pair k belongs
+    # to the first anchor whose running pair count passes k
+    local = np.arange(m.sum()) - np.repeat(np.cumsum(m) - m, m)
+    anchor = np.repeat(start, m) + local
+    tails = np.repeat(m, m) - local
+    ends = np.cumsum(tails)
+    total = int(ends[-1]) if ends.size else 0
+    for k0 in range(0, total, _PAIR_SLICE):
+        k = np.arange(k0, min(k0 + _PAIR_SLICE, total))
+        a = np.searchsorted(ends, k, side="right")
+        rid = anchor[a] + 1 + k - (ends[a] - tails[a])
+        yield pa.record_batch([ids.take(anchor[a]), ids.take(rid)], ["id", "rid"])
+
+
 def _pairs_from_buckets(
     member_df: DataFrame, bucket_col: str, max_bucket: "int | None"
 ) -> DataFrame:
-    """(id, bucket) membership rows → distinct candidate pairs (id < rid)
-    within each bucket, buckets capped at ``max_bucket`` members
-    (``None`` = uncapped: every co-bucketed pair is a candidate).
-
-    Two-stage explode keeps per-row memory O(bucket), not O(bucket²): a
-    single flatten-of-all-combinations materializes C(n,2) structs as ONE
-    array before its explode — a 7.7k-member bucket is a ~240 MB humongous
-    allocation per task (measured OOM at 48 GB heap on a hot-bucket corpus).
-    Here each (anchor, tail-slice) row carries at most one bucket's ids.
-
-    Round 6: the bucket aggregation is two-phase — a codegen'd COUNT
-    aggregate finds the 2..max_bucket keys first, then a broadcast
-    semi-join restricts the (non-codegen ObjectHashAggregate) collect_list
-    to those buckets. Most buckets are singletons (unique band keys /
-    rare shingles), so the heavyweight aggregate runs over a fraction of
-    the membership rows (measured 1.5x on the sf1.0 band table,
-    pair set identical). ``member_df`` is consumed twice and persisted
-    here (the established within-operator pattern; for the LSH callers it
-    also spares recomputing the bucketing expressions for the second
-    pass)."""
-    member_df = member_df.persist()
-    n = F.col("count")
-    keep = n >= 2
-    if max_bucket is not None:
-        keep = keep & (n <= max_bucket)
-    hot_keys = member_df.groupBy(bucket_col).count().filter(keep).select(bucket_col)
-    buckets = (
-        member_df.join(F.broadcast(hot_keys), bucket_col)
-        .groupBy(bucket_col)
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-    )
-    anchored = buckets.select(F.col("ids"), F.posexplode("ids").alias("i", "id"))
+    """(id, bucket) membership rows → distinct candidate pairs (id <= rid)
+    within each bucket of 2..``max_bucket`` rows (``None``: uncapped): one
+    shuffle on the bucket key, then ONE ``mapInArrow`` pass (``_bucket_pairs``).
+    A task holds its partition's rows plus one ``_PAIR_SLICE`` of pairs, so
+    a hot uncapped bucket streams out in bounded batches (a 7.7k-member
+    bucket's pairs built as one array once OOMed a 48 GB heap)."""
+    t = member_df.schema["id"].dataType
+    schema = StructType([StructField("id", t), StructField("rid", t)])
     return (
-        anchored.select(
-            "id",
-            F.explode(F.slice("ids", F.col("i") + F.lit(2), F.size("ids"))).alias("rid"),
-        )
+        member_df.select(F.col(bucket_col).alias("bucket"), "id")
+        .repartition("bucket")
+        .mapInArrow(lambda batches: _bucket_pairs(batches, max_bucket), schema)
         .dropDuplicates(["id", "rid"])
     )
 
@@ -339,17 +353,13 @@ def minhash_dedup_pairs(
     above. Output: id_a < id_b, jaccard (double).
 
     One Arrow stage (``_minhash_stage``) emits each doc's shingle set and
-    band keys; its output feeds BOTH candidate generation and the
-    verification join, so it is cached once (persist — lineage kept, so an
-    executor loss recomputes the lost blocks instead of failing the job)
-    rather than recomputed per consumer — at 100 TB this is the standard
-    materialize-the-signature-table step of a dedup pipeline. Candidates
-    are the pairs sharing ≥1 band key, each doc id crossing the wire once
-    per band; buckets larger than 1000 members are dropped — a degenerate
-    band key (e.g. the signature of boilerplate) would otherwise create an
-    O(k²) pair bucket; real near-dup buckets are tiny. Hand in ``df``
-    already spread to about ``defaultParallelism`` partitions: the stage
-    runs at the input's partitioning."""
+    band keys; it feeds BOTH candidate generation and the verification
+    join, so it is persisted once (the materialized signature table of a
+    dedup pipeline; lineage kept, so a lost block is recomputed).
+    Candidates are the pairs sharing ≥1 band key; buckets over 1000
+    members are dropped (a degenerate band key, e.g. boilerplate's, would
+    make an O(k²) pair bucket; real near-dup buckets are tiny). Hand in
+    ``df`` already spread to about ``defaultParallelism`` partitions."""
     sh = _minhash_stage(df, text_col, id_col, shingle_n, num_hashes, bands).persist()
     banded = sh.select("id", F.explode("bands").alias("band_key"))
     cands = _pairs_from_buckets(banded, "band_key", 1000)
@@ -367,13 +377,12 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard near-dup pairs via inverted-index candidates.
 
     Shingles with document frequency > ``max_df`` are excluded from the
-    inverted index (a shingle shared by k docs makes a k^2-row bucket; hot
-    boilerplate shingles carry ~no Jaccard signal) — candidates are pairs
-    sharing ≥1 *indexable* shingle; Jaccard is then computed EXACTLY on the
-    full shingle sets of the candidates (materialized once, see
-    minhash_dedup_pairs). Output: id_a < id_b, jaccard. Hand in ``df``
-    already spread to about ``defaultParallelism`` partitions: shingling
-    runs at the input's partitioning."""
+    inverted index (a shingle shared by k docs makes a k²-pair bucket; hot
+    boilerplate shingles carry ~no Jaccard signal): candidates share ≥1
+    *indexable* shingle, and Jaccard is EXACT over their full shingle sets
+    (persisted once, as in minhash_dedup_pairs). Output: id_a < id_b,
+    jaccard. Hand in ``df`` already spread to about ``defaultParallelism``
+    partitions."""
     sh = shingle_df(df, text_col, id_col, shingle_n).persist()
     inv = sh.select("id", F.explode("sh").alias("g"))
     # df cap ≡ bucket-size cap: a shingle's inverted-index bucket has one
@@ -464,24 +473,17 @@ def simhash_pairs(
     and each doc emits one key per C(n_blocks, n_blocks - max_hamming)
     combination of (n_blocks - d) blocks. Pigeonhole: d flipped bits hit
     ≤ d blocks, so ≥ n_blocks - d blocks agree and at least one combination
-    key matches — recall stays exact. The point vs the minimal d+1-chunk
-    split (16-bit keys at 64 bits, 15-bit in portable-60 mode): combination
-    keys carry ~(n_blocks-d)/n_blocks of the fingerprint (~32/30 bits at
-    d=3), so RANDOM collisions — which grow as n²/2^key_bits and made the
-    minimal split super-linear beyond ~500k docs — shrink by ~2^16, at the
-    price of 20 membership rows per doc instead of 4. That is the right trade at
-    100 TB: membership is linear, collisions are quadratic.
+    key matches — recall stays exact. Against the minimal d+1-chunk split
+    (16-bit keys), combination keys carry ~32 bits at d=3, so RANDOM
+    collisions (n²/2^key_bits: super-linear beyond ~500k docs) shrink by
+    ~2^16 for 20 membership rows per doc instead of 4 — membership is
+    linear, collisions are quadratic.
 
-    Candidates use the same ids-only bucket machinery as the minhash/ngram
-    family (``_pairs_from_buckets``): membership rows carry (id, 8-byte
-    key), distinct pairs are enumerated inside each bucket, and the two
-    fingerprints are re-attached ONCE per surviving pair (the earlier chunk
-    self-join shipped both fingerprints through a duplicated join —
-    measured 783 s on a 500k-doc stress corpus).
-
+    Candidates come from ``_pairs_from_buckets`` over (id, 8-byte key)
+    rows; both fingerprints are re-attached ONCE per distinct pair (a chunk
+    self-join that shipped them took 783 s on a 500k-doc stress corpus).
     Buckets are uncapped: a pair with exactly n_blocks - d agreeing blocks
-    matches exactly ONE combination key, and dropping that bucket would
-    lose the pair — unlike the minhash df-cap, there is no second chance."""
+    matches ONE combination key, so a dropped bucket would lose it."""
     from itertools import combinations
 
     n_bits = 60 if portable else 64
@@ -494,11 +496,9 @@ def simhash_pairs(
     base = simhash_df(df, text_col, id_col, portable).persist()
 
     def _combo_key(ci: int, combo: "tuple[int, ...]"):
-        # one 8-byte key per combination: xxhash64 of (combination index,
-        # block values). Equal block tuples always hash equal → recall is
-        # unaffected; a 2^-64 hash collision only adds a false CANDIDATE,
-        # which the exact hamming verify discards. Hashing (vs arithmetic
-        # packing) also sidesteps ANSI-mode long overflow for wide combos.
+        # xxhash64(combination index, block values): equal tuples hash
+        # equal (recall intact); a 2^-64 collision only adds a candidate
+        # the hamming verify drops; unlike packing, it cannot overflow
         vals = [F.lit(ci)]
         for b in combo:
             shift, w = layout[b]

@@ -589,9 +589,10 @@ def embedding_dedup_pairs(
     Hamming-≤2 candidate pairs than 16 on a 2k-vector corpus, and every
     false candidate pays an exact-cosine verification).
     Scale shape: membership rows are ids-only (id, 8-byte bucket
-    key); candidate pairs dedup on (id, rid) BEFORE the double-vectors are
-    re-attached — one vector-carrying join per side, never through the
-    bucket explosion. Buckets larger than ``max_bucket`` are dropped (a
+    key), paired by the dedup family's one-pass bucket kernel
+    (``dedup._pairs_from_buckets``); candidate pairs dedup on (id, rid)
+    BEFORE the double-vectors are re-attached — one vector-carrying join
+    per side, never through the bucket enumeration. Buckets larger than ``max_bucket`` are dropped (a
     degenerate hub bucket would create an O(k²) pair set; raise the cap or
     add planes if the corpus is dense)."""
     from .dedup import _pairs_from_buckets, _with_pair_values

@@ -1,4 +1,8 @@
 """Dedup operator tests with planted duplicates (ground truth known)."""
+import random
+
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -189,6 +193,125 @@ def test_dedup_plans_have_no_python(spark, docs):
     ]:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Python" not in plan, plan[:2000]
+
+
+def _old_pairs_from_buckets(member_df, bucket_col, max_bucket):
+    """The count → broadcast semi-join → ``collect_list``/``array_sort`` →
+    posexplode/slice explode chain the Arrow bucket kernel replaced, kept
+    as the Spark-side reference of its semantics."""
+    n = F.col("count")
+    keep = n >= 2
+    if max_bucket is not None:
+        keep = keep & (n <= max_bucket)
+    hot = member_df.groupBy(bucket_col).count().filter(keep).select(bucket_col)
+    buckets = (
+        member_df.join(F.broadcast(hot), bucket_col)
+        .groupBy(bucket_col)
+        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+    )
+    anchored = buckets.select("ids", F.posexplode("ids").alias("i", "id"))
+    return anchored.select(
+        "id", F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("rid")
+    ).dropDuplicates(["id", "rid"])
+
+
+def _ref_bucket_pairs(rows, max_bucket):
+    """Plain-Python bucket semantics: per non-null bucket of 2..max_bucket
+    rows (null-id rows counted), every j > i pair of its non-null ids in
+    ascending (string: UTF-8 byte) order."""
+    buckets = {}
+    for b, i in rows:
+        if b is not None:
+            buckets.setdefault(b, []).append(i)
+    key = lambda i: i.encode() if isinstance(i, str) else i  # noqa: E731
+    out = set()
+    for members in buckets.values():
+        if len(members) < 2 or (max_bucket is not None and len(members) > max_bucket):
+            continue
+        ids = sorted((i for i in members if i is not None), key=key)
+        out |= {(lo, hi) for x, lo in enumerate(ids) for hi in ids[x + 1:]}
+    return out
+
+
+def _random_membership(rng, pool):
+    """(bucket, id) rows with repeated rows, null ids and null buckets."""
+    n_buckets = rng.randrange(1, 20)
+    return [
+        (
+            rng.choice([None] + list(range(-3, n_buckets))),
+            rng.choice(pool + [None]),
+        )
+        for _ in range(rng.randrange(0, 200))
+    ]
+
+
+def _kernel_pairs(rows, id_type, max_bucket, chunk):
+    t = pa.table(
+        {
+            "bucket": pa.array([b for b, _ in rows], pa.int64()),
+            "id": pa.array([i for _, i in rows], id_type),
+        }
+    )
+    got = []
+    for b in dedup._bucket_pairs(t.to_batches(max_chunksize=chunk), max_bucket):
+        assert b.num_rows <= dedup._PAIR_SLICE
+        got += zip(b["id"].to_pylist(), b["rid"].to_pylist())
+    return got
+
+
+@pytest.mark.parametrize(
+    "id_type,pool",
+    [
+        (pa.int64(), [-(2**40), -3, 0, 5, 9, 17, 2**40]),
+        (pa.string(), ["", "Z", "a", "ab", "z", "é", "😀", "\u00a0"]),
+    ],
+)
+def test_bucket_kernel_matches_reference_semantics(id_type, pool):
+    """The Arrow bucket kernel's distinct pair set equals the plain-Python
+    reference on random memberships: the cap counts null-id rows, null ids
+    never pair, a null bucket is no bucket, a repeated id pairs with
+    itself, ids order as ``array_sort`` does, and a partition may arrive
+    in several batches."""
+    rng = random.Random(18)
+    for _ in range(40):
+        rows = _random_membership(rng, pool)
+        for max_bucket in (None, 2, 1000):
+            got = _kernel_pairs(rows, id_type, max_bucket, rng.randrange(1, 64))
+            assert set(got) == _ref_bucket_pairs(rows, max_bucket), (rows, max_bucket)
+
+
+def test_pairs_from_buckets_equals_old_chain(spark):
+    """Through Spark, ``_pairs_from_buckets`` returns the old expression
+    chain's rows, and leaves no persisted RDD behind."""
+    rng = random.Random(5)
+    pool = ["Z", "a", "z", "é", "😀", "ab", None]
+    rows = [(g, rng.choice(pool)) for g in range(40) for _ in range(g % 7)]
+    rows += rows[:12] + [(None, "a"), (None, "z")]  # repeated rows, null bucket
+    rows += [(99, f"h{i:02d}") for i in range(30)]  # one bucket over the cap
+    mem = spark.createDataFrame(rows, "g long, id string").repartition(3)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for max_bucket in (None, 4):
+        got = dedup._pairs_from_buckets(mem, "g", max_bucket).collect()
+        want = _old_pairs_from_buckets(mem, "g", max_bucket).collect()
+        assert len(got) == len(set(got))
+        assert set(map(tuple, got)) == set(map(tuple, want)) and want
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_bucket_kernel_streams_a_hot_bucket_in_bounded_slices():
+    """An uncapped 3,000-member bucket yields exactly C(n, 2) distinct
+    ordered pairs, in batches of at most ``_PAIR_SLICE`` rows — the pair
+    list of a hot SimHash bucket is never one O(n²) array."""
+    n = 3000
+    ids = np.random.default_rng(0).permutation(n)
+    t = pa.table({"bucket": pa.array(np.full(n, 7)), "id": pa.array(ids)})
+    batches = list(dedup._bucket_pairs(t.to_batches(max_chunksize=500), None))
+    assert len(batches) > 1
+    assert max(b.num_rows for b in batches) <= dedup._PAIR_SLICE
+    lo = np.concatenate([b["id"].to_numpy() for b in batches])
+    hi = np.concatenate([b["rid"].to_numpy() for b in batches])
+    assert lo.size == n * (n - 1) // 2
+    assert (lo < hi).all() and np.unique(lo * n + hi).size == lo.size
 
 
 def test_exact_dedup_shuffles_digest_not_text(spark, docs):
